@@ -77,6 +77,15 @@ object Bench {
     * stamping round artifacts). */
   private[graft] val DriverSfDir = "/root/testdata/sf0.1"
 
+  /** Drops every memo cache a query run can leave behind (TextOps'
+    * frame memos, Tables' cached frames, the catalog cache), so the
+    * next timed run pays its own builds. graft.tools.Profile shares it. */
+  private[graft] def resetCaches(spark: SparkSession): Unit = {
+    graft.queries.TextOps.resetCaches()
+    graft.engine.Tables.clearCache()
+    spark.catalog.clearCache()
+  }
+
   /** Sums task metrics between [[reset]] calls (single-JVM local mode:
     * one bus, benchmark runs queries strictly sequentially). */
   private final class MetricsListener extends SparkListener {
@@ -108,6 +117,14 @@ object Bench {
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
+
+  /** CPU time of this whole JVM (all threads), ns; -1 if the platform
+    * does not report it. */
+  private def processCpuNs(): Long =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
+      case _ => -1L
+    }
 
   /** Whole-machine CPU jiffies (user, system, idle, steal) from
     * /proc/stat; per-query DELTAS of these separate the three remaining
@@ -264,14 +281,18 @@ object Bench {
     shuffle: Long, peakMem: Long, cpuSec: Double, gcSec: Double, load: Double,
     userPct: Double, sysPct: Double, stealPct: Double,
     codeCache: Double, metaMb: Double, cpuBase: Double,
-    wallBase: Double = -1.0) {
-    /** User-space machine CPU NOT attributable to this query's own
-      * tasks during its window (own share ≈ cpu_sec / (wall · cores)).
-      * Driver-thread CPU is uncounted, so this over-attributes a few
-      * percent to "other" — fine for a flag thresholded at 25. */
-    def otherUserPct(cores: Int): Double =
+    wallBase: Double = -1.0, procCpuSec: Double = -1.0) {
+    /** User-space machine CPU NOT attributable to this JVM during the
+      * query's window (own share ≈ own cpu-s / (wall · cores)). Own CPU
+      * is the process's CPU delta — executor tasks plus the driver, JIT
+      * and GC threads, which on a 4-core host alone read 39-80% "other"
+      * when only executor CPU was subtracted. Falls back to executor CPU
+      * when the process counter is unknown (-1). */
+    def otherUserPct(cores: Int): Double = {
+      val own = if (procCpuSec >= 0) procCpuSec else cpuSec
       if (userPct < 0 || secs <= 0) -1.0
-      else math.max(0.0, userPct - 100.0 * cpuSec / (secs * cores))
+      else math.max(0.0, userPct - 100.0 * own / (secs * cores))
+    }
     /** Environment-contention witness: true when the machine was doing
       * substantial work that was not this query — foreign user-space
       * load, kernel churn (page reclaim / fs), hypervisor steal, or a
@@ -367,11 +388,7 @@ object Bench {
     val spark = GraftSession.get()
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
-    def reset(): Unit = {
-      graft.queries.TextOps.resetCaches()
-      graft.engine.Tables.clearCache()
-      spark.catalog.clearCache()
-    }
+    def reset(): Unit = resetCaches(spark)
     // Warm the JVM once (classloading, codegen compiler, shuffle machinery)
     // so per-query numbers measure the queries, not first-touch costs.
     graft.engine.Tables.names.foreach(n =>
@@ -420,17 +437,20 @@ object Bench {
       org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
       listener.reset()
       val j0 = cpuJiffies()
+      val p0 = processCpuNs()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
         val (userPct, sysPct, stealPct) = cpuPct(j0, cpuJiffies())
+        val p1 = processCpuNs()
         org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
         Some(Timed(name, secs, listener.spill.get(), listener.shuffle.get(),
           listener.peakMem.get(), listener.cpuNs.get() / 1e9,
           listener.gcMs.get() / 1e3, loadAvg(), userPct, sysPct, stealPct,
           codeCachePct(), metaspaceMb(), cpuBaseline.getOrElse(name, -1.0),
-          wallBaseline.getOrElse(name, -1.0)))
+          wallBaseline.getOrElse(name, -1.0),
+          if (p0 < 0 || p1 < 0) -1.0 else (p1 - p0) / 1e9))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         failures += name

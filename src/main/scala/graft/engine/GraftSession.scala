@@ -43,7 +43,8 @@ object GraftSession {
       // one file+buffer+codec+checksum stream PER reduce partition —
       // 32×32 = 1024 stream setups per shuffle here, measured at ~5
       // executor-CPU-s and ~0.2 s wall for a 15k-row groupBy (pure
-      // fixed cost, data-independent; ProbeShuffleConst). Forcing the
+      // fixed cost, data-independent; ProbeShuffleConst, since removed).
+      // Forcing the
       // sort-based writer (one sorted file + index per map task) cuts
       // that to ~0.5 CPU-s. This also IS the 100 TB posture: real
       // clusters run >200-partition shuffles on the sort path anyway,

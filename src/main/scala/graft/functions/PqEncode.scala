@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, FloatType, Int
   * (vnᵢ = rndAway(vᵢ·1e6), the q61 determinism argument — the product
   * of a 24-bit-mantissa float and 1e6 is exact in double).
   *
-  * Replaces `VectorOps.encodePqUdf` (round 14, VERDICT r13 item 7 —
+  * Replaces the `encodePqUdf` UDF, now the test-scope bitwise reference
+  * `graft.PqReferenceUdfs.encodePqUdf` (round 14, VERDICT r13 item 7 —
   * the last interpreted per-row closure in the ANN encode stage): the
   * UDF form paid a CatalystTypeConverters round trip per corpus row
   * (ArrayData → boxed Seq[Float] in, Seq[Byte] → ArrayData out) around
@@ -83,7 +84,8 @@ object PqEncode {
     * (held in the codegen references array), but a GenericArrayData
     * literal UNBOXES on every getLong — m·ksub·dsub ≈ 16k unboxings per
     * row, measured SLOWER than the captured-primitive-array UDF this
-    * expression replaces (ProbePqEncodeAB: 0.162 vs 0.089 cpu-s).
+    * expression replaces (ProbePqEncodeAB, since removed: 0.162 vs
+    * 0.089 cpu-s).
     * Materialize the primitive long[] once per (thread, literal) and
     * re-use it by REFERENCE identity — hit rate ~100% because codegen
     * passes the same object every row. */

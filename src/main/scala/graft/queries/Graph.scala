@@ -44,8 +44,8 @@ object Graph {
     * adjacency.
     *
     * Driver budget at the ceiling, MEASURED (round 11,
-    * tools/ProbeCsrPack 128 4 — a synthetic 128M-edge / 4M-node graph,
-    * the probe's documented gate-ceiling invocation; the 8 B-per-
+    * ProbeCsrPack 128 4, since removed — a synthetic 128M-edge /
+    * 4M-node graph, the probe's documented gate-ceiling invocation; the 8 B-per-
     * partition-distinct-src term scales with node count, so the node
     * figure matters):
     * the pack collects primitive-packed per-partition blocks —
@@ -293,7 +293,7 @@ object Graph {
     * forces both sides and equates them bitwise. */
   private[graft] val NodeBroadcastLimit = 4000000L
 
-  /** Round-9 gate measurements ([[graft.tools.ProbeGraphGate]],
+  /** Round-9 gate measurements (ProbeGraphGate, since removed;
     * interleaved A/B/A/B, edge frame prewarmed, per-generation memos
     * evicted between runs) split by query AND by methodology:
     * steady-state (one hot JVM, repeated runs) has the mail-SHUFFLE
@@ -439,7 +439,7 @@ object Graph {
   /** Primitive-packed collect of a two-column (Int, Long) frame — ONE
     * (indexes, values) block per partition instead of n boxed Rows.
     * The packCsr lesson applied to the per-round kernel merges
-    * (VERDICT r11 item 4, measured by tools/ProbeKernelMerge at the
+    * (VERDICT r11 item 4, measured by ProbeKernelMerge, since removed, at the
     * 4M-node NodeBroadcastLimit ceiling): the boxed Row collect cost
     * ~505 B/node of transient driver heap (~2.0 GB per round; the
     * typed Tuple2 collect was worse at ~683 B/node) against the
@@ -882,10 +882,11 @@ object Graph {
     * sides) ≡ brute force. Past the gate the intersect dataflow is
     * unchanged (its shuffle-hash shape is the 100 TB path). */
   /** Distributed-group-then-pack of an oriented edge RDD into a driver
-    * CSR (indptr, indices over dense node indexes). Exposed separately
-    * from [[trianglesKernel]] so tools/ProbeCsrPack can measure the
-    * REAL pack path's driver footprint at synthetic near-gate sizes —
-    * the measurement [[TriangleCsrEdgeLimit]]'s budget is justified by. */
+    * CSR (indptr, indices over dense node indexes). Kept separate from
+    * [[trianglesKernel]] so the REAL pack path's driver footprint can be
+    * measured alone at synthetic near-gate sizes, as round 11's
+    * ProbeCsrPack (since removed) did — the measurement
+    * [[TriangleCsrEdgeLimit]]'s budget is justified by. */
   private[graft] def packCsr(edges: org.apache.spark.rdd.RDD[(Long, Long)],
       bIds: org.apache.spark.broadcast.Broadcast[Array[Long]], n: Int)
       : (Array[Int], Array[Int]) = {
@@ -954,7 +955,7 @@ object Graph {
     // array headers); the packed blocks are 4 B/edge + 8 B per
     // (partition-local distinct src), measured 10.0 B/edge total
     // transient incl. the final CSR at the synthetic gate ceiling
-    // (tools/ProbeCsrPack — the number the 128M-edge gate's budget is
+    // (ProbeCsrPack, since removed — the number the 128M-edge gate's budget is
     // now justified by: 10.0 B/edge ≈ 1.28 GB driver at the ceiling).
     val (indptr, indices) = packCsr(orientOf(e).as[(Long, Long)].rdd, bIds, n)
     val bCsr = track(s.sparkContext.broadcast((indptr, indices)))
@@ -1150,10 +1151,11 @@ object Graph {
     * the output plan ends in-cluster (the [[kernelRounds]] discipline).
     * Past the gate the callers keep their measured mail-shuffle
     * dataflows ([[ssspGated]]/[[labelPropGated]], round-9 ProbeGraphGate
-    * evidence) — the kernel replaces only the below-gate regime, where
-    * the round-10 profile showed codec and scheduling constants, not
-    * arithmetic, dominating node-sized rounds. GraphSpec equates the
-    * kernel against both Catalyst dataflows and the sequential replays. */
+    * evidence; that probe is since removed) — the kernel replaces only
+    * the below-gate regime, where the round-10 profile showed codec and
+    * scheduling constants, not arithmetic, dominating node-sized rounds.
+    * GraphSpec equates the kernel against both Catalyst dataflows and the
+    * sequential replays. */
   private[graft] def minPropKernel(s: SparkSession, dir: String,
       edges: DataFrame, nEdges: Long, ids: Array[Long],
       init: Int => Long, inc: Int): DataFrame = {
@@ -1242,7 +1244,7 @@ object Graph {
       // KERNEL over the object-RDD adjacency (see [[minPropKernel]]);
       // past it, the round-9 mail-shuffle default — the measured winner
       // for the min-propagation rounds among the CATALYST dataflows in
-      // both methodologies (ProbeGraphGate steady-state 3.4-3.7 s vs
+      // both methodologies (ProbeGraphGate, since removed: steady-state 3.4-3.7 s vs
       // 4.6-5.0 broadcast, bench-style 3.2 vs 3.7) and the
       // 1000-executor posture (mail moves once to the persisted edge
       // partitioning instead of through a per-round driver collect)
@@ -1354,7 +1356,7 @@ object Graph {
       // KERNEL (labels propagate with increment 0; see
       // [[minPropKernel]]); past it, the round-9 mail-shuffle default —
       // winner among the Catalyst dataflows in both methodologies like
-      // q90 (ProbeGraphGate steady-state 3.8-4.2 s vs 4.9-5.4
+      // q90 (ProbeGraphGate, since removed: steady-state 3.8-4.2 s vs 4.9-5.4
       // broadcast, bench-style 3.7 vs 4.0; see the pagerankOf note)
       val edges = coPurchaseEdges(s, dir)
       val stat = graphStat("coPurchaseEdges", s, dir)

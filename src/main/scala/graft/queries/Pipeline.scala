@@ -825,7 +825,7 @@ object Pipeline {
     // Context counts come from the bigram counts themselves — c(w1,·) =
     // Σ_w2 c(w1,w2) exactly, as a window sum over the model table — so
     // the model needs ONE corpus tokenize+explode pass, not two (r13,
-    // ProbeQ67: the separate c1 pass re-ran scan+regex+explode because
+    // ProbeQ67, since removed: the separate c1 pass re-ran scan+regex+explode because
     // the null-filter asymmetry of the former c1 join blocked exchange
     // reuse; the window runs on the distinct-bigram table, which stays
     // model-sized at 100 TB while the saved pass is corpus-sized. Warm

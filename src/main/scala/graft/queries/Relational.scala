@@ -57,7 +57,7 @@ object Relational {
        |ORDER BY l_returnflag, l_linestatus""") { (s, dir) =>
     // spreadScan: the per-row decimal casts + 7-way partial aggregation
     // dominate this query (measured: scan 0.19 s, dsum agg 1.51 s serial
-    // vs 0.70 s spread at sf0.1 — ProbeDsum); on a one-split file they
+    // vs 0.70 s spread at sf0.1 — ProbeDsum, since removed); on a one-split file they
     // all run on one core. Exact decimal sums are partition-invariant,
     // so the spread cannot move a bit of the result.
     spreadScan(s, dir, "lineitem",
@@ -130,7 +130,7 @@ object Relational {
     // spreadScan REJECTED here (round 14, reverting round 13's call):
     // shipped by analogy with q02's aggregation shape but never
     // re-benched, and it regressed — driver walls 1.46 -> 2.20 s (32c)
-    // and 1.99 s (8c); ProbeQ04AB (alternating A/B, one JVM, min-of-4)
+    // and 1.99 s (8c); ProbeQ04AB (since removed; alternating A/B, one JVM, min-of-4)
     // pins it: plain wall 1.26 s / 0.32 cpu-s vs spread 1.45 s /
     // 0.77 cpu-s. Unlike q02's Expand/decimal-agg stack, the work above
     // this scan is a broadcast-hash probe whose per-row cost is too

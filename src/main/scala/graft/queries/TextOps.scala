@@ -709,7 +709,7 @@ object TextOps {
   /** Doc-count mark above which the LSH path's exact verify runs behind
     * the BucketCountSig sift instead of the raw array attach. Lossless
     * either side; re-bracketed in round 14 on WALL/CPU dominance, not
-    * just spill (ProbeLshVerifyAB, alternating A/B on the same banded
+    * just spill (ProbeLshVerifyAB, since removed; alternating A/B on the same banded
     * candidates, 64 g heap, min-of-4 warm):
     *
     *   |  docs | candidates | raw wall/cpu | sift wall/cpu | winner |
@@ -2092,7 +2092,7 @@ object TextOps {
        |       ${croundSql("coalesce(n_dup_tok, 0) * 1e0 / n")} AS dup_frac
        |FROM t LEFT JOIN cnt USING (doc_id)
        |ORDER BY doc_id""") { (s, dir) =>
-    // spreadScan examined and REJECTED here (round 13, ProbeQ73AB):
+    // spreadScan examined and REJECTED here (round 13, ProbeQ73AB, since removed):
     // unlike the q02-family numeric spreads, the exchange must move the
     // full text column, and min-of-4 CPU went 1.67 s plain -> 11.0 s
     // spread (wall 1.98 -> 4.33 s) — the exchange + 32-way partial agg

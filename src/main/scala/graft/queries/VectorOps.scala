@@ -346,7 +346,7 @@ object VectorOps {
     *
     * Salt 6 plays exactly the role the old planes' JVM seed 7 played: a
     * committed draw from the plane family. Measured across salts 0-23
-    * (tools/ProbeSalt, sf0.001, 50 probe-pairs) recall spans 0.44-0.82
+    * (ProbeSalt, since removed; sf0.001, 50 probe-pairs) recall spans 0.44-0.82
     * — the gate fixture is small enough that the draw matters — and
     * salt 6 lands at 0.80 recall / 28% max candidate touch, matching
     * the Gaussian draw the DedupSpec gate was pinned against. */
@@ -1010,10 +1010,10 @@ object VectorOps {
       .sortBy(_.getLong(0))
       .map(_.getSeq[Long](1).toArray)
     // EMPTY corpus (EmptyInputSpec): no sample → no codebook. Safe to
-    // return the empty structure because every consumer (encodePqUdf /
-    // pqLutUdf / pqRecNormUdf / adcDotUdf) dereferences the codebook
-    // only inside its per-row lambda, and an empty corpus gives those
-    // lambdas zero rows — the documented empty-case result is the empty
+    // return the empty structure because every consumer (pqLutUdf, the
+    // graft_pq_encode / graft_adc_dot expressions via pqDsub)
+    // dereferences the codebook only per row, and an empty corpus gives
+    // them zero rows — the documented empty-case result is the empty
     // top-k frame, produced lazily with no special-cased plan.
     if (sample.isEmpty) return Array.empty
     val dim = sample.head.length
@@ -1087,8 +1087,9 @@ object VectorOps {
 
   /** Per-cell squared reconstruction norms flattened to the
     * graft_adc_dot LUT layout: n2flat[j·ksub + k] = ‖cb(j)(k)‖² as an
-    * exact long (Σ cn² ≤ 64·1e14 < 2^53) — the same table pqRecNormUdf
-    * builds, reshaped so the existing ADC expression can sum it. */
+    * exact long (Σ cn² ≤ 64·1e14 < 2^53) — the same table the test-scope
+    * reference PqReferenceUdfs.pqRecNormUdf builds, reshaped so the
+    * existing ADC expression can sum it. */
   private[graft] def pqN2Flat(cb: Array[Array[Array[Long]]]): Array[Long] =
     cb.flatMap(_.map(ct => ct.map(x => x * x).sum))
 
@@ -1099,46 +1100,6 @@ object VectorOps {
     * property the UDFs had by closing over cb inside the lambda. */
   private[graft] def pqDsub(cb: Array[Array[Array[Long]]]): Int =
     if (cb.isEmpty || cb(0).isEmpty) 1 else cb(0)(0).length
-
-  /** PQ encode: vector → `m` 8-bit codes (one byte each, read back
-    * unsigned): per subspace, the L2-nearest codebook entry. A fused primitive loop for
-    * the same reason as [[assignCellUdf]] — the interpreted HOF
-    * formulation would allocate per element.
-    *
-    * r14: retained as PqEncodeSpec's REFERENCE implementation only —
-    * the hot path uses the graft_pq_encode codegen expression
-    * ([[graft.functions.PqEncode]]), which pins bitwise equality
-    * against this UDF. */
-  private[graft] def encodePqUdf(cb: Array[Array[Array[Long]]]) = udf { (v: Seq[Float]) =>
-    val m = cb.length; val dsub = cb(0)(0).length
-    // round 13: quantize ONCE per row into a primitive array — the old
-    // form re-ran rndAway(v(…)) inside the per-centroid loop (m·ksub
-    // redundant re-quantizations through boxed Seq.apply: measured
-    // ~0.5 ms/row, ~1 s of the q79 encode stage at sf0.1). Same grid
-    // values, so every distance and argmin below is bitwise unchanged.
-    val vn = new Array[Long](v.length)
-    var x = 0
-    while (x < v.length) { vn(x) = rndAway(v(x).toDouble * 1e6); x += 1 }
-    val out = new Array[Byte](m)
-    var j = 0
-    while (j < m) {
-      var best = 0; var bestD = Long.MaxValue
-      var k = 0
-      while (k < cb(j).length) {
-        val ct = cb(j)(k); var d = 0L; var i = 0
-        while (i < dsub) {
-          val diff = vn(j * dsub + i) - ct(i); d += diff * diff; i += 1
-        }
-        if (d < bestD) { bestD = d; best = k }
-        k += 1
-      }
-      out(j) = best.toByte
-      j += 1
-    }
-    // Seq[Byte], not Array[Byte]: the latter maps to BINARY, this to
-    // array<tinyint> — which element_at and the schema claim need
-    out.toIndexedSeq
-  }
 
   /** Per-probe ADC lookup table, flattened to m×ksub EXACT LONGS:
     * lut(j*ksub + k) = Σᵢ vnᵢ·cnᵢ over the 1e-6 grid (|term| ≤ 1e14,
@@ -1162,35 +1123,6 @@ object VectorOps {
       j += 1
     }
     out
-  }
-
-  /** ‖reconstruction‖ from codes alone: subspaces are an orthogonal
-    * decomposition, so ‖concat of centroids‖² = Σⱼ ‖centroidⱼ‖² — read
-    * from a precomputed m×ksub squared-norm table of EXACT longs
-    * (Σ cn² ≤ 64·1e14 < 2^53, so the final double conversion is exact
-    * and sqrt is deterministic in both engines). Grid units — a
-    * per-probe-constant scale away from the float norm, which ranking
-    * never sees.
-    *
-    * r14: retained as PqEncodeSpec's REFERENCE implementation only —
-    * the hot path computes the same value as
-    * sqrt(graft_adc_dot([[pqN2Flat]], codes, ksub)). */
-  private[graft] def pqRecNormUdf(cb: Array[Array[Array[Long]]]) = {
-    val n2 = cb.map(_.map(ct => ct.map(x => x * x).sum))
-    udf { (codes: Seq[Byte]) =>
-      var acc = 0L; var j = 0
-      while (j < codes.length) { acc += n2(j)(codes(j) & 0xff); j += 1 }
-      math.sqrt(acc.toDouble)
-    }
-  }
-
-  /** ADC approximate dot: Σⱼ lut(j*ksub + codeⱼ) — m table lookups per
-    * (probe, candidate), EXACT integer arithmetic end to end
-    * (Σ ≤ 8·8e14 = 6.4e15 < 2^53, so even the double view is exact). */
-  private[graft] def adcDotUdf(ksub: Int) = udf { (lut: Seq[Long], codes: Seq[Byte]) =>
-    var acc = 0L; var j = 0
-    while (j < codes.length) { acc += lut(j * ksub + (codes(j) & 0xff)); j += 1 }
-    acc
   }
 
   /** Q79 — product-quantization ANN (the memory-bandwidth scale path for
@@ -1239,7 +1171,7 @@ object VectorOps {
     // norm. r14: both per-corpus-row closures leave the hot path —
     // encode is the graft_pq_encode codegen expression (no boxed
     // Seq[Float]/Seq[Byte] round trip per row; PqEncodeSpec pins bitwise
-    // equality with the retained encodePqUdf), and the reconstruction
+    // equality with the test-scope reference encodePqUdf), and the reconstruction
     // norm is sqrt(graft_adc_dot(n2flat, codes)) — the norm lookup IS
     // the ADC sum over the squared-norm table, so the existing
     // expression covers it (same exact longs, sqrt on the same double).

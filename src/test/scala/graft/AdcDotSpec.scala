@@ -31,7 +31,7 @@ class AdcDotSpec extends SparkSpec {
     val df = safe.toDF("lut", "codes")
     val out = df.select(
       adcDot(col("lut"), col("codes"), ksub).as("native"),
-      graft.queries.VectorOps.adcDotUdf(ksub)(col("lut"), col("codes")).as("ref")).collect()
+      PqReferenceUdfs.adcDotUdf(ksub)(col("lut"), col("codes")).as("ref")).collect()
     out.foreach(r => assert(r.getLong(0) == r.getLong(1)))
     assert(out.nonEmpty)
   }

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - jvm_degraded: cpu_inflation > 4 AND ≥5 extra cpu-s (the JVM's
   *     self-incrimination; external load cannot inflate executor CPU)
   *   - contended: steal >5%, sys >20%, foreign-user >25%, or load
-  *     >1.5× cores (the environment's fault, not the plan's)
+  *     >1.5× cores (the environment's fault, not the plan's); foreign
+  *     user CPU is machine user CPU minus this JVM's process CPU
   *   - suspect: cpu_inflation 1.8–4× with ≥1 extra cpu-s (round-9
   *     advice: the gray band that hid q60's 2.01× blip)
   *   - cpu_phantom (round 14): listener-claimed executor CPU >2× what
@@ -69,6 +70,19 @@ class BenchWitnessSpec extends AnyFunSuite {
     // unknown (-1) witnesses never flag
     assert(!quiet().copy(userPct = -1.0, sysPct = -1.0, stealPct = -1.0,
       load = -1.0).contended(cores))
+  }
+
+  test("on 4 cores the JVM's own driver/JIT/GC CPU is not foreign load") {
+    // a sub-second statement on a 4-core host: executor tasks burned
+    // 0.5 cpu-s, the whole JVM 3.0 (driver planning, JIT, GC), and the
+    // machine's user CPU is exactly that JVM — nobody else ran
+    val own = quiet(cpuSec = 0.5, cpuBase = 0.5).copy(
+      userPct = 100.0 * 3.0 / (2.0 * 4), procCpuSec = 3.0)
+    assert(own.otherUserPct(4) == 0.0)
+    assert(!own.contended(4))
+    assert(own.retryReason(4).isEmpty)
+    // a real neighbour on top of it still flags
+    assert(own.copy(userPct = 90.0).contended(4))
   }
 
   test("retry priority: a degraded JVM outranks ambient contention") {

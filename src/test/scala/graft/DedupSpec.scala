@@ -220,7 +220,7 @@ class DedupSpec extends SparkSpec {
     val cb = VectorOps.fitPq(e, m = 8, ksub = 256, rounds = 3)
     assert(cb.length == 8 && cb.forall(_.length == 256) && cb.flatten.forall(_.length == 8),
       "codebooks must be 8 subspaces x 256 codes x 8 dims")
-    val codes = e.select(VectorOps.encodePqUdf(cb)(
+    val codes = e.select(PqReferenceUdfs.encodePqUdf(cb)(
       org.apache.spark.sql.functions.col("embedding")).as("codes"))
     assert(codes.schema("codes").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType == org.apache.spark.sql.types.ByteType,
@@ -260,9 +260,9 @@ class DedupSpec extends SparkSpec {
     val cb = VectorOps.fitPq(e, m = 8, ksub = 256, rounds = 1)
     val rows = e.filter(col("vec_id") < 30)
       .select(col("vec_id"), col("embedding"),
-        VectorOps.encodePqUdf(cb)(col("embedding")).as("codes"),
+        PqReferenceUdfs.encodePqUdf(cb)(col("embedding")).as("codes"),
         VectorOps.pqLutUdf(cb)(col("embedding")).as("lut"))
-      .withColumn("self_adc", VectorOps.adcDotUdf(256)(col("lut"), col("codes")))
+      .withColumn("self_adc", PqReferenceUdfs.adcDotUdf(256)(col("lut"), col("codes")))
       .collect()
     // ADC(probe, cand) must be EXACTLY dot(probe_grid, reconstruct(cand))
     // — the algebraic contract of the lookup table, now an EXACT LONG

@@ -36,8 +36,22 @@ class EmptyInputSpec extends SparkSpec {
 
   private lazy val dir: String = {
     val out = "/tmp/graft_empty_spec"
-    graft.tools.ProbeEmpty.ensureFixture(spark, out)
+    ensureFixture(out)
     out
+  }
+
+  /** Writes the schema-only fixture (idempotent): each table is the
+    * sf0.001 table's NORMALIZED frame (Tables.table applies the
+    * ts/date/embedding type folds) limited to 0 rows, so the empty dir
+    * exercises exactly the schemas production queries bind to. */
+  private def ensureFixture(out: String, src: String = "/root/testdata/sf0.001"): Unit = {
+    val done = new java.io.File(out, "_FIXTURE_OK")
+    if (done.isFile) return
+    graft.engine.Tables.names.foreach { n =>
+      graft.engine.Tables.table(spark, src, n).limit(0)
+        .write.mode("overwrite").parquet(s"$out/$n.parquet")
+    }
+    java.nio.file.Files.write(done.toPath, Array.empty[Byte])
   }
 
   /** query -> the exact set of columns whose NULL on empty input is the

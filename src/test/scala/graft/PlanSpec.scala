@@ -230,12 +230,13 @@ class PlanSpec extends SparkSpec {
       // narrow repartition below the one-split file gate — on this
       // fixture the whole table is one scan split, so the decimal
       // partial agg / unpivot Expand would serialize on one core
-      // (measured 1.51 s → 0.70 s at sf0.1, ProbeDsum). Past the gate
+      // (measured 1.51 s → 0.70 s at sf0.1, ProbeDsum, since removed).
+      // Past the gate
       // (multi-split input, the cluster shape) the exchange vanishes
       // and the counts return to 2/1.
       "q02_pricing_summary" -> (3, 0),
       // q04 back to 2 exchanges (round 14): round 13's spreadScan call
-      // was reverted — ProbeQ04AB measured the spread at 2.4× CPU and
+      // was reverted — ProbeQ04AB (since removed) measured the spread at 2.4× CPU and
       // +0.2 s wall (driver: 1.46 -> 2.20 s); a broadcast-probe above
       // the scan is too cheap per row to buy back the exchange.
       "q04_revenue_by_nation" -> (2, 4),

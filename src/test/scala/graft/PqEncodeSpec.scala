@@ -29,7 +29,7 @@ class PqEncodeSpec extends SparkSpec {
     val df = vecs.toDF("v")
     val out = df.select(
       pqEncode(col("v"), graft.queries.VectorOps.pqCbFlat(cb), ksub, dsub).as("native"),
-      graft.queries.VectorOps.encodePqUdf(cb)(col("v")).as("ref")).collect()
+      PqReferenceUdfs.encodePqUdf(cb)(col("v")).as("ref")).collect()
     out.foreach { r =>
       assert(r.getSeq[Byte](0) == r.getSeq[Byte](1))
     }
@@ -46,7 +46,7 @@ class PqEncodeSpec extends SparkSpec {
     val df = codeRows.toDF("codes")
     val out = df.select(
       sqrt(adcDot(typedlit(graft.queries.VectorOps.pqN2Flat(cb)), col("codes"), ksub)).as("native"),
-      graft.queries.VectorOps.pqRecNormUdf(cb)(col("codes")).as("ref")).collect()
+      PqReferenceUdfs.pqRecNormUdf(cb)(col("codes")).as("ref")).collect()
     out.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)))

@@ -30,7 +30,7 @@ class SqlParitySpec extends SparkSpec {
     "q85_pagerank", "q85b_weighted_pagerank", "q86_ab_ttest", "q90_sssp",
     "q95_chisq", "q97_dq_checks", "q98_label_prop", "q100_psi_drift",
     // round 11 (VERDICT item 6): swept mechanically by
-    // tools/ProbeSqlParity — these ten also run on Spark SQL untouched
+    // ProbeSqlParity (since removed) — these ten also run on Spark SQL untouched
     "q07b_rank_battery", "q103_ks_test", "q15_topk_parts_per_brand",
     "q34_mse_on_orders", "q39_stats_moments", "q53_range_join",
     "q89_retention_cohorts", "q92_rolling_anomaly", "q94_ols_trend",
@@ -52,7 +52,7 @@ class SqlParitySpec extends SparkSpec {
     .replace(" IGNORE NULLS)", ") IGNORE NULLS") // inside-call vs after-call
 
   /** Oracles that run on Spark SQL after [[duckToSpark]] (swept by
-    * tools/ProbeSqlParity at round 11): the temporal/event family
+    * ProbeSqlParity at round 11, since removed): the temporal/event family
     * (epoch_us), the layout family (// integer division) and the
     * text-normalization users (string_split + the 'g' flag). */
   private val portableMapped = Seq(

@@ -6,8 +6,9 @@ package graft
   * of every replay side it compared (equal hashes within a test = the
   * equivalence that test asserted). Written round-stamped via the same
   * [[graft.RoundStamp]] inference Bench uses for
-  * docs/BENCH_driver_r{N}.json, and skipped entirely when the suite
-  * runs outside the repo root. */
+  * docs/BENCH_driver_r{N}.json, but under target/ so a test run never
+  * rewrites a committed file, and skipped entirely when the suite runs
+  * outside the repo root. */
 object StreamsAudit {
 
   private val hashes =
@@ -71,8 +72,8 @@ object StreamsAudit {
     * neighbors); or a FILTERED run covering under half the baseline's
     * tests (round-9 advice: a single cold `testOnly -z` test measured
     * 0.16× — the aggregate can't amortize warm-up it never ran).
-    * Baseline format: a flat {"test name": rows_per_s} object from a
-    * committed STREAMS_r{N}.json; refresh deliberately when test
+    * Baseline format: a flat {"test name": rows_per_s} object taken from
+    * a run's target/STREAMS_r{N}.json; refresh deliberately when test
     * workloads change (commit the new file with that change). */
   def gateOutcome(
       path: String = "docs/streams_baseline.json"): GateOutcome = synchronized {
@@ -149,9 +150,9 @@ object StreamsAudit {
         s"""{"suite":"graft.StreamsSpec","n_tests":${outcomes.size},""" +
         s""""n_passed":${outcomes.values.count(_._1)}$gateJson,"tests":$tests}"""
       RoundStamp.current().foreach { round =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get("docs"))
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(f"docs/STREAMS_r$round%02d.json"), json + "\n")
+          java.nio.file.Paths.get(f"target/STREAMS_r$round%02d.json"), json + "\n")
       }
       Some(json)
     } catch { case scala.util.control.NonFatal(e) =>

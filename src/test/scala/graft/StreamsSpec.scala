@@ -50,7 +50,7 @@ class StreamsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   // ---- audit artifact (VERDICT r6 item 7): every canon() call above is
   // one side of a batch≡stream replay equivalence; recording its hash
-  // per test and dumping docs/STREAMS_r{N}.json at suite end makes the
+  // per test and dumping target/STREAMS_r{N}.json at suite end makes the
   // streaming coverage auditable without reading test logs. The asserts
   // remain the gate — the artifact is the visible record of what ran.
   private var currentTest: String = ""

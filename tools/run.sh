@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class with plain java (no sbt lock), from a SNAPSHOT of
 # the compiled classes so concurrent sbt recompiles can't swap class files
-# under a running JVM. Usage: tools/run.sh graft.tools.ProbeScale 10 sparse
+# under a running JVM. Usage: tools/run.sh graft.tools.Profile <sfDir> <query…>
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SNAP=$(mktemp -d /tmp/graftcp.XXXXXX)
