@@ -12,8 +12,14 @@ object GoldenFormat {
 
   /** Python repr(float): shortest decimal string that round-trips, fixed
     * notation inside Python's [1e-4, 1e16) window (all golden values fit).
-    * JDK 17's Double.toString is not shortest-round-trip, hence the
-    * explicit search. */
+    * Double.toString is not guaranteed shortest before JDK 19, hence the
+    * explicit search: round its digits half-up to 1, 2, … significant
+    * digits and keep the first candidate whose value rounds back to `d`
+    * (`BigDecimal.doubleValue` rounds correctly, as parseDouble does). That
+    * is what `%.{p-1}e` does to the same digits, so the result equals
+    * the former String.format search (PyreprSpec pins it byte for
+    * byte) at a fraction of the cost; the full-precision candidate is
+    * Double.toString itself, which always round-trips. */
   def pyrepr(d: Double): String = {
     require(!d.isNaN && !d.isInfinite, s"non-finite $d")
     val ad = math.abs(d)
@@ -21,10 +27,10 @@ object GoldenFormat {
     if (d == math.floor(d) && ad < 1e16) {
       s"${d.toLong}.0"
     } else {
-      val p = (1 to 17).find { i =>
-        java.lang.Double.parseDouble(String.format(java.util.Locale.ROOT, s"%.${i - 1}e", Double.box(d))) == d
-      }.get
-      val bd = new java.math.BigDecimal(String.format(java.util.Locale.ROOT, s"%.${p - 1}e", Double.box(d)))
+      val digits = new java.math.BigDecimal(java.lang.Double.toString(d))
+      val bd = (1 to digits.precision).iterator
+        .map(i => digits.round(new java.math.MathContext(i, java.math.RoundingMode.HALF_UP)))
+        .find(_.doubleValue == d).get
       val plain = bd.stripTrailingZeros().toPlainString
       if (plain.contains('.')) plain else plain + ".0"
     }

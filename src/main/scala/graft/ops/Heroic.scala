@@ -16,7 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * persisted, and each iteration is a single broadcast join + aggregate.
   * The hs table is ≤ #players (tiny relative to edges), so broadcasting
   * it keeps the per-iteration plan shuffle-free on the edge side at any
-  * scale; lineage is cut with localCheckpoint every few generations.
+  * scale; every generation is cut to a leaf plan (Iterate.loop), so the
+  * per-round driver work stays constant as rounds accumulate.
   */
 object Heroic {
 
@@ -78,8 +79,8 @@ object Heroic {
       .distinct()
       .withColumn("hs", lit(1.0))
 
-  /** Only the final two generations are retained (earlier ones are
-    * unpersisted/checkpoint-truncated and could not be recomputed). */
+  /** Only the final two generations are retained (both persisted;
+    * earlier ones are unpersisted). */
   final case class FixedPoint(secondLast: DataFrame, last: DataFrame, mses: Vector[Double])
 
   /** R8 — run to MSE ≤ `eps` from hs₀ ≡ 1, plus `extra` iterations (the
@@ -91,7 +92,7 @@ object Heroic {
     val static = staticJoin(duels).persist(StorageLevel.MEMORY_AND_DISK)
     static.count()
     // Iterate.loop owns the generation discipline (persist/unpersist,
-    // localCheckpoint cadence, one action per round); mse() doubles as
+    // leaf-plan generations, one action per round); mse() doubles as
     // the materializing action and the convergence measure. The MSE
     // trajectory is part of R8's golden, so it must also accumulate on
     // the `extra` rounds — Iterate runs `measure` there too.

@@ -1,12 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Driver-side iterate-to-fixpoint combinator: the ONE place the engine
   * encodes the discipline every iterative operator needs (persist each
-  * generation, truncate lineage on a cadence, keep exactly the last two
-  * generations, one materializing action per round). Users:
+  * generation as a leaf plan, keep exactly the last two generations,
+  * one materializing action per round). Users:
   * [[Heroic.fixedPoint]] (R8 heroic-score iteration) and
   * [[graft.queries.TextOps.connectedComponents]] (q37 dup clusters);
   * the next iterative operator gets the discipline for free instead of
@@ -35,17 +36,21 @@ object Iterate {
     *    through both `step` and `measure`; it is unpersisted when
     *    generation 2 lands (the caller may also unpersist it later —
     *    double unpersist is a no-op).
-    *  - every generation is persisted at `storage`; every
-    *    `checkpointEvery`-th is an EAGER localCheckpoint instead, so the
-    *    plan does not grow by one join per round and recomputation after
-    *    block loss stays linear in rounds-since-checkpoint.
+    *  - every generation is cut to a leaf plan over the previous
+    *    generation's result ([[PlanBridge.cut]]) and persisted
+    *    MEMORY_AND_DISK. Its plan therefore stays one round deep: the
+    *    driver's analysis, planning and plan-string work per round does
+    *    not grow with the round count. RDD lineage is kept, so blocks
+    *    lost with an executor recompute, and `unpersist()` releases a
+    *    generation. Building the leaf runs the step's broadcast and
+    *    shuffle stages (adaptive execution materializes them to produce
+    *    the RDD); `measure` then runs its final stage.
     *  - `measure(cur, next)` MUST run an action on `next` — it is the
     *    round's single materializing action — and returns whether the
     *    fixpoint is reached. It also runs on the `extra` rounds (verdict
     *    ignored) so side effects like an MSE trajectory stay uniform.
     */
-  def loop(init: DataFrame, maxRounds: Long, extra: Int = 0, checkpointEvery: Int = 5,
-      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+  def loop(init: DataFrame, maxRounds: Long, extra: Int = 0)
       (step: (DataFrame, Int) => DataFrame)
       (measure: (DataFrame, DataFrame) => Boolean): Fix = {
     var prev: DataFrame = null
@@ -54,10 +59,7 @@ object Iterate {
     var converged = false
     def round(): Boolean = {
       it += 1
-      val next = step(cur, it)
-      val cached =
-        if (it % checkpointEvery == 0) next.localCheckpoint(true)
-        else next.persist(storage)
+      val cached = PlanBridge.cut(step(cur, it)).persist(StorageLevel.MEMORY_AND_DISK)
       val done = measure(cur, cached)
       if (prev != null) prev.unpersist()
       prev = cur

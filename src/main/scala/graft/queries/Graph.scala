@@ -23,17 +23,9 @@ object Graph {
 
   private val Rounds = 3
   private val Damping = 0.85
-  /** q88's closure-check broadcast gate: below this many directed edges
-    * the (src < dst) half broadcasts (~16 bytes/row → ≤ ~64 MB at the
-    * gate) and the much larger wedge stream — W ≈ E^1.5 worst case, 17×
-    * E on this corpus — never shuffles; above it the closure check is a
-    * plain shuffle equi-join. The q28/q46 runtime-size-gate pattern
-    * (PlanSpec exempts q88 on the same grounds; GraphSpec forces both
-    * sides and equates them). */
-  private[graft] val EdgeBroadcastLimit = 8000000L
-  /** q88's CSR-kernel gate (round 10), deliberately far above
-    * [[EdgeBroadcastLimit]]: the kernel broadcasts the oriented
-    * adjacency as a CSR at 4 BYTES/edge (int indices + node-sized
+  /** q88's CSR-kernel gate (round 10), sized by its own byte budget:
+    * the kernel broadcasts the oriented adjacency as a CSR at 4
+    * BYTES/edge (int indices + node-sized
     * indptr — 512 MB at this limit, a standard high-memory-executor
     * broadcast budget), while the past-gate intersect dataflow's
     * adjacency-attach exchange moves Σ outdeg⁺² LONGS — measured
@@ -684,9 +676,9 @@ object Graph {
     * Scale posture: the edge list is built once, persisted partitioned
     * by src; each round is rank-join (only the n-node rank table
     * shuffles to the edge partitioning) + a map-side-combinable sum by
-    * dst — two exchanges of rank-sized data per round, with the
-    * combinator supplying the persist/localCheckpoint/one-action
-    * discipline. The one driver-side value is the node COUNT (graph
+    * dst — two exchanges of rank-sized data per round, the fixed
+    * rounds unrolled into one lazy plan (no per-round barrier; see
+    * [[pagerankGated]]). The one driver-side value is the node COUNT (graph
     * metadata, the IVF-centroid precedent); ranks themselves never
     * leave the cluster. The oracle unrolls the same three rounds as
     * chained CTEs. */

@@ -14,6 +14,9 @@ class GoldenSpec extends SparkSpec {
   private val ref = "/root/reference"
   private def golden(dir: String): String =
     Files.readString(Paths.get(s"$ref/$dir/output.txt"))
+  /** The duels log plus the named golden directories must exist. */
+  private def assumeRef(goldens: String*): Unit =
+    (s"$ref/origin/origin.txt" +: goldens.map(g => s"$ref/$g/output.txt")).foreach(assumeFixture)
 
   private lazy val duels = Duels.readOrigin(spark, s"$ref/origin").cache()
 
@@ -27,14 +30,17 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("R3: smoothed avg matches avg_challenger_score golden byte-for-byte") {
+    assumeRef("avg_challenger_score")
     assert(GoldenFormat.keyedDoubles(Duels.smoothedAvg(duels)) == golden("avg_challenger_score"))
   }
 
   test("R4: distinct duel pairs match duel_pairs golden byte-for-byte") {
+    assumeRef("duel_pairs")
     assert(GoldenFormat.duelPairs(Duels.duelPairs(duels)) == golden("duel_pairs"))
   }
 
   test("R1: grouped counts match a re-derivation from the raw file") {
+    assumeRef()
     val lines = scala.io.Source.fromFile(s"$ref/origin/origin.txt")("latin1")
       .getLines().map(_.split("\t")).toVector
     val expChallenger = lines.groupBy(_(0).toLong).view.mapValues(_.size.toLong).toMap
@@ -48,6 +54,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("R2: argmax with lowest-id tiebreak") {
+    assumeRef()
     val top = Duels.argmaxPlayer(Duels.challengesPerChallenger(duels)).collect()(0)
     val counts = Duels.challengesPerChallenger(duels).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
@@ -56,6 +63,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("R5: challengers with >= 12 distinct opponents") {
+    assumeRef()
     val got = Duels.frequentChallengers(duels).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val exp = Duels.duelPairs(duels).collect()
@@ -70,6 +78,7 @@ class GoldenSpec extends SparkSpec {
       .map { l => val Array(k, v) = l.split("\t"); k.toLong -> v.toDouble }.toMap
 
   test("R6: one iteration from committed secondary reproduces heroic_score golden") {
+    assumeRef("secondary_heroic_score", "heroic_score", "top_10")
     // The committed goldens are an emulator-run artifact ~3 iterations past
     // convergence whose exact bytes depend on the emulator's unseeded
     // random summation order (verified: iterate(secondary) matches
@@ -99,6 +108,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("R8: from-scratch fixed point reproduces the reference MSE trajectory") {
+    assumeRef()
     val fp = Heroic.fixedPoint(duels, extra = 0)
     val expected = Vector(24652.827837351244, 2415.3233020110174, 656.7158826082457,
       231.23399034261377, 79.72256073493527, 28.597650559344448, 10.163942583046884,

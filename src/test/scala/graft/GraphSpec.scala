@@ -180,7 +180,7 @@ class GraphSpec extends SparkSpec {
 
   test("q88 CSR kernel (below-gate default) equals the intersect dataflow") {
     // round 10: the default below TriangleCsrEdgeLimit (128M edges — q88's
-    // own gate, 16× EdgeBroadcastLimit; budget measured by
+    // own gate, sized by the 4 B/edge CSR broadcast; budget measured by
     // ProbeCsrPack, since removed) is the broadcast-CSR kernel; the intersect
     // dataflow is the past-gate production path and must agree exactly
     // (pure integer counts + the same cround)

@@ -36,37 +36,37 @@ class IterateSpec extends SparkSpec {
     assert(fix.rounds == 4 && fix.cur.head().getInt(0) == 4)
   }
 
-  test("localCheckpoint cadence truncates lineage (plan becomes an RDD scan)") {
-    // Catalyst collapses the per-round Projects either way, so plan DEPTH
-    // can't distinguish the two; what the cadence changes is the plan's
-    // LEAF — a checkpointed generation scans a materialized RDD
-    // (LogicalRDD), severing recompute lineage, while an uncheckpointed
-    // one still bottoms out in the original relation.
-    def rddScan(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collect {
-        case p if p.nodeName == "LogicalRDD" => p
-      }.nonEmpty
-    val shallow = Iterate.loop(Seq(0).toDF("x").persist(), 5, checkpointEvery = 5) {
+  test("every generation is a leaf plan: round 9's plan is as small as round 2's") {
+    // each generation is cut to a LogicalRDD over the previous one's
+    // result, so neither a generation's analyzed plan nor a plan built on
+    // top of it grows with the round count (before, round k embedded
+    // every round since the last checkpoint)
+    def nodes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case p => p }.size
+    def run(rounds: Int) = Iterate.loop(Seq(0).toDF("x").persist(), rounds) {
       (cur, _) => inc(cur)
-    } { (_, _) => false }
-    val deep = Iterate.loop(Seq(0).toDF("x").persist(), 5, checkpointEvery = 1000) {
-      (cur, _) => inc(cur)
-    } { (_, _) => false }
-    assert(rddScan(shallow.cur), "round-5 checkpoint must leave a LogicalRDD leaf")
-    assert(!rddScan(deep.cur), "no checkpoint => no LogicalRDD leaf")
-    assert(shallow.cur.head().getInt(0) == deep.cur.head().getInt(0))
+    } { (_, next) => next.count(); false }
+    val r2 = run(2)
+    val r9 = run(9)
+    assert(nodes(r9.cur) == nodes(r2.cur), s"round 9: ${r9.cur.queryExecution.analyzed}")
+    assert(nodes(inc(r9.cur)) == nodes(inc(r2.cur)))
+    assert(r2.cur.head().getInt(0) == 2 && r9.cur.head().getInt(0) == 9)
+    Seq(r2, r9).foreach { f => f.cur.unpersist(); f.prev.unpersist() }
   }
 
   test("only the last two generations stay persisted") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
-    val fix = Iterate.loop(Seq(0).toDF("x").persist(), 6, checkpointEvery = 1000) {
+    val fix = Iterate.loop(Seq(0).toDF("x").persist(), 7) {
       (cur, _) => inc(cur)
     } { (_, next) => next.count(); false }
     val during = sc.getPersistentRDDs.size
     // init was unpersisted by the loop once generation 2 landed; only
     // prev + cur remain beyond whatever was persisted before the test
     assert(during - before <= 2, s"expected <= 2 new persisted RDDs, got ${during - before}")
+    // and unpersisting those two releases everything the loop persisted
     fix.cur.unpersist(); fix.prev.unpersist()
+    assert(sc.getPersistentRDDs.size == before,
+      s"the loop left ${sc.getPersistentRDDs.size - before} RDDs persisted")
   }
 }

@@ -13,8 +13,11 @@ class SourcesSpec extends SparkSpec {
 
   private val tmp = Files.createTempDirectory("graft-sources").toString
 
+  private val origin = "/root/reference/origin"
+
   test("reference TSV scan applies the declared schema") {
-    val d = Duels.readOrigin(spark, "/root/reference/origin")
+    assumeFixture(origin)
+    val d = Duels.readOrigin(spark, origin)
     assert(d.count() == 518)
     assert(d.schema.fields.map(f => (f.name, f.dataType.typeName)).toSeq ==
       Seq("challenger" -> "long", "challenged" -> "long",
@@ -151,7 +154,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("DSv2 graft-tsv source equals the csv reader and prunes/pushes in the reader") {
-    val origin = "/root/reference/origin"
+    assumeFixture(origin)
     val v2 = graft.ops.Duels.readOriginV2(spark, origin)
     val v1 = graft.ops.Duels.readOrigin(spark, origin)
     assert(v2.collect().map(_.toSeq).toSet == v1.collect().map(_.toSeq).toSet)
@@ -181,9 +184,10 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("DSv2 graft-tsv source parallelizes a sharded directory one partition per file") {
+    assumeFixture(s"$origin/origin.txt")
     val shardDir = new java.io.File(s"$tmp/tsv_shards")
     shardDir.mkdirs()
-    val lines = scala.io.Source.fromFile("/root/reference/origin/origin.txt")("latin1")
+    val lines = scala.io.Source.fromFile(s"$origin/origin.txt")("latin1")
       .getLines().toSeq
     lines.grouped((lines.size + 2) / 3).zipWithIndex.foreach { case (chunk, i) =>
       java.nio.file.Files.write(
@@ -192,7 +196,7 @@ class SourcesSpec extends SparkSpec {
     }
     val v2 = graft.ops.Duels.readOriginV2(spark, s"$tmp/tsv_shards")
     assert(v2.rdd.getNumPartitions == 3, "one input partition per shard file")
-    val whole = graft.ops.Duels.readOriginV2(spark, "/root/reference/origin")
+    val whole = graft.ops.Duels.readOriginV2(spark, origin)
     assert(v2.collect().map(_.toSeq).toSet == whole.collect().map(_.toSeq).toSet,
       "sharded read equals the single-file read")
   }
@@ -257,13 +261,14 @@ class SourcesSpec extends SparkSpec {
     assert(probe.count() == want)
   }
   test("DSv2 graft-tsv aggregate pushdown: MIN/MAX/COUNT collapse to one partial row per file") {
-    val v2 = graft.ops.Duels.readOriginV2(spark, "/root/reference/origin")
+    assumeFixture(origin)
+    val v2 = graft.ops.Duels.readOriginV2(spark, origin)
     val agg = v2.agg(count(lit(1)).as("n"), min("score").as("mn"),
       max("duration").as("mx"), count("challenger").as("nc"))
     val plan = agg.queryExecution.executedPlan.toString
     assert(plan.contains("PushedAggregates=[count_star, min_score, max_duration, count_challenger]"),
       s"aggregates must reach the reader:\n$plan")
-    val want = graft.ops.Duels.readOrigin(spark, "/root/reference/origin")
+    val want = graft.ops.Duels.readOrigin(spark, origin)
       .agg(count(lit(1)), min("score"), max("duration"), count("challenger"))
       .collect().head
     assert(agg.collect().head == want, "pushed partials finalize to the csv reader's answer")
@@ -279,7 +284,7 @@ class SourcesSpec extends SparkSpec {
     val grouped = v2.groupBy("challenger").agg(min("score"))
     assert(!grouped.queryExecution.executedPlan.toString.contains("PushedAggregates"),
       "grouped aggregation must not push")
-    assert(grouped.count() == graft.ops.Duels.readOrigin(spark, "/root/reference/origin")
+    assert(grouped.count() == graft.ops.Duels.readOrigin(spark, origin)
       .groupBy("challenger").agg(min("score")).count())
   }
 }

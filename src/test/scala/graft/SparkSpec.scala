@@ -17,4 +17,10 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Cancels (rather than fails) the calling test when a read-only
+    * fixture it reads is absent, naming the path; where the fixture
+    * exists the test runs unchanged. */
+  protected def assumeFixture(path: String): Unit =
+    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(path)), s"fixture $path is absent")
 }
