@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** R-series batch operators over the reference duels dataset
   * (SURVEY.md §2.11 R1–R5; semantics cited per reference file:line).
@@ -12,15 +11,10 @@ import org.apache.spark.sql.types._
   */
 object Duels {
 
-  val schema: StructType = StructType(Seq(
-    StructField("challenger", LongType, nullable = false),
-    StructField("challenged", LongType, nullable = false),
-    StructField("score", LongType, nullable = false),
-    StructField("duration", LongType, nullable = false)))
-
-  /** Read a reference-format duels log (tab-separated, no header). */
+  /** Read a reference-format duels log (tab-separated, no header) with
+    * the layout [[graft.sources.TsvSource.schema]] declares. */
   def readOrigin(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(schema).option("sep", "\t").csv(path)
+    spark.read.schema(graft.sources.TsvSource.schema).option("sep", "\t").csv(path)
 
   /** The same scan through the custom DataSource V2 connector
     * ([[graft.sources.TsvTableProvider]]) — column pruning + filter

@@ -11,7 +11,7 @@ import graft.engine.Tables
   * appear in the same order) — the "related items" signals a catalog
   * pipeline derives from order history. Every member runs a FIXED
   * round count, so the rounds unroll into one lazy plan (one action,
-  * no per-generation barriers — see [[pagerankGated]]); a
+  * no per-generation barriers — see [[pagerankFlow]]); a
   * data-dependent iteration (convergence loops like q37's) would keep
   * the [[graft.ops.Iterate]] driver-loop discipline instead. Either
   * way the per-round dataflow is the classic Pregel-as-joins shape
@@ -60,7 +60,7 @@ object Graph {
     * are <= 1.0 at scale 12, so precision 17 loses nothing — and DuckDB
     * keeps the decimals in its int64 fast path. The Spark side goes one
     * step further and sums the long numerators directly (see
-    * [[pagerankOf]]) — identical values, no decimal at all. */
+    * [[pagerankFlow]]) — identical values, no decimal at all. */
 
   /** Symmetrized co-purchase edge list (src, dst, outdeg): distinct
     * (order, part) incidences self-joined on the order key, both
@@ -97,15 +97,15 @@ object Graph {
       out
     }
 
-  /** The graph metadata every consumer needs — edge count (q88's
-    * broadcast gate), node count (the PageRank/label-prop init and
-    * gate), min node id (q90's source) — computed in the ONE action
-    * that materializes the edge cache, instead of a separate barrier
-    * job per consumer. The counts are pure functions of the fixture,
-    * so the cache never goes stale; it survives resetCaches harmlessly
-    * (the next build recomputes and overwrites the same values). */
+  /** The graph metadata every consumer needs — edge count (q88's CSR
+    * gate, the kernels' task sizing), node count (the PageRank init and
+    * the node gate), min node id (q90's source) — computed in the ONE
+    * action that materializes the edge cache, instead of a separate
+    * barrier job per consumer. Keyed like [[TextOps.memo]]'s frames and
+    * cleared with them by [[TextOps.resetCaches]], so an entry lives
+    * exactly as long as the memoized edge frame it describes. */
   private val graphStats =
-    scala.collection.mutable.Map[(String, String, String), (Long, Long, Long)]()
+    scala.collection.mutable.Map[(String, SparkSession, String), (Long, Long, Long)]()
 
   /** Node/edge-sized kernel broadcasts whose lifetime matches the memo
     * caches (ADVICE r10: the final-round rank vectors, dense-id maps
@@ -124,30 +124,14 @@ object Graph {
       : org.apache.spark.broadcast.Broadcast[T] =
     trackedBroadcasts.synchronized { trackedBroadcasts += b; b }
 
-  private[graft] def destroyTrackedBroadcasts(): Unit =
+  /** Releases the tracked broadcasts and forgets the graph stats —
+    * [[TextOps.resetCaches]] calls it as it drops the memoized frames. */
+  private[graft] def resetGraphCaches(): Unit = {
     trackedBroadcasts.synchronized {
       trackedBroadcasts.foreach(_.unpersist(blocking = false))
       trackedBroadcasts.clear()
     }
-
-  /** Session identity for the stats key: a fresh UUID minted per
-    * SparkSession, held in a WeakHashMap so the tag dies with the
-    * session (round-9 advice — the previous identityHashCode string
-    * could collide between a live and a dead session, letting a stale
-    * entry answer for a regenerated fixture at the same dir; a UUID
-    * key can never be revived by a later session). The weak reference
-    * keeps the multi-session-embedding guarantee the round-8 fix was
-    * for: nothing here pins a session for the JVM's lifetime.
-    * (sessionUUID would be the canonical key, but it is private[sql].) */
-  private val sessionTags =
-    new java.util.WeakHashMap[SparkSession, String]()
-  private def sid(s: SparkSession): String = sessionTags.synchronized {
-    var tag = sessionTags.get(s)
-    if (tag == null) {
-      tag = java.util.UUID.randomUUID().toString
-      sessionTags.put(s, tag)
-    }
-    tag
+    graphStats.synchronized(graphStats.clear())
   }
 
   private def recordGraphStats(tag: String, s: SparkSession, dir: String,
@@ -162,14 +146,15 @@ object Graph {
     // empty-graph value (see EmptyInputSpec)
     val minSrc = if (r.isNullAt(2)) Long.MaxValue else r.getLong(2)
     graphStats.synchronized {
-      graphStats((tag, sid(s), dir)) = (r.getLong(0), r.getLong(1), minSrc)
+      graphStats((tag, s, dir)) = (r.getLong(0), r.getLong(1), minSrc)
     }
   }
 
-  /** (nEdges, nNodes, minNode) recorded when `tag`'s edge memo was
-    * built this session; None only if the memo was never built. */
-  private[graft] def graphStat(tag: String, s: SparkSession, dir: String): Option[(Long, Long, Long)] =
-    graphStats.synchronized(graphStats.get((tag, sid(s), dir)))
+  /** (nEdges, nNodes, minNode) recorded when `tag`'s edge memo
+    * ([[coPurchaseEdges]] or [[coPurchaseEdgesW]]) was built; call the
+    * memo first. */
+  private[graft] def graphStat(tag: String, s: SparkSession, dir: String): (Long, Long, Long) =
+    graphStats.synchronized(graphStats((tag, s, dir)))
 
   /** The raw directed pair stream (one row per order co-containing a
     * part pair, both directions), delivered REPARTITIONED BY src — the
@@ -261,62 +246,43 @@ object Graph {
   private def kOf(contrib: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     floor(contrib * math.pow(10, Digits) + 0.5).cast("long")
 
-  /** The shared per-round dataflow. `stats` is the node-sized static
-    * table (outdeg or wsum); each round joins it onto the RANK table —
-    * node-sized work, never edge-sized — then `msg` shapes the per-node
-    * mail and `kExpr` gives each edge's contribution numerator.
+  /** The node gate of q85, q85b, q90 and q98: up to this many NODES
+    * the round-10 kernels run (their per-round value vector — 8 B/node,
+    * 32 MB here — crosses the driver and broadcasts each round); past
+    * it each query runs its one Catalyst dataflow, where the node-sized
+    * mail table shuffles to the persisted edge partitioning (the
+    * classic Pregel posture — edges never move). GraphSpec equates the
+    * two sides bitwise.
     *
-    * Contributions are summed as LONG numerators of the 12-digit grid,
-    * not DECIMAL(17,12): the decimal sum of k_i/10^12 is (Σk_i)/10^12,
-    * so summing the k_i as longs and dividing once is VALUE-IDENTICAL
-    * to the oracle's decimal path (both convert the same rational to
-    * its nearest double — long→double exact below 2^53, 10^12 exact,
-    * IEEE division correctly rounded; total rank mass is ~1, so
-    * Σk ~ 10^12 — no overflow at any graph size) while the hash
-    * aggregate updates a plain long instead of allocating a BigDecimal
-    * per edge. Same exactness, same order-invariance (GraphSpec's
-    * bitwise replay), a fraction of the CPU. */
-  /** Rank-table broadcast gate: below this many NODES the per-round
-    * mail table (node, long numerator — ~16 bytes/row, ≤ ~64 MB at the
-    * gate) broadcasts and each round is a stateless map over the
-    * partitioned edge cache; above it the rank table shuffles to the
-    * edge partitioning (the classic Pregel posture — edges never move
-    * either way). The q28/q88 runtime-size-gate pattern; GraphSpec
-    * forces both sides and equates them bitwise. */
+    * Why the Catalyst side shuffles its mail: the round-9 A/B
+    * (ProbeGraphGate, since removed; interleaved, edge frame prewarmed)
+    * had the mail-SHUFFLE flows beating the broadcast-mail flows in a
+    * hot JVM — q85 3.3–3.5 s vs 4.0–4.2, q90 3.4–3.7 vs 4.6–5.0, q98
+    * 3.8–4.2 vs 4.9–5.4 — because each broadcast round is a driver-
+    * collect barrier. Only PageRank in fresh-JVM one-shot runs favoured
+    * the broadcast (q85 3.5 s vs 3.9–4.0, q85b 4.1 vs 5.2–5.6), a
+    * regime the kernels now serve; past the gate a multi-million-row
+    * mail table is no broadcast candidate, so the broadcast-mail flows
+    * were never selected and are gone. */
   private[graft] val NodeBroadcastLimit = 4000000L
 
-  /** Round-9 gate measurements (ProbeGraphGate, since removed;
-    * interleaved A/B/A/B, edge frame prewarmed, per-generation memos
-    * evicted between runs) split by query AND by methodology:
-    * steady-state (one hot JVM, repeated runs) has the mail-SHUFFLE
-    * side winning everywhere — q85 3.3–3.5 s vs 4.0–4.2 broadcast,
-    * q90 3.4–3.7 vs 4.6–5.0, q98 3.8–4.2 vs 4.9–5.4 — because each
-    * broadcast round is a sequential driver-collect barrier. But
-    * bench-style (fresh JVM, per-query sf0.001 warmup, one timed shot)
-    * INVERTS for PageRank only: q85 3.5 s broadcast vs 3.9–4.0
-    * shuffle, q85b 4.1 vs 5.2–5.6 across three fresh-JVM runs — the
-    * shuffle chain's extra AQE stage boundaries cost more than the
-    * collect barriers until the stage shapes are hot, and PageRank has
-    * the most per-round plan (the contribution numerator) to warm.
-    * q90/q98's pure min-propagation rounds win on the shuffle side in
-    * BOTH methodologies, so their defaults flipped (see their bodies);
-    * PageRank keeps the node-gated broadcast default, with the
-    * steady-state evidence on file here for an embedder running a hot
-    * loop (pass broadcastLimit = 0 to [[pagerankGated]]). GraphSpec
-    * continues to force BOTH sides and equate them bitwise. */
-  /** The shared dataflow, rounds UNROLLED into one lazy plan exactly
-    * like the oracle's chained CTEs: generation k is a subplan over
-    * generation k-1, and the whole 3-round vector materializes in a
-    * SINGLE action — no per-round persist/count barriers (the
+  /** The shared PageRank dataflow, rounds UNROLLED into one lazy plan
+    * exactly like the oracle's chained CTEs: generation k is a subplan
+    * over generation k-1, and the whole 3-round vector materializes in
+    * a SINGLE action — no per-round persist/count barriers (the
     * driver-loop [[Iterate]] discipline is for data-dependent
     * convergence; a fixed round count doesn't need it). The edge cache
     * is scanned once per round inside that one job; the only
-    * driver-side value is the node count (graph metadata).
+    * driver-side value is the node count `n` (graph metadata from the
+    * edge-memo action, [[graphStat]]).
     *
-    * `stats` is the node-sized static table (outdeg or wsum); each
-    * round joins it onto the RANK table — node-sized work, never
-    * edge-sized — then `msg` shapes the per-node mail and `kExpr` gives
-    * each edge's contribution numerator.
+    * The mail is the BARE (node, rank) table (round 8): the per-node
+    * static divisor (outdeg / wsum) lives ON the persisted edge frame
+    * (see [[coPurchaseEdges]]), so `kExprOf` computes each edge's grid
+    * numerator from cached columns and no round joins a node-sized
+    * stats table. The numerator is a pure function of (r, static), so
+    * every round is bitwise identical to the joined form (GraphSpec's
+    * sequential replay pins it).
     *
     * Contributions are summed as LONG numerators of the 12-digit grid,
     * not DECIMAL(17,12): cround(x,12) is exactly k/10^12 with
@@ -330,42 +296,21 @@ object Graph {
     * aggregate updates a plain long instead of allocating a BigDecimal
     * per edge. Same exactness, same order-invariance (GraphSpec's
     * bitwise replay), a fraction of the CPU. */
-  private[graft] def pagerankGated(edges: DataFrame, stats: DataFrame,
-      kExprOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      broadcastLimit: Long,
-      knownN: Option[Long] = None): DataFrame = {
-    // round-8: the mail is the BARE (node, rank) table — the per-node
-    // static divisor (outdeg / wsum) lives ON the persisted edge frame
-    // (see coPurchaseEdges), so the old per-round node-sized stats join
-    // (one exchange + one join job per round) is gone and kExprOf
-    // computes the grid numerator per edge from cached columns.
-    // Value-identity: the numerator is a pure function of (r, static),
-    // both unchanged, so every contribution — and hence every round —
-    // is bitwise identical to the joined form (GraphSpec's sequential
-    // replay pins it). `stats` is only the n fallback now — when the
-    // caller already knows n from the edge-memo action ([[graphStat]]),
-    // no stats job runs at all.
-    val n = knownN.getOrElse {
-      val statsP = stats.persist()
-      try statsP.count() finally statsP.unpersist()
-    }
+  private def pagerankFlow(edges: DataFrame, n: Long,
+      kExprOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
     val scaleF = math.pow(10, Digits)
     var cur: DataFrame = null
     for (round <- 1 to Rounds) {
       // round 1 (round 9): the start is uniform, so its mail is the
-      // LITERAL 1/n for every src — the rank join AND its broadcast/
-      // exchange fuse into a pure map over the cached edge frame (one
-      // whole stage cascade gone; with knownN the init's node-universe
-      // scan disappears too). Bitwise identical: the old inner join
-      // matched every edge exactly once (the node universe IS distinct
-      // src) and delivered the same double 1.0/n into the same kExprOf.
+      // LITERAL 1/n for every src — the rank join AND its exchange fuse
+      // into a pure map over the cached edge frame (one whole stage
+      // cascade gone). Bitwise identical: the inner join matched every
+      // edge exactly once (the node universe IS distinct src) and
+      // delivered the same double 1.0/n into the same kExprOf.
       val contrib =
         if (round == 1) edges.select(col("dst"), kExprOf(lit(1.0 / n)).as("k"))
-        else {
-          val m = if (n <= broadcastLimit) broadcast(cur) else cur
-          edges.join(m, edges("src") === m("node"))
-            .select(col("dst"), kExprOf(col("r")).as("k"))
-        }
+        else edges.join(cur, edges("src") === cur("node"))
+          .select(col("dst"), kExprOf(col("r")).as("k"))
       cur = contrib
         .groupBy("dst")
         .agg(cround(lit(0.15 / n) +
@@ -410,7 +355,7 @@ object Graph {
       (nEdges / 4000000L).toInt))
 
   /** Node universe as a SORTED id array (driver-side, node-sized — the
-    * budget the broadcast mail already spent): the kernel's index
+    * budget the broadcast rank vector already spends): the kernel's index
     * space. distinct(src) rides the persisted src partitioning (partial
     * distinct per partition, no exchange of edge-sized data). */
   private def nodeIds(edges: DataFrame): Array[Long] = {
@@ -678,7 +623,7 @@ object Graph {
     * shuffles to the edge partitioning) + a map-side-combinable sum by
     * dst — two exchanges of rank-sized data per round, the fixed
     * rounds unrolled into one lazy plan (no per-round barrier; see
-    * [[pagerankGated]]). The one driver-side value is the node COUNT (graph
+    * [[pagerankFlow]]). The one driver-side value is the node COUNT (graph
     * metadata, the IVF-centroid precedent); ranks themselves never
     * leave the cluster. The oracle unrolls the same three rounds as
     * chained CTEs. */
@@ -694,26 +639,26 @@ object Graph {
           k => s"e JOIN r${k - 1} r ON e.src = r.node JOIN deg d ON e.src = d.src")}
        |SELECT node, r AS pagerank FROM r$Rounds ORDER BY node""") { (s, dir) =>
     val edges = coPurchaseEdges(s, dir)
-    val stat = graphStat("coPurchaseEdges", s, dir)
-    val nEdges = stat.map(_._1).getOrElse(edges.count())
-    val n = stat.map(_._2).getOrElse {
-      val deg = nodeDegrees(edges).persist()
-      try deg.count() finally deg.unpersist()
-    }
+    val (nEdges, n, _) = graphStat("coPurchaseEdges", s, dir)
     // below the gate: the round-10 kernel (see the kernel block above);
-    // past it: the unchanged rank-shuffle dataflow — r/outdeg reads the
-    // outdeg column already cached on the edge frame, giving the SAME
-    // grid numerator as the once-per-node join form
+    // past it: the rank-shuffle dataflow
     if (n <= NodeBroadcastLimit) pagerankKernelUniform(s, dir, edges, n, nEdges)
-    else pagerankGated(edges, nodeDegrees(edges),
-      kExprOf = r => kOf(r / col("outdeg")), 0L, knownN = Some(n))
+    else uniformPagerankFlow(s, dir)
   }
 
-  /** WEIGHTED co-purchase edges (src, dst, w): w counts the orders
-    * containing both parts (the edge's support). Same build discipline
-    * as [[buildCoPurchaseEdges]] — the (src, dst) count reuses the src
-    * repartition; src's total outgoing weight lives in the node-sized
-    * [[weightSums]] table, not on the edges. */
+  /** q85's past-gate dataflow: [[pagerankFlow]] over the memoized edge
+    * frame — r/outdeg reads the outdeg column cached on it, giving the
+    * SAME grid numerator as the once-per-node join form. */
+  private[graft] def uniformPagerankFlow(s: SparkSession, dir: String): DataFrame = {
+    val edges = coPurchaseEdges(s, dir)
+    pagerankFlow(edges, graphStat("coPurchaseEdges", s, dir)._2, r => kOf(r / col("outdeg")))
+  }
+
+  /** WEIGHTED co-purchase edges (src, dst, w, wsum): w counts the
+    * orders containing both parts (the edge's support), wsum is src's
+    * total outgoing weight. Same build discipline as
+    * [[buildCoPurchaseEdges]] — the (src, dst) count reuses the src
+    * repartition. */
   private[graft] def coPurchaseEdgesW(s: SparkSession, dir: String): DataFrame =
     TextOps.memo("coPurchaseEdgesW", s, dir) {
       // same single-pass window fold as [[coPurchaseEdges]]: wsum (the
@@ -728,11 +673,6 @@ object Graph {
       out
     }
 
-  /** One row per node with its total outgoing edge weight — src-local
-    * map-side-combinable sum riding the edge partitioning. */
-  private[graft] def weightSums(edges: DataFrame): DataFrame =
-    edges.groupBy(col("src").as("node")).agg(sum(col("w")).as("wsum"))
-
   /** Q85b — WEIGHTED PageRank: like [[q85_pagerank]] but each
     * neighbor's share of a node's rank is proportional to the edge's
     * co-purchase support (how many orders contained both parts) rather
@@ -740,7 +680,7 @@ object Graph {
     * a pair bought together 50 times should pull harder than a one-off.
     * Same determinism discipline: integer weights are exact, the
     * contribution r·w/wsum is rounded to the 12-digit grid and summed
-    * exactly (long numerators — see [[pagerankOf]]), so every
+    * exactly (long numerators — see [[pagerankFlow]]), so every
     * generation is bit-identical across engines and partitionings. Same
     * per-round dataflow and scale posture as q85 (only the rank table
     * shuffles; edge support w lives in the persisted edge frame, wsum
@@ -762,21 +702,17 @@ object Graph {
     // graph artifact is built: below it the kernel never touches the
     // flat weighted frame at all; past it the exact n comes with the
     // frame build as before
-    if (t(s, dir, "part").count() <= NodeBroadcastLimit)
-      pagerankKernelWeighted(s, dir)
-    else {
-      val edges = coPurchaseEdgesW(s, dir)
-      val stat = graphStat("coPurchaseEdgesW", s, dir)
-      val n = stat.map(_._2).getOrElse {
-        val ws = weightSums(edges).persist()
-        try ws.count() finally ws.unpersist()
-      }
-      // the unchanged rank-shuffle dataflow — w and wsum live on the
-      // cached edge frame and the expression keeps the oracle's
-      // (r*w)/wsum association exactly
-      pagerankGated(edges, weightSums(edges),
-        kExprOf = r => kOf(r * col("w") / col("wsum")), 0L, knownN = Some(n))
-    }
+    if (t(s, dir, "part").count() <= NodeBroadcastLimit) pagerankKernelWeighted(s, dir)
+    else weightedPagerankFlow(s, dir)
+  }
+
+  /** q85b's past-gate dataflow: [[pagerankFlow]] over the weighted edge
+    * frame — w and wsum live on the cached frame and the expression
+    * keeps the oracle's (r*w)/wsum association exactly. */
+  private[graft] def weightedPagerankFlow(s: SparkSession, dir: String): DataFrame = {
+    val edges = coPurchaseEdgesW(s, dir)
+    pagerankFlow(edges, graphStat("coPurchaseEdgesW", s, dir)._2,
+      r => kOf(r * col("w") / col("wsum")))
   }
 
   /** The edge CTE block shared by every graph oracle: distinct (order,
@@ -811,8 +747,8 @@ object Graph {
     * wedge stream of the join formulation never exists as rows: the
     * biggest dataflow is the E-row adjacency build + two node-keyed
     * equi-joins with arrays bounded by the O(√E) oriented out-degree.
-    * The wedge-join form survives as [[trianglesWedgeJoin]], the
-    * spec's independent recomputation. */
+    * GraphSpec's brute-force enumeration is the independent
+    * recomputation. */
   val q88_triangles: Query = Query(
     s"""WITH $edgeCtes,
        |     und AS (SELECT src AS u, dst AS v FROM e WHERE src < dst),
@@ -838,21 +774,9 @@ object Graph {
     // and the [[TriangleCsrEdgeLimit]] trade note); past it the
     // intersect dataflow unchanged
     val e = coPurchaseEdges(s, dir)
-    val nEdges = graphStat("coPurchaseEdges", s, dir).map(_._1)
-      .getOrElse(e.count())
-    if (nEdges <= TriangleCsrEdgeLimit) trianglesKernel(s, dir, e)
-    else trianglesOf(e)
+    if (graphStat("coPurchaseEdges", s, dir)._1 <= TriangleCsrEdgeLimit) trianglesKernel(s, dir, e)
+    else trianglesIntersect(e)
   }
-
-  /** q88's Spark body — the adjacency-intersect form at every size:
-    * paired same-JVM A/B puts it 2.2× ahead of the wedge join at
-    * sf0.1 (4.1–4.8 s vs 9.2–10.7 s) AND ~3× ahead on the 23.9M-edge
-    * 10× replica (19–21 s vs 58–76 s): it moves the same asymptotic
-    * bytes (Σ outdeg⁺² longs as carried arrays ≡ the wedge stream's
-    * rows) through 34× fewer rows, and the merge-walk replaces 410M
-    * hash probes. The wedge-join form stays as the spec's independent
-    * recomputation ([[trianglesWedgeJoin]]). */
-  private[graft] def trianglesOf(e: DataFrame): DataFrame = trianglesIntersect(e)
 
   /** q88's below-gate KERNEL (round 10): the same compact-forward
     * merge-walk, with the oriented adjacency packed into a broadcast
@@ -870,9 +794,9 @@ object Graph {
     * pack time on the driver, then each pivot's slice sorts once), and
     * counts triangles + oriented wedges in a parallelize()d sweep over
     * broadcast CSR slices. Pure integer counts — bit-determinism free;
-    * GraphSpec equates kernel ≡ intersect ≡ wedge-join (both gate
-    * sides) ≡ brute force. Past the gate the intersect dataflow is
-    * unchanged (its shuffle-hash shape is the 100 TB path). */
+    * GraphSpec equates kernel ≡ intersect ≡ brute force. Past the gate
+    * the intersect dataflow is unchanged (its shuffle-hash shape is the
+    * 100 TB path). */
   /** Distributed-group-then-pack of an oriented edge RDD into a driver
     * CSR (indptr, indices over dense node indexes). Kept separate from
     * [[trianglesKernel]] so the REAL pack path's driver footprint can be
@@ -1018,12 +942,13 @@ object Graph {
     * materialized — but the exploded edges each CARRY their pivot's
     * array, so the adjacency-attach exchange still moves Σ outdeg⁺²
     * longs. Those are the same asymptotic bytes the wedge stream moves
-    * as rows, through ~34× fewer of them — which is why round 8 made
-    * this the ONLY production path at every size (2.2× at sf0.1, ~3×
-    * at 23.9M edges); [[trianglesWedgeJoin]] survives as the spec's
-    * independent recomputation. GraphSpec equates it against brute
-    * force and against the wedge join on both of the latter's gate
-    * sides. */
+    * as rows, through ~34× fewer of them, and the merge-walk replaces
+    * 410M hash probes — which is why round 8 made this the past-gate
+    * path in place of the wedge-JOIN form (materialize two-paths, close
+    * them against the edge set; since removed): paired same-JVM A/B put
+    * it 2.2× ahead at sf0.1 (4.1–4.8 s vs 9.2–10.7 s) and ~3× ahead on
+    * the 23.9M-edge 10× replica (19–21 s vs 58–76 s). GraphSpec equates
+    * it against the CSR kernel and brute force. */
   private[graft] def trianglesIntersect(e: DataFrame): DataFrame = {
     import graft.functions.SortedLongIntersect.sortedIntersect
     val orient = orientOf(e)
@@ -1059,73 +984,6 @@ object Graph {
           cround(lit(3.0) * col("n_triangles") / col("n_open"))).as("global_cc"))
   }
 
-  /** The wedge-JOIN formulation (materialize two-paths, close them
-    * against the edge set), parameterized on the closure-check
-    * broadcast gate — kept as the spec's independent recomputation of
-    * [[trianglesOf]] and as the documented shape for engines without a
-    * fused array intersect. `knownEdges` is the edge count from the
-    * memo-build action ([[graphStat]]) — without it the gate pays its
-    * own (cheap, cache-backed) count job. */
-  private[graft] def trianglesWedgeJoin(e: DataFrame, broadcastLimit: Long,
-      knownEdges: Option[Long] = None): DataFrame = {
-    val und = e.filter(col("src") < col("dst")).select(col("src").as("u"), col("dst").as("v"))
-    val deg = nodeDegrees(e)
-    val orient = orientOf(e)
-    val o1 = orient.select(col("s"), col("t").as("t1"))
-    val o2 = orient.select(col("s"), col("t").as("t2"))
-    val wedge = o1.join(o2, "s").filter(col("t1") < col("t2"))
-      .select(least(col("t1"), col("t2")).as("a"), greatest(col("t1"), col("t2")).as("b"))
-    // closure check: if the edge key set fits the broadcast gate, ship
-    // it to the W-sized wedge stream (W >> E — 41M wedges vs 750k edges
-    // at sf0.1) so the wedges never shuffle and the count partial-
-    // aggregates map-side; past the gate the check degrades to a plain
-    // shuffle equi-join on (a, b) — the q28 runtime-size-gate pattern,
-    // with the W-vs-E asymmetry deciding the broadcast side. The count
-    // is free: the edge frame is already persisted and counted by the
-    // memoizer.
-    // ONE pass over the wedge stream (the dominant O(E^1.5)-worst-case
-    // term): a LEFT join against the edge key set — unique per (u, v),
-    // so at most one match per wedge — counts triangles (matched) and
-    // wedges (all) in the same aggregation instead of enumerating the
-    // wedges twice for the two counts.
-    // Past the gate the edge side carries the SHUFFLE_HASH hint (the
-    // rawJaccard posture): a sort-merge join would SORT the W-sized
-    // wedge stream — measured 16 GB of sort spill at a 24M-edge /
-    // 410M-wedge scale probe — while the hash build side is the
-    // compact edge keys, shrinking with partition count.
-    val counts = wedge.join(
-      if (knownEdges.getOrElse(e.count()) <= broadcastLimit) broadcast(und)
-      else und.hint("shuffle_hash"),
-      col("a") === col("u") && col("b") === col("v"), "left")
-      .agg(count(col("u")).as("n_triangles"), count(lit(1)).as("n_wedges"))
-    val opn = deg.agg(sum(expr("outdeg * (outdeg - 1) DIV 2")).as("n_open"))
-    counts.crossJoin(opn)
-      .select(col("n_triangles"), col("n_wedges"),
-        // same documented NULL-when-no-open-wedges as trianglesIntersect
-        when(col("n_open") > 0,
-          cround(lit(3.0) * col("n_triangles") / col("n_open"))).as("global_cc"))
-  }
-
-  /** Q90 — single-source shortest paths (hop distance, 4 synchronous
-    * relaxation rounds) from the minimum part id. Each round is the
-    * min-plus step: dist' = min of the node's own distance and
-    * (neighbor distance + 1) — pure integer arithmetic, so the result
-    * is exactly deterministic with no rounding discipline needed. The
-    * oracle unrolls the same 4 rounds as chained CTEs.
-    *
-    * Scale posture: the FIXED round count unrolls into one lazy plan
-    * exactly like q98 (round-8 — this was the last graph query still
-    * paying [[Iterate]]'s per-round persist/count barriers for a
-    * round count that is not data-dependent; on a real cluster each
-    * barrier is a full-cluster sync). The (own dist ∪ mail) double
-    * reference is restated so each generation is referenced ONCE: real
-    * edges carry increment 1 and per-node SELF-LOOPS carry increment 0,
-    * so a reached node's own distance re-enters the min as its
-    * self-mail and the unrolled plan stays linear in rounds. Below the
-    * node gate each round is a broadcast map stage over the edge cache;
-    * past it the mail join rides the bare edge partitioning with q98's
-    * lazy per-generation persist. A full-diameter SSSP (data-dependent
-    * rounds) would keep the Iterate driver-loop discipline like q37. */
   /** Shared below-gate MIN-PROPAGATION kernel (round 10): q90 (SSSP,
     * mail = dist+1) and q98 (label propagation, mail = lbl+0) run the
     * same 4 synchronous rounds of v[d] ← min(v[d], min over in-edges of
@@ -1141,12 +999,12 @@ object Graph {
     * partition); rounds 1..3 merge node-sized mins on the driver, the
     * final round stays distributed through the same groupBy(i).min so
     * the output plan ends in-cluster (the [[kernelRounds]] discipline).
-    * Past the gate the callers keep their measured mail-shuffle
-    * dataflows ([[ssspGated]]/[[labelPropGated]], round-9 ProbeGraphGate
-    * evidence; that probe is since removed) — the kernel replaces only
+    * Past the gate the callers run their mail-shuffle dataflows
+    * ([[ssspFlow]]/[[labelPropFlow]]; the measurements behind that
+    * choice are at [[NodeBroadcastLimit]]) — the kernel replaces only
     * the below-gate regime, where the round-10 profile showed codec and
     * scheduling constants, not arithmetic, dominating node-sized rounds.
-    * GraphSpec equates the kernel against both Catalyst dataflows and the
+    * GraphSpec equates the kernel against the Catalyst dataflow and the
     * sequential replays. */
   private[graft] def minPropKernel(s: SparkSession, dir: String,
       edges: DataFrame, nEdges: Long, ids: Array[Long],
@@ -1219,6 +1077,21 @@ object Graph {
     a
   }
 
+  /** Q90 — single-source shortest paths (hop distance, 4 synchronous
+    * relaxation rounds) from the minimum part id. Each round is the
+    * min-plus step: dist' = min of the node's own distance and
+    * (neighbor distance + 1) — pure integer arithmetic, so the result
+    * is exactly deterministic with no rounding discipline needed. The
+    * oracle unrolls the same 4 rounds as chained CTEs.
+    *
+    * Scale posture: below the node gate the shared min-propagation
+    * kernel ([[minPropKernel]]); past it [[ssspFlow]], whose FIXED
+    * round count unrolls into one lazy plan exactly like q98 (round-8 —
+    * this was the last graph query still paying [[Iterate]]'s per-round
+    * persist/count barriers for a round count that is not
+    * data-dependent; on a real cluster each barrier is a full-cluster
+    * sync). A full-diameter SSSP (data-dependent rounds) would keep the
+    * Iterate driver-loop discipline like q37. */
   val q90_sssp: Query = {
     def roundCte(k: Int): String =
       s"""d$k AS (SELECT node, min(dist) AS dist FROM (
@@ -1234,77 +1107,44 @@ object Graph {
          |SELECT node, dist FROM d4 ORDER BY node""") { (s, dir) =>
       // round 10: below the node gate, the shared min-propagation
       // KERNEL over the object-RDD adjacency (see [[minPropKernel]]);
-      // past it, the round-9 mail-shuffle default — the measured winner
-      // for the min-propagation rounds among the CATALYST dataflows in
-      // both methodologies (ProbeGraphGate, since removed: steady-state 3.4-3.7 s vs
-      // 4.6-5.0 broadcast, bench-style 3.2 vs 3.7) and the
+      // past it, the mail-shuffle dataflow — the measured winner for the
+      // min-propagation rounds among the CATALYST dataflows in both
+      // methodologies (ProbeGraphGate, since removed: steady-state
+      // 3.4-3.7 s vs 4.6-5.0 broadcast, bench-style 3.2 vs 3.7) and the
       // 1000-executor posture (mail moves once to the persisted edge
       // partitioning instead of through a per-round driver collect)
       val edges = coPurchaseEdges(s, dir)
-      val stat = graphStat("coPurchaseEdges", s, dir)
-      val n = stat.map(_._2).getOrElse(
-        edges.select("src").distinct().count())
+      val (nEdges, n, _) = graphStat("coPurchaseEdges", s, dir)
       if (n <= NodeBroadcastLimit) {
-        val nEdges = stat.map(_._1).getOrElse(edges.count())
         val ids = nodeIds(edges)
         // ids are sorted ascending, so the min-id source is index 0
         minPropKernel(s, dir, edges, nEdges, ids,
           init = i => if (i == 0) 0L else Long.MaxValue, inc = 1)
           .select(col("node"), col("v").cast("int").as("dist"))
           .orderBy("node")
-      } else ssspGated(s, dir, 0L)
+      } else ssspFlow(s, dir)
     }
   }
 
-  /** q90's dataflow with the broadcast gate exposed (GraphSpec forces
-    * both sides and equates them, the q98 pattern). */
-  private[graft] def ssspGated(s: SparkSession, dir: String,
-      broadcastLimit: Long): DataFrame = {
+  /** q90's past-gate dataflow: the mail join rides the bare persisted
+    * edge partitioning, and a LAZY per-generation persist (q98's) lets
+    * the (own dist ∪ mail) union reference each generation twice while
+    * computing it once. */
+  private[graft] def ssspFlow(s: SparkSession, dir: String): DataFrame = {
     val edges = coPurchaseEdges(s, dir).select("src", "dst")
     // min node id and node count came free with the edge-memo action
-    val stat = graphStat("coPurchaseEdges", s, dir)
-    val source = stat.map(_._3).getOrElse {
-      // same empty-aggregate guard as recordGraphStats: NULL min (no
-      // edges) becomes the inert MaxValue sentinel, so an empty graph
-      // yields an EMPTY distance table (documented: no source exists)
-      val r = edges.agg(min(col("src"))).first()
-      if (r.isNullAt(0)) Long.MaxValue else r.getLong(0)
-    }
-    // INVARIANT (round-8 advice): the node universe is derived from the
-    // src column alone, and the broadcast branch's 0-increment self-loop
-    // union below relies on it covering every reachable node — both hold
-    // ONLY because [[coPurchaseEdges]] emits both directions of every
-    // edge (src and dst column sets are identical). An asymmetric edge
-    // frame would silently drop a reached-but-srcless node's distance;
-    // derive nodes from union(src, dst) before reusing this dataflow on
-    // a directed graph.
-    val nodes = edges.select(col("src").as("node")).distinct()
-    val n = stat.map(_._2).getOrElse(nodes.count())
+    val (_, n, source) = graphStat("coPurchaseEdges", s, dir)
     import s.implicits._
-    var cur = Seq((source, 0)).toDF("node", "dist")
-    if (n <= broadcastLimit) {
-      // self-loops with increment 0: min(own, mail+1) without a second
-      // reference to the generation (the q98 union-linearization, with
-      // the increment column carrying the "+1 only for real edges" rule)
-      val edgesPlus = edges.select(col("src"), col("dst"), lit(1).as("inc"))
-        .unionByName(nodes.select(col("node").as("src"), col("node").as("dst"),
-          lit(0).as("inc")))
-      for (_ <- 1 to 4) {
-        val m = broadcast(cur)
-        cur = edgesPlus.join(m, edgesPlus("src") === m("node"))
-          .select(col("dst").as("node"), (col("dist") + col("inc")).as("dist"))
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-      }
-    } else {
-      // past the gate: bare persisted edge partitioning + q98's lazy
-      // per-generation persist for the double reference
-      for (round <- 1 to 4) {
-        val c = TextOps.memo(s"q90.gen$round", s, dir)(cur.persist())
-        cur = c.unionByName(
-          edges.join(c, edges("src") === c("node"))
-            .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-      }
+    // an empty graph has no source: the MaxValue sentinel would survive
+    // every round's union as a phantom row, so the seed is empty and so
+    // is the result (q90's documented empty value, EmptyInputSpec)
+    var cur = (if (n == 0) Seq.empty[(Long, Int)] else Seq((source, 0))).toDF("node", "dist")
+    for (round <- 1 to 4) {
+      val c = TextOps.memo(s"q90.gen$round", s, dir)(cur.persist())
+      cur = c.unionByName(
+        edges.join(c, edges("src") === c("node"))
+          .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
+        .groupBy("node").agg(min(col("dist")).as("dist"))
     }
     cur.orderBy("node")
   }
@@ -1321,15 +1161,12 @@ object Graph {
     * rounding discipline, like q90. The oracle unrolls the same 4
     * rounds as chained CTEs.
     *
-    * Scale posture: the node-sized label table joins the persisted
-    * src-partitioned edge cache each round (only labels shuffle, never
-    * edges) and min() partial-aggregates map-side. Unlike q90 (whose
-    * frontier is data-dependent and keeps the [[Iterate]] discipline),
-    * the FIXED round count here unrolls into one lazy plan with zero
-    * per-round actions — below the node gate each round is a broadcast
-    * map stage over edges ∪ self-loops; past it the mail join rides the
-    * bare edge partitioning and a lazy per-generation persist makes the
-    * (own ∪ mail) double reference compute once. Bounded rounds =
+    * Scale posture: below the node gate the shared min-propagation
+    * kernel ([[minPropKernel]]); past it [[labelPropFlow]], where the
+    * node-sized label table joins the persisted src-partitioned edge
+    * cache each round (only labels shuffle, never edges), min()
+    * partial-aggregates map-side, and the FIXED round count unrolls
+    * into one lazy plan with zero per-round actions. Bounded rounds =
     * bounded barriers — and after the unroll, ONE barrier total. */
   val q98_label_prop: Query = {
     def roundCte(k: Int): String =
@@ -1346,74 +1183,48 @@ object Graph {
          |SELECT node, lbl AS community FROM l4 ORDER BY node""") { (s, dir) =>
       // round 10: below the node gate, the shared min-propagation
       // KERNEL (labels propagate with increment 0; see
-      // [[minPropKernel]]); past it, the round-9 mail-shuffle default —
-      // winner among the Catalyst dataflows in both methodologies like
-      // q90 (ProbeGraphGate, since removed: steady-state 3.8-4.2 s vs 4.9-5.4
-      // broadcast, bench-style 3.7 vs 4.0; see the pagerankOf note)
+      // [[minPropKernel]]); past it, the mail-shuffle dataflow — winner
+      // among the Catalyst dataflows in both methodologies like q90
+      // (ProbeGraphGate, since removed: steady-state 3.8-4.2 s vs
+      // 4.9-5.4 broadcast, bench-style 3.7 vs 4.0; see the
+      // [[NodeBroadcastLimit]] note)
       val edges = coPurchaseEdges(s, dir)
-      val stat = graphStat("coPurchaseEdges", s, dir)
-      val n = stat.map(_._2).getOrElse(
-        edges.select("src").distinct().count())
+      val (nEdges, n, _) = graphStat("coPurchaseEdges", s, dir)
       if (n <= NodeBroadcastLimit) {
-        val nEdges = stat.map(_._1).getOrElse(edges.count())
         val ids = nodeIds(edges)
         minPropKernel(s, dir, edges, nEdges, ids,
           init = i => ids(i), inc = 0)
           .select(col("node"), col("v").as("community"))
           .orderBy("node")
-      } else labelPropGated(s, dir, 0L)
+      } else labelPropFlow(s, dir)
     }
   }
 
-  /** q98's dataflow with the broadcast gate exposed (GraphSpec forces
-    * both sides and equates them, the q85 fallback-test pattern).
-    *
-    * ROUNDS UNROLLED into one lazy plan (the q85 discipline): a FIXED
-    * 4-round count needs none of Iterate.loop's per-round persist/count
-    * barriers — on a real cluster each barrier is a full-cluster sync,
-    * and locally the 4 extra jobs were most of q98's wall.
-    * distinct(src) rides the persisted src partitioning (no exchange),
-    * so nodes is a local agg scan per use. */
-  private[graft] def labelPropGated(s: SparkSession, dir: String,
-      broadcastLimit: Long): DataFrame = {
+  /** q98's past-gate dataflow, ROUNDS UNROLLED into one lazy plan (the
+    * q85 discipline): a FIXED 4-round count needs none of
+    * Iterate.loop's per-round persist/count barriers — on a real
+    * cluster each barrier is a full-cluster sync, and locally the 4
+    * extra jobs were most of q98's wall. distinct(src) rides the
+    * persisted src partitioning (no exchange). */
+  private[graft] def labelPropFlow(s: SparkSession, dir: String): DataFrame = {
     val edges = coPurchaseEdges(s, dir).select("src", "dst")
-    val nodes = edges.select(col("src").as("node")).distinct()
-    val init = nodes.select(col("node"), col("node").as("lbl"))
-    // graph metadata (the q85 gate precedent) — free from the edge-memo
-    // action when this session built the memo ([[graphStat]])
-    val n = graphStat("coPurchaseEdges", s, dir).map(_._2).getOrElse(nodes.count())
-    var cur = init
+    var cur = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl"))
     for (round <- 1 to 4) {
-      cur =
-        if (n <= broadcastLimit) {
-          // below the gate: the oracle's (own label ∪ mail) min is
-          // restated as mail over edges ∪ SELF-LOOPS so each
-          // generation is referenced exactly ONCE and the unrolled
-          // plan stays linear in rounds (the union form references it
-          // twice → 2^k subplans); the union costs nothing here
-          // because the whole mail join is a broadcast map stage
-          val edgesPlus = edges.unionByName(
-            nodes.select(col("node").as("src"), col("node").as("dst")))
-          val m = broadcast(cur)
-          edgesPlus.join(m, edgesPlus("src") === m("node"))
-            .select(col("dst").as("node"), col("lbl"))
-            .groupBy("node").agg(min(col("lbl")).as("lbl"))
-        } else {
-          // past the gate: keep the mail join on the BARE persisted
-          // edge frame (a union would discard its src partitioning
-          // and re-exchange edge-sized data every round); the second
-          // reference to the generation is made safe by a LAZY
-          // persist — within the one final action each generation
-          // computes once and its cache serves both references, with
-          // no extra job and no barrier. Memoized (not bare-persisted)
-          // so repeated session calls reuse the generations instead of
-          // accumulating orphaned blocks, and resetCaches covers them.
-          val c = TextOps.memo(s"q98.gen$round", s, dir)(cur.persist())
-          c.unionByName(
-            edges.join(c, edges("src") === c("node"))
-              .select(col("dst").as("node"), col("lbl")))
-            .groupBy("node").agg(min(col("lbl")).as("lbl"))
-        }
+      // keep the mail join on the BARE persisted edge frame (a union
+      // with self-loops would discard its src partitioning and
+      // re-exchange edge-sized data every round); the second reference
+      // to the generation is made safe by a LAZY persist — within the
+      // one final action each generation computes once and its cache
+      // serves both references, with no extra job and no barrier.
+      // Memoized (not bare-persisted) so repeated session calls reuse
+      // the generations instead of accumulating orphaned blocks, and
+      // resetCaches covers them.
+      val c = TextOps.memo(s"q98.gen$round", s, dir)(cur.persist())
+      cur = c.unionByName(
+        edges.join(c, edges("src") === c("node"))
+          .select(col("dst").as("node"), col("lbl")))
+        .groupBy("node").agg(min(col("lbl")).as("lbl"))
     }
     cur.select(col("node"), col("lbl").as("community")).orderBy("node")
   }

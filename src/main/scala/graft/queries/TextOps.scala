@@ -356,12 +356,12 @@ object TextOps {
       rddCache.clear()
     }
     // forget the q54b partner-index broadcast handle; its DESTRUCTION
-    // rides destroyTrackedBroadcasts below (it is Graph.track'd)
+    // rides resetGraphCaches below (it is Graph.track'd)
     partnerIdxCache.synchronized(partnerIdxCache.clear())
-    // the graph kernels' node/edge-sized broadcasts share the memo
-    // lifecycle (ADVICE r10: a long-lived session otherwise accumulates
-    // them until ContextCleaner GC)
-    graft.queries.Graph.destroyTrackedBroadcasts()
+    // the graph kernels' node/edge-sized broadcasts and the edge memos'
+    // stats share the memo lifecycle (ADVICE r10: a long-lived session
+    // otherwise accumulates the broadcasts until ContextCleaner GC)
+    graft.queries.Graph.resetGraphCaches()
   }
 
   /** Distinct 5-gram character shingle hashes of the normalized text,
@@ -938,9 +938,12 @@ object TextOps {
   /** Connected components over an undirected edge list (cols d1, d2),
     * in two phases.
     *
-    * Phase 1 — partition-local union-find contraction (long-typed edges
-    * only): each partition runs a classic union-find (path compression +
-    * union by min) over ITS edges and emits its spanning forest as
+    * Vertex ids are LONG (every caller feeds BIGINT doc ids; other
+    * types are rejected).
+    *
+    * Phase 1 — partition-local union-find contraction: each partition
+    * runs a classic union-find (path compression + union by min) over
+    * ITS edges and emits its spanning forest as
     * (v → local-component-min) pointer edges. A spanning forest
     * preserves the connectivity of its partition's edge subset, and
     * connectivity over a union of subgraphs follows from the union of
@@ -985,47 +988,13 @@ object TextOps {
       driverFinishMax: Long = 2L << 20): (DataFrame, Int) = {
     import org.apache.spark.sql.types.LongType
     val Array(c1, c2) = edges.columns
+    require(edges.schema.fields.forall(_.dataType == LongType),
+      s"connectedComponents needs long vertex ids, got ${edges.schema.simpleString}")
     val sess = edges.sparkSession
     import sess.implicits._
-    val allLong = edges.schema.fields.forall(_.dataType == LongType)
-    val contracted: DataFrame =
-      if (allLong) {
-        edges.select(col(c1).as("_1"), col(c2).as("_2")).as[(Long, Long)]
-          .mapPartitions { it =>
-            val parent = scala.collection.mutable.LongMap.empty[Long]
-            def find(x: Long): Long = {
-              var r = x
-              while (parent(r) != r) r = parent(r)
-              var c = x
-              while (c != r) { val n = parent(c); parent(c) = r; c = n }
-              r
-            }
-            it.foreach { case (a, b) =>
-              if (!parent.contains(a)) parent(a) = a
-              if (!parent.contains(b)) parent(b) = b
-              val ra = find(a)
-              val rb = find(b)
-              if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-            }
-            // every vertex that is not a local root points at its root;
-            // roots of >=2-vertex components reappear as edge targets, so
-            // the vertex set survives the contraction
-            parent.keysIterator
-              .map(v => (v, find(v)))
-              .filter { case (v, r) => v != r }
-          }.toDF("a", "b")
-      } else {
-        // non-long label types skip the pre-pass (no test/query uses
-        // them today; the loop below is type-generic and still correct)
-        edges.select(col(c1).as("a"), col(c2).as("b"))
-      }
-    val forest = contracted.persist()
-    val nForest = forest.count()
-    if (allLong && nForest <= driverFinishMax) {
-      // driver finish: merge the per-partition forests with one more
-      // union-find pass (same algorithm, all edges), emit (v, root).
-      // Roots are included because every root of a >=2-vertex component
-      // appears as a pointer target.
+    // the union-find both phases run: path compression + union by min
+    // over an edge stream, then (v, root) for every vertex seen
+    def components(es: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x
@@ -1034,15 +1003,29 @@ object TextOps {
         while (c != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      forest.as[(Long, Long)].collect().foreach { case (a, b) =>
+      es.foreach { case (a, b) =>
         if (!parent.contains(a)) parent(a) = a
         if (!parent.contains(b)) parent(b) = b
         val ra = find(a)
         val rb = find(b)
         if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
       }
+      parent.keysIterator.map(v => (v, find(v)))
+    }
+    // every vertex that is not a local root points at its root; roots
+    // of >=2-vertex components reappear as edge targets, so the vertex
+    // set survives the contraction
+    val forest = edges.select(col(c1).as("_1"), col(c2).as("_2")).as[(Long, Long)]
+      .mapPartitions(it => components(it).filter { case (v, r) => v != r })
+      .toDF("a", "b").persist()
+    val nForest = forest.count()
+    if (nForest <= driverFinishMax) {
+      // driver finish: merge the per-partition forests with one more
+      // union-find pass (same algorithm, all edges), emit (v, root).
+      // Roots are included because every root of a >=2-vertex component
+      // appears as a pointer target.
+      val labels = components(forest.as[(Long, Long)].collect().iterator).toSeq
       forest.unpersist()
-      val labels = parent.keysIterator.map(v => (v, find(v))).toSeq
       return (labels.toDF("v", "lbl"), 0)
     }
     val bi = forest.unionAll(forest.select(col("b").as("a"), col("a").as("b"))).persist()
@@ -1052,10 +1035,9 @@ object TextOps {
     // only ~log2(diameter)), so non-convergence within the bound is
     // impossible rather than silently tolerated
     val maxRounds = labels0.count().max(1L)
-    val lblType = labels0.schema("lbl").dataType
     val fix = Iterate.loop(labels0, maxRounds) { (labels, it) =>
       val prop = bi.join(labels, col("a") === col("v"))
-        .select(col("b").as("v"), col("lbl"), lit(null).cast(lblType).as("old"))
+        .select(col("b").as("v"), col("lbl"), lit(null).cast("long").as("old"))
       val hop = labels.select(col("v"), col("lbl"), col("lbl").as("old"))
         .unionAll(prop)
         .groupBy("v").agg(min(col("lbl")).as("lbl"), min(col("old")).as("old"))

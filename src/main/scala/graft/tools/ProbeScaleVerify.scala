@@ -175,9 +175,7 @@ object ProbeScaleVerify {
     // kernel indexing slip or a non-order-invariant sum would diverge)
     import graft.queries.Graph
     val edges = Graph.coPurchaseEdges(spark, dir)
-    val kExprOf = (r: org.apache.spark.sql.Column) =>
-      floor(r / col("outdeg") * 1e12 + 0.5).cast("long")
-    val shuffled = Graph.pagerankGated(edges, Graph.nodeDegrees(edges), kExprOf, 0L)
+    val shuffled = Graph.uniformPagerankFlow(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val kernel = graft.SparkEntry.queries("q85_pagerank")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -100,4 +100,26 @@ class EmptyInputSpec extends SparkSpec {
     val pq = SparkEntry.queries("q79_pq_ann")(spark, dir)
     assert(pq.count() == 0L && pq.columns.length == 4)
   }
+
+  test("past-gate graph flows equal their queries' empty-graph outputs") {
+    // production routes the empty graph (n = 0) to the kernels, so only
+    // direct calls reach the Catalyst flows on it; q90's must not seed a
+    // phantom (Long.MaxValue, 0) source row
+    import graft.queries.Graph
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    def query(name: String) = rows(SparkEntry.queries(name)(spark, dir))
+    val empty = Seq(
+      "q85_pagerank" -> Graph.uniformPagerankFlow(spark, dir),
+      "q85b_weighted_pagerank" -> Graph.weightedPagerankFlow(spark, dir),
+      "q90_sssp" -> Graph.ssspFlow(spark, dir),
+      "q98_label_prop" -> Graph.labelPropFlow(spark, dir))
+    empty.foreach { case (name, flow) =>
+      assert(query(name).isEmpty, s"$name returns no rows on an empty graph")
+      assert(rows(flow) == query(name), s"$name flow: ${rows(flow)}")
+    }
+    val tri = rows(Graph.trianglesIntersect(Graph.coPurchaseEdges(spark, dir)))
+    assert(tri == query("q88_triangles"))
+    assert(tri.length == 1 && tri(0).getLong(0) == 0L && tri(0).getLong(1) == 0L
+      && tri(0).isNullAt(2))
+  }
 }

@@ -13,6 +13,7 @@ class GraphSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def cround12(x: Double): Double = math.floor(x * 1e12 + 0.5) / 1e12
+  private def cround4(x: Double): Double = math.floor(x * 1e4 + 0.5) / 1e4
 
   test("q85 equals a sequential driver-side replay, bitwise") {
     val edges = Graph.coPurchaseEdges(spark, dir)
@@ -66,9 +67,9 @@ class GraphSpec extends SparkSpec {
     // the edge-memo action records (nEdges, nNodes, minNode) for every
     // graph consumer (no per-query scalar barrier); pin them against
     // independent aggregations so a drifted stat can't silently skew
-    // the PageRank init, the q90 source, or a broadcast gate
+    // the PageRank init, the q90 source, or a size gate
     val e = Graph.coPurchaseEdges(spark, dir)
-    val Some((ne, nn, mn)) = Graph.graphStat("coPurchaseEdges", spark, dir)
+    val (ne, nn, mn) = Graph.graphStat("coPurchaseEdges", spark, dir)
     assert(ne == e.count(), "edge count")
     assert(nn == e.select("src").distinct().count(), "node count")
     assert(mn == e.agg(org.apache.spark.sql.functions.min("src")).head().getLong(0), "min node")
@@ -113,29 +114,20 @@ class GraphSpec extends SparkSpec {
     // the weighted flat frame + shuffle rounds are the documented
     // past-the-gate path (round 10: below the part-count gate the
     // kernel builds straight from the pair stream and the flat frame is
-    // never touched) — force the flat dataflow here and equate it
+    // never touched) — run the flat dataflow here and equate it
     // against the kernel default so the scale path keeps a bitwise pin
-    import org.apache.spark.sql.functions.{col, floor}
-    val edges = Graph.coPurchaseEdgesW(spark, dir)
-    val kExprOf = (r: org.apache.spark.sql.Column) =>
-      floor(r * col("w") / col("wsum") * 1e12 + 0.5).cast("long")
-    val flat = Graph.pagerankGated(edges, Graph.weightSums(edges), kExprOf, 0L)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val flat = Graph.weightedPagerankFlow(spark, dir).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val kern = Graph.q85b_weighted_pagerank.fn(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(kern == flat, "weighted rank vectors must be bitwise equal across paths")
   }
 
   test("q85 rank-shuffle fallback (node set past the broadcast gate) is bitwise identical") {
-    import org.apache.spark.sql.functions.{col, floor}
-    val edges = Graph.coPurchaseEdges(spark, dir)
-    val kExprOf = (r: org.apache.spark.sql.Column) =>
-      floor(r / col("outdeg") * 1e12 + 0.5).cast("long")
-    val gated = Graph.pagerankGated(edges, Graph.nodeDegrees(edges), kExprOf, 0L)
+    val flow = Graph.uniformPagerankFlow(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val bcast = Graph.q85_pagerank.fn(spark, dir).collect()
+    val kern = Graph.q85_pagerank.fn(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(gated == bcast, "rank vectors must be bitwise equal across the gate")
+    assert(flow == kern, "rank vectors must be bitwise equal across the gate")
   }
 
   test("q88 equals a brute-force triangle enumeration and the wedge accounting holds") {
@@ -145,8 +137,19 @@ class GraphSpec extends SparkSpec {
     val brute = (for {
       (a, b) <- und; c <- adj(b) if c > b && und((a, c))
     } yield (a, b, c)).size
+    // oriented wedges Σ C(outdeg⁺, 2) under the (degree, id) orientation,
+    // and open wedges Σ C(d, 2) over the undirected degrees
+    val deg = adj.map { case (k, v) => k -> v.size.toLong }
+    val orientOut = und.toSeq.groupBy { case (u, v) =>
+      if (deg(u) < deg(v) || (deg(u) == deg(v) && u < v)) u else v
+    }.values.map(_.size.toLong)
+    val wedges = orientOut.map(d => d * (d - 1) / 2).sum
+    val open = deg.values.map(d => d * (d - 1) / 2).sum
     val r = Graph.q88_triangles.fn(spark, dir).collect().head
     assert(r.getLong(0) == brute, s"triangles: got ${r.getLong(0)}, brute $brute")
+    assert(r.getLong(1) == wedges, s"wedges: got ${r.getLong(1)}, brute $wedges")
+    assert(r.getDouble(2) == cround4(3.0 * brute / open),
+      s"global_cc: got ${r.getDouble(2)}, brute ${cround4(3.0 * brute / open)}")
     assert(r.getLong(1) >= r.getLong(0), "every triangle closes one counted wedge")
     val cc = r.getDouble(2)
     assert(cc >= 0 && cc <= 1 + 1e-9, s"clustering coefficient in [0,1], got $cc")
@@ -166,24 +169,12 @@ class GraphSpec extends SparkSpec {
       s"oriented wedge volume $wedges must undercut the raw $rawWedges")
   }
 
-  test("q88 adjacency-intersect equals the wedge-join form on both gate sides") {
-    val e = Graph.coPurchaseEdges(spark, dir)
-    val fused = Graph.trianglesOf(e).collect().head
-    val shuffled = Graph.trianglesWedgeJoin(e, 0L).collect().head // forced shuffle closure
-    val bcast = Graph.trianglesWedgeJoin(e, Long.MaxValue).collect().head
-    for (alt <- Seq(shuffled, bcast)) {
-      assert(fused.getLong(0) == alt.getLong(0))
-      assert(fused.getLong(1) == alt.getLong(1))
-      assert(fused.getDouble(2) == alt.getDouble(2))
-    }
-  }
-
   test("q88 CSR kernel (below-gate default) equals the intersect dataflow") {
     // round 10: the default below TriangleCsrEdgeLimit (128M edges — q88's
     // own gate, sized by the 4 B/edge CSR broadcast; budget measured by
     // ProbeCsrPack, since removed) is the broadcast-CSR kernel; the intersect
-    // dataflow is the past-gate production path and must agree exactly
-    // (pure integer counts + the same cround)
+    // dataflow is the past-gate path and must agree exactly (pure integer
+    // counts + the same cround)
     val e = Graph.coPurchaseEdges(spark, dir)
     val kern = Graph.q88_triangles.fn(spark, dir).collect().head
     val flow = Graph.trianglesIntersect(e).collect().head
@@ -242,35 +233,18 @@ class GraphSpec extends SparkSpec {
   }
 
   test("q98 label-shuffle fallback (node set past the broadcast gate) is identical") {
-    val gated = Graph.labelPropGated(spark, dir, 0L)
+    val flow = Graph.labelPropFlow(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bcast = Graph.q98_label_prop.fn(spark, dir)
+    val kern = Graph.q98_label_prop.fn(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gated == bcast, "label tables must be identical across the gate")
+    assert(flow == kern, "label tables must be identical across the gate")
   }
 
   test("q90 frontier-shuffle fallback (node set past the broadcast gate) is identical") {
-    val gated = Graph.ssspGated(spark, dir, 0L)
+    val flow = Graph.ssspFlow(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bcast = Graph.q90_sssp.fn(spark, dir)
+    val kern = Graph.q90_sssp.fn(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(gated == bcast, "hop distances must be identical across the gate")
-  }
-
-  test("q90/q98 broadcast-side Catalyst dataflows equal the kernel default") {
-    // round 10: the default below the node gate is the min-prop KERNEL;
-    // the two Catalyst dataflows (mail-shuffle above, broadcast here)
-    // survive as gate-forced spec equivalences — all three paths must
-    // agree exactly (pure integer min, no rounding discipline)
-    val d90 = Graph.ssspGated(spark, dir, Long.MaxValue)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val k90 = Graph.q90_sssp.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(d90 == k90, "q90 broadcast dataflow must equal the kernel")
-    val d98 = Graph.labelPropGated(spark, dir, Long.MaxValue)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val k98 = Graph.q98_label_prop.fn(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(d98 == k98, "q98 broadcast dataflow must equal the kernel")
+    assert(flow == kern, "hop distances must be identical across the gate")
   }
 }

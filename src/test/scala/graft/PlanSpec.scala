@@ -136,18 +136,9 @@ class PlanSpec extends SparkSpec {
     //    cardinality, not corpus size — LayoutSpec gates the semantics);
     //  - (q88 needed an exemption while its closure check broadcast
     //    the edge set; the round-8 adjacency-intersect form has no
-    //    broadcast at all — no exemption);
-    //  - q85/q85b: the per-round rank mail table (node-sized) broadcasts
-    //    behind the NodeBroadcastLimit runtime gate (Graph.pagerankGated)
-    //    — past it the rank table shuffles to the edge partitioning
-    //    (GraphSpec forces the shuffle side and equates bitwise);
-    //  - q98: the per-round label table (node-sized) broadcasts behind
-    //    the same NodeBroadcastLimit runtime gate (Graph.labelPropGated)
-    //    — past it the mail join rides the bare persisted edge
-    //    partitioning (GraphSpec forces gate = 0 and equates);
-    //  - q90: same gate, same fallback (Graph.ssspGated — the round-8
-    //    unroll; the per-round distance table is node-sized and
-    //    GraphSpec forces gate = 0 and equates);
+    //    broadcast at all — no exemption. Likewise q85/q85b/q90/q98:
+    //    their kernels broadcast through the SparkContext, not a plan
+    //    hint, and their past-gate Catalyst flows shuffle the mail);
     //  - q99: the broadcast pid-offset table is ONE ROW PER RANGE
     //    PARTITION (partition-count metadata, ~KBs at any data scale);
     //    the boundedness heuristic can't see that pid is
@@ -164,7 +155,6 @@ class PlanSpec extends SparkSpec {
       "q28_cosine_top_pairs", "q46_embed_dedup",
       "q33_heroic_on_orders", "q33b_heroic_deep", "q34_mse_on_orders",
       "q77_robust_clip",
-      "q85_pagerank", "q85b_weighted_pagerank", "q90_sssp", "q98_label_prop",
       "q99_rank_histogram", "q103_ks_test")
     val offenders = for {
       (name, q) <- SparkEntry.queries.toSeq.sortBy(_._1)
