@@ -1,11 +1,14 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.util.Try
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.engine.GraftSession
+import graft.tools.Profile
 
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query wall
@@ -15,260 +18,65 @@ import graft.engine.GraftSession
   * as args restricts the run to that subset (local iteration aid; the
   * driver always runs the full set).
   *
-  * Hygiene: ALL caches (memoized tables, near-dup intermediates, any
-  * persisted block) are cleared between queries, so every number is the
-  * query's own self-contained cost — order-independent and free of
-  * accumulated memory pressure. A failed query records NO time; failures
-  * are listed in the JSON, `n_ok` counts the timed queries (so totals
-  * are only compared across equal query sets), and the exit code flips
-  * to 1 (loud, but the artifact still lands).
+  * Measurement is graft.tools.Profile's run loop: each query runs
+  * [[Profile.DefaultReps]] times, every run from reset caches, and the
+  * artifact commits the min-wall run with that run's metrics. The first
+  * run doubles as the query's warm-up (class loading, codegen, JIT) and
+  * min-of-N discards it; host noise that stretches one run is discarded
+  * the same way, and `attempt_secs` keeps every wall. Because every
+  * number is the query's own self-contained cost, it is
+  * order-independent and free of accumulated memory pressure.
   *
-  * One deliberate exception to the reset rule: q37 consumes q25's
-  * verified near-dup pair frame as its edge list, and in any real
-  * session the memoized frame is shared — so the bench pre-builds the
-  * pairs UNTIMED after the reset and times q37 as the INCREMENT over
-  * q25 (the clustering itself). The pair pipeline's full cost is
-  * exactly q25's own number; queries timed this way are declared in the
-  * JSON's `incremental` list and the accounting is documented in
-  * BASELINE.md.
+  * A query any of whose runs fails records NO time: it is listed in
+  * `errors`, `n_ok` counts the timed queries (so totals are only
+  * compared across equal query sets), and the exit code flips to 1
+  * (loud, but the artifact still lands).
   *
-  * Per-query `spill_bytes` / `shuffle_bytes` / `peak_mem_bytes` come
-  * from a TaskEnd listener (memory+disk spill, shuffle read+write, max
-  * per-task peak execution memory): wall time alone can't distinguish a
-  * bad plan from environment memory pressure — the round-2 bench showed
-  * one query swinging 21 s → 252 s on spill alone, with identical plans.
-  * `cpu_sec` (executor CPU), `gc_sec` (JVM GC) and `load_avg` (1-min
-  * /proc/loadavg sampled as the query ends) close the remaining
-  * attribution gap, CPU contention: a query whose wall time balloons
-  * while its cpu_sec stays at its usual value and load_avg >> cores was
-  * starved by the machine, not by its plan (the round-4 driver bench
-  * showed shuffle-free scans at 20-60× local wall with flat
-  * spill/peak-mem and no way to prove the cause from the artifact).
-  * `machine_user/sys/steal_pct` (per-query /proc/stat deltas) then split
-  * a contended window into its cause: high sys = kernel churn (page
-  * reclaim / fs), high steal = hypervisor neighbors, high user with
-  * cpu_sec flat = another process on the box.
+  * One deliberate exception to the reset rule: some queries consume a
+  * frame another query builds, and in any real session the memoized
+  * frame is shared — so the bench pre-builds it UNTIMED after the reset
+  * and times the consumer as the INCREMENT over the query that carries
+  * the build. Those queries are listed in the JSON's `incremental` list
+  * with their carriers in `cost_carriers` (see [[prewarm]]).
   *
-  * Round 10: the witnesses now trigger a REACTION, not just a record —
-  * any query whose window flags contended, jvm_degraded, or suspect
-  * (cpu_inflation 1.8-4×) is re-run once after a 10 s backoff and the
-  * faster attempt is committed, with both walls and the retry reason in
-  * the artifact (`retried` / `attempt_secs` / `n_retried`). The
-  * headline total is thus a measurement of the engine, not of the
-  * host's weather, and every residual flag survived TWO samples.
-  *
-  * Round 11: the in-place retry can only re-sample the same weather
-  * (r10's q96 committed 5.81 s with both attempts degraded vs 0.87 s
-  * clean), so after the main loop an END-OF-SUITE SWEEP re-measures
-  * every query whose committed attempt still carries a flag — by then
-  * the degraded window has decorrelated (minutes and many queries
-  * later) — and commits the best of ALL attempts (`swept` / `n_swept`;
-  * `attempt_secs` carries the full wall history; `n_residual_flagged`
-  * counts committed attempts that stayed flagged through the sweep).
-  * The artifact also carries `mode` and a `clean_snapshot` pointer
-  * (path + headline total of the committed quiet-machine snapshot) so
-  * committed-vs-clean is computable in place, not prose-linked.
-  */
+  * Per query the artifact also carries, from the committed run,
+  * executor `cpu_sec` and `gc_sec`, `spill_bytes` (memory + disk),
+  * `shuffle_bytes` (read + write), `peak_mem_bytes` (max per-task peak
+  * execution memory), `jobs` and `stages`: wall time alone can't tell a
+  * bad plan from environment memory pressure or CPU contention. One
+  * run-level `host` object records the cores, the max heap, the peak
+  * 1-min load average and the machine's steal % over the whole run. */
 object Bench {
 
-  /** The driver's canonical full-bench fixture. Every probe tool and the
-    * round-stamp gate share this ONE definition (round-8 advice: the
-    * literal was scattered, so a relocated fixture would silently stop
-    * stamping round artifacts). */
+  /** The canonical full-bench fixture, shared by every tool and by the
+    * round-stamp gate. */
   private[graft] val DriverSfDir = "/root/testdata/sf0.1"
 
-  /** Drops every memo cache a query run can leave behind (TextOps'
-    * frame memos, Tables' cached frames, the catalog cache), so the
-    * next timed run pays its own builds. graft.tools.Profile shares it. */
-  private[graft] def resetCaches(spark: SparkSession): Unit = {
-    graft.queries.TextOps.resetCaches()
-    graft.engine.Tables.clearCache()
-    spark.catalog.clearCache()
-  }
-
-  /** Sums task metrics between [[reset]] calls (single-JVM local mode:
-    * one bus, benchmark runs queries strictly sequentially). */
-  private final class MetricsListener extends SparkListener {
-    val spill = new AtomicLong
-    val shuffle = new AtomicLong
-    val peakMem = new AtomicLong
-    val cpuNs = new AtomicLong
-    val gcMs = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        shuffle.addAndGet(m.shuffleReadMetrics.totalBytesRead
-          + m.shuffleWriteMetrics.bytesWritten)
-        peakMem.getAndAccumulate(m.peakExecutionMemory, math.max)
-        cpuNs.addAndGet(m.executorCpuTime)
-        gcMs.addAndGet(m.jvmGCTime)
-      }
-    }
-    def reset(): Unit = {
-      spill.set(0); shuffle.set(0); peakMem.set(0); cpuNs.set(0); gcMs.set(0)
-    }
-  }
-
-  /** 1-minute load average (whole machine, not just this JVM): the
-    * contention witness wall-time math can't provide. -1 if unreadable
-    * (non-Linux). */
-  private def loadAvg(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  /** CPU time of this whole JVM (all threads), ns; -1 if the platform
-    * does not report it. */
-  private def processCpuNs(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-      case _ => -1L
-    }
-
-  /** Whole-machine CPU jiffies (user, system, idle, steal) from
-    * /proc/stat; per-query DELTAS of these separate the three remaining
-    * confounders load_avg conflates: our own user-space compute, kernel
-    * churn (page reclaim / fs — observed as 60%+ sys spikes with LOW
-    * user during a round-5 470 s bench flap on an otherwise idle box),
-    * and hypervisor steal. All -1 if unreadable. */
-  private def cpuJiffies(): Array[Long] =
-    try {
-      val f = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat"))).linesIterator.next().split("\\s+")
-      // fields: cpu user nice system idle iowait irq softirq steal ...
-      Array(f(1).toLong + f(2).toLong, f(3).toLong + f(6).toLong + f(7).toLong,
-        f(4).toLong + f(5).toLong, f(8).toLong)
-    } catch { case _: Throwable => Array(-1L, -1L, -1L, -1L) }
-
-  /** (user%, sys%, steal%) of total machine CPU between two jiffy
-    * snapshots; (-1, -1, -1) when unreadable or no time elapsed. */
-  private def cpuPct(a: Array[Long], b: Array[Long]): (Double, Double, Double) = {
-    if (a(0) < 0 || b(0) < 0) return (-1.0, -1.0, -1.0)
-    val d = Array.tabulate(4)(i => (b(i) - a(i)).toDouble)
-    val tot = d.sum
-    if (tot <= 0) (-1.0, -1.0, -1.0)
-    else (100 * d(0) / tot, 100 * d(1) / tot, 100 * d(3) / tot)
-  }
-
-  // ── JVM-degradation witnesses (round 8) ──
-  // The r8 driver bench ran with the JIT effectively off: executor
-  // cpu_sec inflated ~100× on the text family (q82b 19.8 → 2175 cpu-s)
-  // while the machine-level contention witnesses stayed silent —
-  // external load can steal WALL time but cannot inflate the executor's
-  // own CPU time, so cpu_sec >> the committed local baseline is the
-  // JVM's self-incrimination. Occupancy of the JIT code cache and
-  // metaspace per query names the usual culprit (code-cache exhaustion
-  // stops compilation; everything thereafter runs interpreted).
-
-  /** Used/committed occupancy (%) of the JIT CodeHeap pools; -1 if the
-    * pools are unreadable. Near 100 with -XX:+UseCodeCacheFlushing on
-    * means compilation is being throttled by evictions; near 100
-    * WITHOUT it means the JIT has stopped compiling entirely. */
-  private def codeCachePct(): Double = {
-    import scala.jdk.CollectionConverters._
-    val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-      .asScala.filter(_.getName.startsWith("CodeHeap"))
-    if (pools.isEmpty) return -1.0
-    val used = pools.map(_.getUsage.getUsed.toDouble).sum
-    val cap = pools.map { p =>
-      val u = p.getUsage; math.max(u.getMax, u.getCommitted).toDouble
-    }.sum
-    if (cap <= 0) -1.0 else 100.0 * used / cap
-  }
-
-  /** Metaspace used MB (janino emits one class set per distinct plan
-    * shape; this is the other pool a long-lived bench JVM can exhaust). */
-  private def metaspaceMb(): Double = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .find(_.getName == "Metaspace")
-      .map(_.getUsage.getUsed / 1048576.0).getOrElse(-1.0)
-  }
-
-  /** One flat {"name":num,...} object extracted from a committed bench
-    * snapshot by key. Hand-rolled (no JSON lib on the main classpath,
-    * and the file is bench-authored so the shape is fixed). Empty map
-    * when absent/unparsable — witnesses degrade to -1/false, never
-    * fail the bench. */
-  private def baselineMap(path: String, key: String): Map[String, Double] =
-    try {
-      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-      val tag = "\"" + key + "\":{"
-      val i = txt.indexOf(tag)
-      if (i < 0) Map.empty
-      else txt.substring(i + tag.length, txt.indexOf('}', i)).split(",").iterator
-        .map(_.split(":")).collect {
-          case Array(k, v) =>
-            k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toDouble
-        }.toMap
-    } catch { case _: Throwable => Map.empty[String, Double] }
-
-  /** Per-query cpu_sec from the committed local snapshot — the
-    * denominator of the cpu_inflation witness. */
-  private[graft] def baselineCpu(
-      path: String = "docs/BENCH_local_sf0.1.json"): Map[String, Double] =
-    baselineMap(path, "cpu_sec")
-
-  /** Per-query wall seconds from the committed local snapshot — the
-    * denominator of the wall_inflation witness (round 14): the r13
-    * driver artifact carried +17.5 s across four UNTOUCHED queries
-    * (q92–q95, 0.3–0.7 s clean walls committed at 2.7–9.1 s) and no
-    * witness fired — ambient stalls inflate wall without inflating
-    * executor CPU, sys%, steal%, or foreign user%. */
-  private[graft] def baselineWall(
-      path: String = "docs/BENCH_local_sf0.1.json"): Map[String, Double] =
-    baselineMap(path, "queries")
-
-  /** Headline `"value":N` of a committed bench snapshot (same
-    * hand-rolled discipline as [[baselineCpu]]); -1 when absent. */
-  private[graft] def snapshotTotal(path: String): Double =
-    try {
-      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-      val i = txt.indexOf("\"value\":")
-      if (i < 0) -1.0
-      else txt.substring(i + 8).takeWhile(c => c != ',' && c != '}').toDouble
-    } catch { case _: Throwable => -1.0 }
-
   /** Untimed per-query setup run AFTER the cache reset — declares the
-    * query incremental over the frames the warmer builds. Accounting
-    * (BASELINE.md): q37/q37b ride q25's pair pipeline (q25's own number
-    * IS the pipeline's full cost — a session's memo makes the second
-    * consumer free, which is exactly how a user pays); q71 rides the
-    * SAME exact pair frame (round 13: its near-dup stage switched from
-    * the LSH finder to q25's exact jaccardPairs in round 12, but the
-    * prewarm still built the orphaned LSH frame — so the timed q71 paid
-    * the full exact pair build ON TOP of an unused LSH build; at 100×
-    * that mis-accounting was 316.8 s of q71's 353.3 s wall, all of it
-    * q25's own declared cost); q85/q90/q98 ride the memoized
-    * co-purchase edge frame whose full build cost is carried by
-    * q88 — the designated carrier, which does NOT prewarm and pays the
-    * build standalone (round 9; its DuckDB counterpart also rebuilds
-    * the edges in-statement, so the carrier pairing stays fair). q85b
-    * builds its own WEIGHTED edge frame and pays it itself. Each
-    * rider's timed number is its own increment: CC rounds, windows,
-    * PageRank rounds, the curation stages — never the shared frame
-    * twice. */
+    * query incremental over the frames the warmer builds. q37/q37b/q71
+    * ride q25's exact near-dup pair frame (q25's own number IS the
+    * pipeline's full cost — a session's memo makes the second consumer
+    * free, which is exactly how a user pays). q85/q90/q98 ride the
+    * memoized co-purchase edge frame whose full build cost is carried
+    * by q88 — the designated carrier, which does NOT prewarm and pays
+    * the build standalone (its DuckDB counterpart also rebuilds the
+    * edges in-statement, so the carrier pairing stays fair). q85b
+    * builds its own WEIGHTED edge frame and pays it itself. Each rider's
+    * timed number is its own increment: CC rounds, windows, PageRank
+    * rounds, the curation stages — never the shared frame twice. */
   private val prewarm: Map[String, (SparkSession, String) => Unit] = Map(
     "q37_dup_clusters" -> ((s, d) => { graft.queries.TextOps.jaccardPairs(s, d); () }),
     "q37b_cluster_reps" -> ((s, d) => { graft.queries.TextOps.jaccardPairs(s, d); () }),
     "q71_curate_corpus" -> ((s, d) => { graft.queries.TextOps.jaccardPairs(s, d); () }),
-    // round 9: q88 is the graph family's designated COST CARRIER — its
-    // number includes the shared co-purchase edge-frame build (and its
-    // DuckDB counterpart likewise rebuilds the edges in-statement, so
-    // the carrier comparison stays apples-to-apples); q85/q90/q98 ride
-    // as increments. Previously q85 carried the build, which left the
-    // most PageRank-constrained query holding the one shared cost.
     "q85_pagerank" -> ((s, d) => { graft.queries.Graph.coPurchaseEdges(s, d); () }),
     "q90_sssp" -> ((s, d) => { graft.queries.Graph.coPurchaseEdges(s, d); () }),
     "q98_label_prop" -> ((s, d) => { graft.queries.Graph.coPurchaseEdges(s, d); () }))
 
   /** Which timed query CARRIES the shared frame each incremental query
-    * rides (emitted as `cost_carriers` in the artifact): an incremental
-    * query's COMPOSED-COLD wall — what a session running it alone would
-    * pay — is bounded by its own wall + its carrier's wall, computable
-    * in place by any artifact reader instead of via prose in
-    * BASELINE.md. */
+    * rides (emitted as `cost_carriers`): an incremental query's
+    * COMPOSED-COLD wall — what a session running it alone would pay, and
+    * what Profile's CLI measures — is bounded by its own wall + its
+    * carrier's wall, computable in place by any artifact reader. */
   private val carrier: Map[String, String] = Map(
     "q37_dup_clusters" -> "q25_jaccard_neardup",
     "q37b_cluster_reps" -> "q25_jaccard_neardup",
@@ -277,356 +85,103 @@ object Bench {
     "q90_sssp" -> "q88_triangles",
     "q98_label_prop" -> "q88_triangles")
 
-  private[graft] final case class Timed(name: String, secs: Double, spill: Long,
-    shuffle: Long, peakMem: Long, cpuSec: Double, gcSec: Double, load: Double,
-    userPct: Double, sysPct: Double, stealPct: Double,
-    codeCache: Double, metaMb: Double, cpuBase: Double,
-    wallBase: Double = -1.0, procCpuSec: Double = -1.0) {
-    /** User-space machine CPU NOT attributable to this JVM during the
-      * query's window (own share ≈ own cpu-s / (wall · cores)). Own CPU
-      * is the process's CPU delta — executor tasks plus the driver, JIT
-      * and GC threads, which on a 4-core host alone read 39-80% "other"
-      * when only executor CPU was subtracted. Falls back to executor CPU
-      * when the process counter is unknown (-1). */
-    def otherUserPct(cores: Int): Double = {
-      val own = if (procCpuSec >= 0) procCpuSec else cpuSec
-      if (userPct < 0 || secs <= 0) -1.0
-      else math.max(0.0, userPct - 100.0 * own / (secs * cores))
+  /** The run each query commits: its min-wall run when every run
+    * succeeded; None when any run failed. */
+  private[graft] def committed(runs: Seq[Profile.Run]): Option[Profile.Run] =
+    if (runs.nonEmpty && runs.forall(_.ok)) Profile.best(runs) else None
+
+  /** 1-min load average; None where /proc is unreadable. */
+  private def load1m(): Option[Double] =
+    Try(Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble).toOption
+
+  /** (steal, total) jiffies of the whole machine from /proc/stat's
+    * aggregate cpu line (user nice system idle iowait irq softirq
+    * steal); None where /proc is unreadable. */
+  private def jiffies(): Option[(Long, Long)] = Try {
+    val f = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+")
+      .slice(1, 9).map(_.toLong)
+    (f(7), f.sum)
+  }.toOption
+
+  private def r3(d: Double): Double = math.rint(d * 1000) / 1000
+
+  /** Runs `selected` through Profile's loop, prints the full JSON and
+    * the compact summary line through `out` (both `{"metric":"total",…}`
+    * objects: the first and last lines a caller reads), and writes the
+    * full JSON to `docs/BENCH_driver_last.json` — plus the round-stamped
+    * copy when the run is the full suite at [[DriverSfDir]]. Returns every
+    * run. */
+  private[graft] def run(spark: SparkSession, sfDir: String,
+      selected: Seq[(String, Profile.QueryFn)], docs: Path,
+      out: String => Unit, log: String => Unit): Seq[Profile.Run] = {
+    val j0 = jiffies()
+    var peakLoad = Option.empty[Double]
+    val runs = Profile.runQueries(spark, sfDir, selected, Profile.DefaultReps, log = log,
+      setup = q => {
+        peakLoad = (peakLoad ++ load1m()).maxOption
+        prewarm.get(q).foreach(_(spark, sfDir))
+      })
+    val steal = for ((s0, t0) <- j0; (s1, t1) <- jiffies() if t1 > t0)
+      yield 100.0 * (s1 - s0) / (t1 - t0)
+    val names = selected.map(_._1)
+    val byQuery = names.map(q => q -> runs.filter(_.query == q))
+    val results = byQuery.flatMap { case (_, rs) => committed(rs) }
+    val failed = names.filterNot(results.map(_.query).toSet)
+    failed.foreach { q =>
+      val e = runs.find(r => r.query == q && !r.ok).flatMap(_.error)
+      log(s"[bench] $q failed: ${e.map(_.getMessage).orNull}")
     }
-    /** Environment-contention witness: true when the machine was doing
-      * substantial work that was not this query — foreign user-space
-      * load, kernel churn (page reclaim / fs), hypervisor steal, or a
-      * run queue far beyond the core count. 2× wall-time comparisons
-      * should discard or re-run flagged queries instead of absorbing
-      * the noise (the round-4 driver bench showed shuffle-free scans at
-      * 20-60× local wall from exactly these causes). Unknown (-1)
-      * inputs never flag. */
-    def contended(cores: Int): Boolean =
-      stealPct > 5 || sysPct > 20 || otherUserPct(cores) > 25 ||
-        load > 1.5 * cores
-    /** cpu_sec vs the committed local baseline's cpu_sec for this
-      * query; -1 when no comparable baseline (different SF, new query,
-      * or a sub-0.5-cpu-s baseline whose ratio would be noise). */
-    def cpuInflation: Double =
-      if (cpuBase < 0.5) -1.0 else cpuSec / cpuBase
-    /** The JVM's own degradation witness: this query burned ≥4× the
-      * baseline's executor CPU AND ≥5 extra cpu-s in absolute terms
-      * (the floor keeps run-to-run noise on small queries from
-      * flagging). External load cannot inflate executor CPU time, so a
-      * true flag here is the JVM (JIT off, code cache full), not
-      * neighbors — the witness the r8 driver bench lacked. */
-    def jvmDegraded: Boolean =
-      cpuInflation > 4.0 && (cpuSec - cpuBase) > 5.0
-    /** The gray zone between clean and jvm_degraded (round-9 advice:
-      * q60 ran 2.01× cpu inflation in the driver bench with no flag and
-      * no retry — a 2-4× band can hide a real regression). Suspect
-      * windows get the same single retry as contended ones; the 1 cpu-s
-      * absolute floor keeps sub-second queries' run-to-run noise from
-      * burning retries. */
-    def suspect: Boolean =
-      !jvmDegraded && cpuInflation > 1.8 && (cpuSec - cpuBase) > 1.0
-    /** User-space CPU-seconds the WHOLE MACHINE executed during this
-      * window per /proc/stat; -1 when unreadable. Upper-bounds what any
-      * user process — including this JVM's executor threads — can have
-      * truly burned. */
-    def machineUserCpuSec(cores: Int): Double =
-      if (userPct < 0 || secs <= 0) -1.0 else userPct / 100.0 * secs * cores
-    /** Counter-inconsistency witness (round 14, VERDICT r13 item 2 —
-      * the q92–q95 signature): the listener claims more executor CPU
-      * than the machine executed in user space over the same interval
-      * (q93 committed 8.11 claimed cpu-s inside a 0.6%-user window —
-      * physically impossible, so the window's numbers are garbage,
-      * whatever the host was doing). 2× slack covers jiffy granularity
-      * and listener-drain overhang; the 1 cpu-s floor keeps sub-second
-      * windows' rounding out. Unknown (-1) inputs never flag. */
-    def cpuPhantom(cores: Int): Boolean = {
-      val mu = machineUserCpuSec(cores)
-      mu >= 0 && cpuSec > 1.0 && cpuSec > 2.0 * mu
+    def obj[T](f: Profile.Run => T): String =
+      results.map(r => "\"" + r.query + "\":" + f(r)).mkString("{", ",", "}")
+    def strs(xs: Iterable[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = results.map(_.wallS).sum
+    val errs = strs(failed)
+    val walls = byQuery.map { case (q, rs) =>
+      s""""$q":""" + rs.map(r => if (r.ok) r.wallS.toString else "null").mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val carriers = carrier.view.filterKeys(names.contains)
+      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
+    val host = s"""{"cores":${Runtime.getRuntime.availableProcessors},""" +
+      s""""spark_cores":${spark.sparkContext.defaultParallelism},""" +
+      s""""max_heap_mb":${Runtime.getRuntime.maxMemory / 1048576},""" +
+      s""""load_1m_max":${peakLoad.fold("null")(r3(_).toString)},""" +
+      s""""steal_pct":${steal.fold("null")(r3(_).toString)}}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${results.size},""" +
+      s""""queries":${obj(_.wallS)},"attempt_secs":$walls,""" +
+      s""""cpu_sec":${obj(r => r3(r.cpuS))},"gc_sec":${obj(r => r3(r.gcS))},""" +
+      s""""spill_bytes":${obj(_.spill)},"shuffle_bytes":${obj(_.shuffleBytes)},""" +
+      s""""peak_mem_bytes":${obj(_.peakMem)},"jobs":${obj(_.jobs)},""" +
+      s""""stages":${obj(_.stages.size)},"incremental":${strs(prewarm.keys.filter(names.contains))},""" +
+      s""""cost_carriers":$carriers,"errors":$errs,"host":$host,"sf":"$sfDir"}"""
+    out(fullJson)
+    // a tail-truncated capture of the (long) full JSON loses the headline
+    // numbers, so the run also persists it and ends with a compact summary
+    // line; only the full suite at DriverSfDir stamps the round artifact,
+    // so a subset or scale-fixture run never clobbers the round's history
+    try {
+      Files.createDirectories(docs)
+      Files.writeString(docs.resolve("BENCH_driver_last.json"), fullJson + "\n")
+      if (names.size == SparkEntry.queries.size && sfDir == DriverSfDir)
+        RoundStamp.current().foreach { round =>
+          Files.writeString(docs.resolve(f"BENCH_driver_r$round%02d.json"), fullJson + "\n")
+        }
+    } catch { case NonFatal(e) =>
+      log(s"[bench] could not write ${docs.resolve("BENCH_driver_last.json")}: ${e.getMessage}")
     }
-    /** Wall vs the committed clean snapshot's wall for this query; -1
-      * when no comparable baseline. */
-    def wallInflation: Double =
-      if (wallBase < 0.05) -1.0 else secs / wallBase
-    /** Last-resort weather witness (round 14): the window ran >2× its
-      * committed clean wall AND ≥0.5 s over in absolute terms, yet no
-      * other witness fired — the r13 artifact shape where ambient
-      * stalls stretched untouched sub-second queries to 2.7–9.1 s with
-      * the machine nearly idle. Lowest retry priority: a causal witness
-      * (degraded JVM, contention, phantom counters) explains the wall
-      * better than a bare baseline comparison. A REAL code regression
-      * also trips this and simply re-measures once per pass, reproduces
-      * its wall, and stays residual-flagged — visible, never hidden:
-      * the retry commits the faster attempt, so an honest slowdown
-      * survives while weather does not. */
-    def wallInflated: Boolean =
-      wallInflation > 2.0 && (secs - wallBase) > 0.5
-    /** Why this window deserves a second attempt; None = clean. */
-    def retryReason(cores: Int): Option[String] =
-      if (jvmDegraded) Some("jvm_degraded")
-      else if (contended(cores)) Some("contended")
-      else if (cpuPhantom(cores)) Some("cpu_phantom")
-      else if (suspect) Some("suspect_cpu_inflation")
-      else if (wallInflated) Some("wall_inflated")
-      else None
+    val slowest = results.sortBy(-_.wallS).take(5)
+      .map(r => "\"" + r.query + "\":" + r.wallS).mkString("{", ",", "}")
+    out(s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${results.size},""" +
+      s""""errors":$errs,"slowest":$slowest,"full_json":"docs/BENCH_driver_last.json","sf":"$sfDir"}""")
+    runs
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DriverSfDir)
-    // the cpu_inflation denominator is only meaningful against the SAME
-    // fixture the committed snapshot measured; the 10× replica has its
-    // own committed snapshot (ProbeScaleAll is deterministic, so the
-    // fixture content is reproducible across containers) — without it
-    // every 10× witness read -1 and ambient-stretched windows sailed
-    // through unflagged (the q89 14.3 s blip in the round-10 artifact)
-    val snapshotPath =
-      if (sfDir == DriverSfDir) Some("docs/BENCH_local_sf0.1.json")
-      else if (sfDir == "/tmp/scaleall10") Some("docs/BENCH_local_10x.json")
-      else if (sfDir == "/tmp/scaleall30") Some("docs/BENCH_local_30x.json")
-      else None
-    val cpuBaseline = snapshotPath.map(baselineCpu).getOrElse(Map.empty)
-    val wallBaseline = snapshotPath.map(baselineWall).getOrElse(Map.empty)
+    val selected = SparkEntry.queries.toSeq
+      .filter { case (q, _) => args.isEmpty || args.contains(q) }.sortBy(_._1)
     val spark = GraftSession.get()
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    def reset(): Unit = resetCaches(spark)
-    // Warm the JVM once (classloading, codegen compiler, shuffle machinery)
-    // so per-query numbers measure the queries, not first-touch costs.
-    graft.engine.Tables.names.foreach(n =>
-      graft.engine.Tables.table(spark, sfDir, n).schema)
-    try SparkEntry.queries("q02_pricing_summary")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
-    }
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    // Per-query steady-state warmup (JMH discipline): run the SAME query
-    // once, untimed, against the smallest SF so its unique generated-code
-    // classes are janino-compiled and its hot paths JIT'd before the
-    // timed run. Measured effect: a first execution carries 2-5 s of
-    // one-time compilation that a steady-state engine (the 100 TB
-    // posture: long-lived executors, repeated plan shapes) never pays —
-    // e.g. q30 first/steady = 3.4 s / 0.6 s. Timed numbers therefore
-    // report per-query STEADY-STATE wall at the target SF; caches are
-    // fully reset in between so the timed run still pays its own builds.
-    val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir)
-      Option(p.getParent).map(_.resolve("sf0.001")).filter(d =>
-        java.nio.file.Files.isDirectory(d) &&
-          !java.nio.file.Files.isSameFile(d, p)).map(_.toString)
-    }
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    val nCores = Runtime.getRuntime.availableProcessors()
-    // one attempt: per-query sf0.001 steady-state warmup, full cache
-    // reset, prewarm, drain, timed run with all witnesses sampled
-    def attempt(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        warm: Boolean): Option[Timed] = {
-      if (warm) warmDir.foreach { wd =>
-        reset()
-        // NonFatal only: an OOM/fatal error here leaves the JVM degraded
-        // and must surface, not silently skew the timed run that follows
-        try fn(spark, wd).write.format("noop").mode("overwrite").save()
-        catch { case scala.util.control.NonFatal(e) => // timed run reports real failures
-          System.err.println(s"[bench] warmup $name failed: $e")
-        }
-      }
-      reset()
-      prewarm.get(name).foreach(_(spark, sfDir))
-      org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
-      listener.reset()
-      val j0 = cpuJiffies()
-      val p0 = processCpuNs()
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val secs = (System.nanoTime() - t0) / 1e9
-        val (userPct, sysPct, stealPct) = cpuPct(j0, cpuJiffies())
-        val p1 = processCpuNs()
-        org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
-        Some(Timed(name, secs, listener.spill.get(), listener.shuffle.get(),
-          listener.peakMem.get(), listener.cpuNs.get() / 1e9,
-          listener.gcMs.get() / 1e3, loadAvg(), userPct, sysPct, stealPct,
-          codeCachePct(), metaspaceMb(), cpuBaseline.getOrElse(name, -1.0),
-          wallBaseline.getOrElse(name, -1.0),
-          if (p0 < 0 || p1 < 0) -1.0 else (p1 - p0) / 1e9))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        failures += name
-        None
-      }
-    }
-    // React to the witnesses, don't just record them (VERDICT r9 item
-    // 1: two consecutive committed benches misrepresented the engine —
-    // r8 an unwitnessed JIT death, r9 three witnessed-but-unretried
-    // contended windows inflating the total 23%). Any window flagged
-    // contended / jvm_degraded / suspect gets ONE more attempt after a
-    // short backoff (neighbors drain; nothing here can fix a full code
-    // cache, but the second sample proves whether the flag was the
-    // query or the weather); the BETTER (faster) attempt is kept for
-    // every headline field and ALL walls + the reason land in the
-    // artifact (`retried`, `attempt_secs`) so a judge can audit the
-    // choice. A failed retry keeps the first attempt.
-    val retried = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val attemptSecs = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
-    // an attempt that fails must not turn an already-measured query
-    // into an error: roll the failure log back and keep what we have
-    def reAttempt(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Timed] = {
-      val nFailures = failures.size
-      val again = attempt(name, fn, warm = false)
-      if (again.isEmpty && failures.size > nFailures)
-        failures.remove(failures.size - 1)
-      again
-    }
-    val firstPass = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      attempt(name, fn, warm = true).map { first =>
-        attemptSecs(name) = Vector(first.secs)
-        first.retryReason(nCores) match {
-          case Some(reason) =>
-            System.err.println(
-              f"[bench] $name flagged $reason (${first.secs}%.2f s) — retrying once")
-            Thread.sleep(10000) // backoff: let a contended window drain
-            retried(name) = reason
-            reAttempt(name, fn) match {
-              case Some(s) =>
-                attemptSecs(name) = Vector(first.secs, s.secs)
-                if (s.secs < first.secs) s else first
-              case None =>
-                // -1.0 marks an ERRORED re-attempt in the in-memory
-                // history (serialized as JSON null); without it a name
-                // in `retried` would show a single wall and the
-                // full-history claim the artifact rests on breaks
-                attemptSecs(name) = Vector(first.secs, -1.0)
-                first
-            }
-          case None => first
-        }
-      }
-    }
-    // End-of-suite re-sweep (VERDICT r10 item 1): the in-place retry
-    // samples the SAME weather twice — r10's q96 committed 5.81 s with
-    // BOTH attempts degraded vs 0.87 s clean, and the headline sat 1.32×
-    // above the clean snapshot for three rounds running. By suite end
-    // the degraded window has usually decorrelated (minutes later, other
-    // queries ran clean in between), so every query whose COMMITTED
-    // attempt still carries a flag gets re-measured once per sweep pass
-    // (≤2 passes, only while flags remain) and the best of ALL attempts
-    // is committed. Full attempt history stays in `attempt_secs`;
-    // sweep-pass reasons land in `swept` so a judge can audit which
-    // numbers came from the sweep.
-    val committed = scala.collection.mutable.LinkedHashMap.empty[String, Timed]
-    firstPass.foreach(t => committed(t.name) = t)
-    val swept = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    var sweepPass = 0
-    while (sweepPass < 2 &&
-        committed.values.exists(_.retryReason(nCores).isDefined)) {
-      sweepPass += 1
-      val residual = committed.values.toSeq
-        .flatMap(t => t.retryReason(nCores).map(r => (t.name, r)))
-      System.err.println(s"[bench] end-of-suite sweep $sweepPass: " +
-        s"${residual.size} committed windows still flagged " +
-        residual.map { case (n, r) => s"$n($r)" }.mkString("[", ", ", "]"))
-      Thread.sleep(10000)
-      residual.foreach { case (name, reason) =>
-        swept(name) = reason
-        selected.get(name).foreach { fn =>
-          reAttempt(name, fn) match {
-            case Some(again) =>
-              attemptSecs(name) = attemptSecs.getOrElse(name, Vector.empty) :+ again.secs
-              if (again.secs < committed(name).secs) committed(name) = again
-            case None => // errored sweep attempt: keep the wall history honest
-              attemptSecs(name) = attemptSecs.getOrElse(name, Vector.empty) :+ -1.0
-          }
-        }
-      }
-    }
-    val results = firstPass.map(t => committed(t.name))
-    // Mechanical link to the clean snapshot this run's witnesses were
-    // judged against (VERDICT r10 item 7): the committed artifact and
-    // BASELINE.md's clean narrative were only prose-linked before. The
-    // pointer names the snapshot path and its headline total so a
-    // reader of BENCH_r{N}.json can compute committed/clean in place.
-    val cleanPath =
-      if (sfDir == DriverSfDir) Some("docs/BENCH_local_sf0.1.json")
-      else if (sfDir == "/tmp/scaleall10") Some("docs/BENCH_local_10x.json")
-      else if (sfDir == "/tmp/scaleall30") Some("docs/BENCH_local_30x.json")
-      else None
-    val cleanSnapshotJson = cleanPath.map { p =>
-      s""""clean_snapshot":{"path":"$p","total":${snapshotTotal(p)}},"""
-    }.getOrElse("")
-    def obj[T](f: Timed => T): String =
-      results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
-    def r3(d: Double): Double = math.rint(d * 1000) / 1000
-    val total = results.map(_.secs).sum
-    val errs = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val incr = prewarm.keys.filter(selected.contains)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val carriers = carrier.view.filterKeys(selected.contains)
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    // an errored attempt is JSON null, not a -1.0 sentinel a downstream
-    // min/mean over the wall history would silently absorb (ADVICE r12)
-    def walls(v: Vector[Double]): String =
-      v.map(x => if (x < 0) "null" else x.toString).mkString("[", ",", "]")
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${results.size},""" +
-      s""""queries":${obj(_.secs)},"spill_bytes":${obj(_.spill)},""" +
-      s""""shuffle_bytes":${obj(_.shuffle)},"peak_mem_bytes":${obj(_.peakMem)},""" +
-      s""""cpu_sec":${obj(r => r3(r.cpuSec))},"gc_sec":${obj(r => r3(r.gcSec))},""" +
-      s""""load_avg":${obj(_.load)},"machine_user_pct":${obj(r => r3(r.userPct))},""" +
-      s""""machine_sys_pct":${obj(r => r3(r.sysPct))},""" +
-      s""""machine_steal_pct":${obj(r => r3(r.stealPct))},""" +
-      s""""contended":${obj(_.contended(nCores))},""" +
-      s""""n_contended":${results.count(_.contended(nCores))},""" +
-      s""""code_cache_pct":${obj(r => r3(r.codeCache))},""" +
-      s""""metaspace_mb":${obj(r => r3(r.metaMb))},""" +
-      s""""cpu_inflation":${obj(r => r3(r.cpuInflation))},""" +
-      s""""cpu_phantom":${obj(_.cpuPhantom(nCores))},""" +
-      s""""n_cpu_phantom":${results.count(_.cpuPhantom(nCores))},""" +
-      s""""wall_inflation":${obj(r => r3(r.wallInflation))},""" +
-      s""""n_wall_inflated":${results.count(_.wallInflated)},""" +
-      s""""jvm_degraded":${obj(_.jvmDegraded)},""" +
-      s""""n_jvm_degraded":${results.count(_.jvmDegraded)},"incremental":$incr,""" +
-      s""""cost_carriers":$carriers,""" +
-      s""""retried":${retried.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")},""" +
-      s""""attempt_secs":${attemptSecs.collect { case (k, v) if v.size > 1 =>
-        s""""$k":${walls(v)}""" }.mkString("{", ",", "}")},""" +
-      s""""n_retried":${retried.size},""" +
-      s""""swept":${swept.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")},""" +
-      s""""n_swept":${swept.size},""" +
-      s""""n_residual_flagged":${results.count(_.retryReason(nCores).isDefined)},""" +
-      s""""mode":"committed",$cleanSnapshotJson""" +
-      s""""errors":$errs,"sf":"$sfDir"}"""
-    println(fullJson)
-    // artifact self-defense: a tail-truncated capture of the (long) full
-    // JSON loses the headline numbers, so ALSO end with a compact summary
-    // line (itself a valid {"metric":"total",...} object) and persist the
-    // full JSON to a committed path
-    val slowest = results.sortBy(-_.secs).take(5)
-      .map(r => "\"" + r.name + "\":" + r.secs).mkString("{", ",", "}")
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("docs"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("docs/BENCH_driver_last.json"), fullJson + "\n")
-      // ALSO write a round-stamped copy so per-query history survives in
-      // git (the round-6 judge could not diff r5→r6 beyond the slowest-5
-      // because last.json is overwritten). Round inference is shared
-      // with the StreamsSpec audit ([[RoundStamp]]). ONLY full runs at
-      // the driver's sf0.1 dir stamp the round artifact (round-7
-      // advice, tightened round-8): a filtered/subset run OR a full run
-      // against a scale fixture (10× replicas live under /tmp) would
-      // otherwise clobber the round's sf0.1 history.
-      if (selected.size == SparkEntry.queries.size && sfDir == DriverSfDir)
-        RoundStamp.current().foreach { round =>
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(f"docs/BENCH_driver_r$round%02d.json"), fullJson + "\n")
-        }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write docs/BENCH_driver_last.json: ${e.getMessage}")
-    }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${results.size},""" +
-      s""""errors":$errs,"slowest":$slowest,"full_json":"docs/BENCH_driver_last.json","sf":"$sfDir"}""")
-    spark.stop()
-    if (failures.nonEmpty) sys.exit(1)
+    val runs = try run(spark, sfDir, selected, Paths.get("docs"), println, System.err.println)
+      finally spark.stop()
+    if (runs.exists(!_.ok)) sys.exit(1)
   }
 }

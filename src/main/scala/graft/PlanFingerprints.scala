@@ -126,11 +126,9 @@ object PlanFingerprints {
     // finalized AQE stages inside memoized frames (isFinalPlan markers,
     // materialized query-stage subtrees) that print differently from the
     // fresh build. Suites run sequentially in the forked test JVM, so
-    // the reset is safe — later suites re-memoize on first access (the
-    // Bench.reset discipline).
-    graft.queries.TextOps.resetCaches()
-    graft.engine.Tables.clearCache()
-    spark.catalog.clearCache()
+    // the reset is safe — later suites re-memoize on first access, as
+    // every profiled run does after the same reset.
+    graft.tools.Profile.resetCaches(spark)
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val df = fn(spark, SfDir)
       val aux = auxPlan(name, spark, SfDir)

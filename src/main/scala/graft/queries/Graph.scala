@@ -56,12 +56,6 @@ object Graph {
     * partitionings — the q64/q67 determinism posture applied to an
     * iterative dataflow. */
   private val Digits = 12
-  /** The ORACLE's contribution decimal precision 17 (not 30): values
-    * are <= 1.0 at scale 12, so precision 17 loses nothing — and DuckDB
-    * keeps the decimals in its int64 fast path. The Spark side goes one
-    * step further and sums the long numerators directly (see
-    * [[pagerankFlow]]) — identical values, no decimal at all. */
-
   /** Symmetrized co-purchase edge list (src, dst, outdeg): distinct
     * (order, part) incidences self-joined on the order key, both
     * directions kept, plus THE SRC NODE'S OUTDEGREE folded onto each
@@ -295,7 +289,10 @@ object Graph {
     * ~1, so Σk ~ 10^12 — no overflow at any graph size) while the hash
     * aggregate updates a plain long instead of allocating a BigDecimal
     * per edge. Same exactness, same order-invariance (GraphSpec's
-    * bitwise replay), a fraction of the CPU. */
+    * bitwise replay), a fraction of the CPU. The oracle's own decimal
+    * is DECIMAL(17,12), not 30: values are <= 1.0 at scale 12, so
+    * precision 17 loses nothing, and DuckDB keeps the decimals in its
+    * int64 fast path. */
   private def pagerankFlow(edges: DataFrame, n: Long,
       kExprOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
     val scaleF = math.pow(10, Digits)
@@ -364,15 +361,6 @@ object Graph {
     ids
   }
 
-  /** The shared round loop: `partials` maps a broadcast rank vector to
-    * the (node-index, long-numerator-partial) frame for one round;
-    * rounds 1..R-1 merge node-sized sums on the cluster and update the
-    * rank vector on the driver (the same IEEE expression the Column
-    * path evaluates — floor((tele + 0.85·(Σk/10^12))·10^12 + 0.5)/10^12);
-    * the final round stays distributed through the SAME Catalyst cround
-    * so the output plan ends in-cluster. A node that received no mail
-    * is ABSENT from the oracle's generation (inner join semantics):
-    * the kernel marks it NaN and its out-edges go silent next round. */
   /** Primitive-packed collect of a two-column (Int, Long) frame — ONE
     * (indexes, values) block per partition instead of n boxed Rows.
     * The packCsr lesson applied to the per-round kernel merges
@@ -390,6 +378,15 @@ object Graph {
       Iterator.single((is.result(), vs.result()))
     }.collect()
 
+  /** The shared round loop: `partials` maps a broadcast rank vector to
+    * the (node-index, long-numerator-partial) frame for one round;
+    * rounds 1..R-1 merge node-sized sums on the cluster and update the
+    * rank vector on the driver (the same IEEE expression the Column
+    * path evaluates — floor((tele + 0.85·(Σk/10^12))·10^12 + 0.5)/10^12);
+    * the final round stays distributed through the SAME Catalyst cround
+    * so the output plan ends in-cluster. A node that received no mail
+    * is ABSENT from the oracle's generation (inner join semantics):
+    * the kernel marks it NaN and its out-edges go silent next round. */
   private def kernelRounds(s: SparkSession, ids: Array[Long], n: Long,
       partials: org.apache.spark.broadcast.Broadcast[Array[Double]] => DataFrame): DataFrame = {
     val tele = 0.15 / n
@@ -421,17 +418,6 @@ object Graph {
       .orderBy("node")
   }
 
-  /** Uniform-share kernel. The adjacency is built by RUN-GROUPING a
-    * single typed pass over the flat edge cache — not by collect_list,
-    * whose ObjectHashAggregate measured ~18 executor-cpu-s on the same
-    * 2.4M rows (per-row append + array re-copies). The cached frame is
-    * src-contiguous within partitions (the outdeg window sorted it),
-    * so runs are maximal in practice; correctness does NOT depend on
-    * it — a src split across runs contributes through two run rows
-    * whose k is the same pure function of (r, outdeg), and long sums
-    * are order-invariant. Node ids resolve to dense indexes ONCE at
-    * build (binary search per edge); rounds are then direct-indexed
-    * long adds. */
   /** The SHARED below-gate adjacency over [[coPurchaseEdges]]:
     * (srcIdx, outdeg, dstIdxs) object rows, memoized per session+dir so
     * q85/q90/q98 build it once (in the bench each rider pays it inside
@@ -481,6 +467,17 @@ object Graph {
     }
   }
 
+  /** Uniform-share kernel. The adjacency is built by RUN-GROUPING a
+    * single typed pass over the flat edge cache — not by collect_list,
+    * whose ObjectHashAggregate measured ~18 executor-cpu-s on the same
+    * 2.4M rows (per-row append + array re-copies). The cached frame is
+    * src-contiguous within partitions (the outdeg window sorted it),
+    * so runs are maximal in practice; correctness does NOT depend on
+    * it — a src split across runs contributes through two run rows
+    * whose k is the same pure function of (r, outdeg), and long sums
+    * are order-invariant. Node ids resolve to dense indexes ONCE at
+    * build (binary search per edge); rounds are then direct-indexed
+    * long adds. */
   private[graft] def pagerankKernelUniform(s: SparkSession, dir: String,
       edges: DataFrame, n: Long, nEdges: Long): DataFrame = {
     import s.implicits._
@@ -778,25 +775,6 @@ object Graph {
     else trianglesIntersect(e)
   }
 
-  /** q88's below-gate KERNEL (round 10): the same compact-forward
-    * merge-walk, with the oriented adjacency packed into a broadcast
-    * CSR (indptr + int indices — 4 B/edge; gate and trade analysis at
-    * [[TriangleCsrEdgeLimit]]) and the pivot sweep distributed over
-    * index ranges. Rationale: the production intersect dataflow's
-    * ~112 executor-cpu-s at sf0.1 is ~99% row machinery — the
-    * collect_list ObjectHashAggregate, the exploded edges each CARRYING
-    * their pivot's array through a shuffle (Σ outdeg⁺² longs encoded
-    * AND decoded), and per-row UnsafeArrayData access in the codegen'd
-    * intersect — while the merge-walk itself is ~400M int comparisons
-    * ≈ well under 1 cpu-s on primitive arrays. The kernel does ONE
-    * distributed pass over the oriented edges (local per-partition
-    * grouping; partial per-pivot groups are fine — they merge at CSR
-    * pack time on the driver, then each pivot's slice sorts once), and
-    * counts triangles + oriented wedges in a parallelize()d sweep over
-    * broadcast CSR slices. Pure integer counts — bit-determinism free;
-    * GraphSpec equates kernel ≡ intersect ≡ brute force. Past the gate
-    * the intersect dataflow is unchanged (its shuffle-hash shape is the
-    * 100 TB path). */
   /** Distributed-group-then-pack of an oriented edge RDD into a driver
     * CSR (indptr, indices over dense node indexes). Kept separate from
     * [[trianglesKernel]] so the REAL pack path's driver footprint can be
@@ -855,6 +833,25 @@ object Graph {
     (indptr, indices)
   }
 
+  /** q88's below-gate KERNEL (round 10): the same compact-forward
+    * merge-walk, with the oriented adjacency packed into a broadcast
+    * CSR (indptr + int indices — 4 B/edge; gate and trade analysis at
+    * [[TriangleCsrEdgeLimit]]) and the pivot sweep distributed over
+    * index ranges. Rationale: the production intersect dataflow's
+    * ~112 executor-cpu-s at sf0.1 is ~99% row machinery — the
+    * collect_list ObjectHashAggregate, the exploded edges each CARRYING
+    * their pivot's array through a shuffle (Σ outdeg⁺² longs encoded
+    * AND decoded), and per-row UnsafeArrayData access in the codegen'd
+    * intersect — while the merge-walk itself is ~400M int comparisons
+    * ≈ well under 1 cpu-s on primitive arrays. The kernel does ONE
+    * distributed pass over the oriented edges (local per-partition
+    * grouping; partial per-pivot groups are fine — they merge at CSR
+    * pack time on the driver, then each pivot's slice sorts once), and
+    * counts triangles + oriented wedges in a parallelize()d sweep over
+    * broadcast CSR slices. Pure integer counts — bit-determinism free;
+    * GraphSpec equates kernel ≡ intersect ≡ brute force. Past the gate
+    * the intersect dataflow is unchanged (its shuffle-hash shape is the
+    * 100 TB path). */
   private[graft] def trianglesKernel(s: SparkSession, dir: String,
       e: DataFrame): DataFrame = {
     import s.implicits._
