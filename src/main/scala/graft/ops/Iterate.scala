@@ -8,10 +8,13 @@ import org.apache.spark.storage.StorageLevel
   * encodes the discipline every iterative operator needs (persist each
   * generation as a leaf plan, keep exactly the last two generations,
   * one materializing action per round). Users:
-  * [[Heroic.fixedPoint]] (R8 heroic-score iteration) and
-  * [[graft.queries.TextOps.connectedComponents]] (q37 dup clusters);
-  * the next iterative operator gets the discipline for free instead of
-  * re-deriving it.
+  * [[graft.queries.TextOps.connectedComponents]] (q37 dup clusters) and
+  * [[graft.queries.TextOps.bpeMergeRules]] (q69/q72 merge learning),
+  * each past its driver-finish gate, where a generation is a table, not
+  * a driver-sized vector. (The heroic fixed point's generation IS a
+  * driver-sized vector, so [[Heroic.fixedPoint]] runs its own
+  * one-job-per-round kernel instead.) The next iterative operator gets
+  * the discipline for free instead of re-deriving it.
   *
   * Scale posture: each round is whatever plan `step` declares (the
   * combinator adds no shuffle of its own); the serial cost it does add

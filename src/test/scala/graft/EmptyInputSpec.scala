@@ -26,7 +26,8 @@ package graft
   *     (0/0 is undefined; triangle and wedge COUNTS stay 0, NOT NULL —
   *     the round-9 coalesce fix this battery pins).
   *   - q34 MSE: 0.0 — two empty score generations have zero divergence
-  *     (also what lets Heroic.fixedPoint converge on empty duels).
+  *     (Heroic.fixedPoint's kernel takes the same value, so it converges
+  *     at once on empty duels; FixedPointSpec pins that).
   *   - q90 SSSP: EMPTY result — an empty graph has no source node (the
   *     engine returns the well-typed empty table; the oracle SQL's
   *     min() would fabricate a NULL-node row, a shape no consumer can

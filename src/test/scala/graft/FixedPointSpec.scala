@@ -1,16 +1,21 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.collection.mutable
 
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.ops.Heroic
 
 /** R6–R8 end to end on duels logs generated here: Heroic.fixedPoint's
   * trajectory against a plain-Scala hash-map replay that shares no code
-  * with the engine. Needs no external fixture, so the fixed point's
-  * round count, MSE trajectory and final two generations are checked on
-  * every host. */
+  * with the engine, and against the Catalyst operators (Heroic.iterate,
+  * Heroic.mse) that q33, q33b and q34 run. Needs no external fixture, so
+  * the fixed point's round count, MSE trajectory, final two generations
+  * and job count per round are checked on every host. */
 class FixedPointSpec extends SparkSpec {
 
   import FixedPointSpec.Replay
@@ -79,26 +84,30 @@ class FixedPointSpec extends SparkSpec {
       extra: Int = 1): Replay = {
     val want = replay(log, alpha, eps, extra)
     val got = Heroic.fixedPoint(frame(log), alpha = alpha, eps = eps, extra = extra)
-    try {
-      assert(got.mses.length == want.mses.length,
-        s"rounds: engine ${got.mses} vs oracle ${want.mses}")
-      got.mses.zip(want.mses).zipWithIndex.foreach { case ((g, w), i) =>
-        assert(close(g, w), s"round ${i + 1} MSE $g vs oracle $w")
-      }
-      Seq("secondLast" -> (got.secondLast, want.secondLast), "last" -> (got.last, want.last))
-        .foreach { case (name, (df, exp)) =>
-          val g = scores(df)
-          assert(g.keySet == exp.keySet, s"$name key sets differ")
-          exp.foreach { case (p, v) => assert(close(g(p), v), s"$name($p) = ${g(p)} vs oracle $v") }
-        }
-    } finally {
-      got.secondLast.unpersist(); got.last.unpersist()
-    }
+    assertSameRun(got, want.mses, want.secondLast, want.last, "oracle")
     want
   }
 
+  /** `got`'s MSE trajectory and last two generations equal `mses`,
+    * `secondLast` and `last` within 1e-9. */
+  private def assertSameRun(got: Heroic.FixedPoint, mses: Vector[Double],
+      secondLast: Map[Long, Double], last: Map[Long, Double], side: String): Unit = {
+    assert(got.mses.length == mses.length, s"rounds: engine ${got.mses} vs $side $mses")
+    got.mses.zip(mses).zipWithIndex.foreach { case ((g, w), i) =>
+      assert(close(g, w), s"round ${i + 1} MSE $g vs $side $w")
+    }
+    Seq("secondLast" -> (got.secondLast, secondLast), "last" -> (got.last, last))
+      .foreach { case (name, (df, exp)) =>
+        val g = scores(df)
+        assert(g.keySet == exp.keySet, s"$name key sets differ")
+        exp.foreach { case (p, v) => assert(close(g(p), v), s"$name($p) = ${g(p)} vs $side $v") }
+      }
+  }
+
+  private val seededLogs = Seq((11L, 400, 90), (12L, 150, 30), (13L, 900, 240))
+
   test("seeded logs: rounds, MSE trajectory and final generations equal the oracle") {
-    for ((seed, rows, players) <- Seq((11L, 400, 90), (12L, 150, 30), (13L, 900, 240))) {
+    for ((seed, rows, players) <- seededLogs) {
       val log = randomLog(seed, rows, players)
       assert(log.map(_._2).toSet.exists(p => !log.map(_._1).toSet(p)),
         "some player must be only ever challenged")
@@ -106,6 +115,44 @@ class FixedPointSpec extends SparkSpec {
       val rounds = check(log).mses.length
       assert(rounds >= 4, s"seed $seed converged in $rounds rounds; too short to test the loop")
     }
+  }
+
+  test("every round equals Heroic.iterate and Heroic.mse chained from initScores over staticJoin") {
+    for ((seed, rows, players) <- seededLogs) {
+      val duels = frame(randomLog(seed, rows, players))
+      val got = Heroic.fixedPoint(duels)
+      val static = Heroic.staticJoin(duels)
+      var cur = Heroic.initScores(duels)
+      var prev: DataFrame = null
+      // each generation is collected and re-read as a local frame, so
+      // every round plans one Catalyst iteration, not the whole chain
+      val mses = got.mses.map { _ =>
+        val next = scores(Heroic.iterate(static, cur)).toSeq.toDF("player", "hs")
+        val m = Heroic.mse(cur, next)
+        prev = cur
+        cur = next
+        m
+      }
+      assertSameRun(got, mses, scores(prev), scores(cur), "Catalyst")
+    }
+  }
+
+  test("each round is one Spark job: three more extra rounds run exactly three more jobs") {
+    val duels = frame(randomLog(11L, 400, 90))
+    def jobs(extra: Int): Int = {
+      val n = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Heroic.fixedPoint(duels, extra = extra)
+        BusDrain.drain(spark.sparkContext)
+        n.get
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (base, more) = (jobs(1), jobs(4))
+    assert(more - base == 3, s"extra = 1 ran $base jobs, extra = 4 ran $more")
   }
 
   test("a stricter eps and more extra rounds follow the oracle for longer") {

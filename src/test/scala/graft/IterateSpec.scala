@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.ops.Iterate
 
 /** The shared driver-loop combinator's contract (graft.ops.Iterate):
-  * both iterative operators (Heroic.fixedPoint, connectedComponents)
-  * lean on these properties, so they are pinned once here rather than
-  * re-proven per operator. */
+  * both of its users (connectedComponents and BPE merge learning past
+  * their driver-finish gates) lean on these properties, so they are
+  * pinned once here rather than re-proven per operator. */
 class IterateSpec extends SparkSpec {
 
   import spark.implicits._

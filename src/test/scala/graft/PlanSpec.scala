@@ -129,9 +129,9 @@ class PlanSpec extends SparkSpec {
     // Exempt, with the bound enforced elsewhere:
     //  - q28/q46: explicit runtime size gate (VectorOps.cosinePairs) —
     //    past BruteForceBroadcastLimit nothing broadcasts (DedupSpec);
-    //  - heroic queries: avg/hs are one row per player; past broadcast
-    //    scale Heroic.iterate(broadcastHs = false) is the documented,
-    //    property-tested shuffle fallback (PropertySpec);
+    //  - heroic queries (q33, q33b, q34): avg/hs are one row per player,
+    //    and these queries build their duels from o_custkey % 97, so
+    //    they have at most 97 players by construction;
     //  - q77: the med/mad stat frames are one row per language (group
     //    cardinality, not corpus size — LayoutSpec gates the semantics);
     //  - (q88 needed an exemption while its closure check broadcast

@@ -72,28 +72,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("heroic iteration: shuffle-join fallback (broadcastHs=false) equals the broadcast path") {
-    for ((seed, rows, players) <- tables) {
-      val d = randomDuels(seed, rows, players)
-      val static = Heroic.staticJoin(d)
-      val hs0 = Heroic.initScores(d)
-      def canon(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9)))
-          .sortBy(_._1).toSeq
-      val bc = Heroic.iterate(static, hs0, alpha = 0.1, broadcastHs = true)
-      val sh = Heroic.iterate(static, hs0, alpha = 0.1, broadcastHs = false)
-      assert(canon(bc) == canon(sh))
-      // the fallback must not carry the broadcast hint on the hs side
-      // (static's own dim-avg hints remain — compare counts across paths)
-      def nHints(df: org.apache.spark.sql.DataFrame) =
-        df.queryExecution.analyzed.collect {
-          case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-        }.length
-      assert(nHints(sh) == nHints(bc) - 1,
-        "broadcastHs=false must leave the hs join strategy to the planner")
-    }
-  }
-
   test("aggregation results are invariant under repartitioning") {
     val dir = "/root/testdata/sf0.001"
     val base = graft.queries.EventOps.q19_tumbling_hour.fn(spark, dir).collect().toSeq
