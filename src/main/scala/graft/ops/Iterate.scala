@@ -8,9 +8,9 @@ import org.apache.spark.storage.StorageLevel
   * encodes the discipline every iterative operator needs (persist each
   * generation as a leaf plan, keep exactly the last two generations,
   * one materializing action per round). Users:
-  * [[graft.queries.TextOps.connectedComponents]] (q37 dup clusters) and
-  * [[graft.queries.TextOps.bpeMergeRules]] (q69/q72 merge learning),
-  * each past its driver-finish gate, where a generation is a table, not
+  * [[graft.queries.TextOps.componentsByPropagation]] (q37 dup clusters)
+  * and [[graft.queries.TextOps.bpeMergeRounds]] (q69/q72 merge
+  * learning), each the past side of its driver-finish gate, where a generation is a table, not
   * a driver-sized vector. (The heroic fixed point's generation IS a
   * driver-sized vector, so [[Heroic.fixedPoint]] runs its own
   * one-job-per-round kernel instead.) The next iterative operator gets
@@ -27,13 +27,13 @@ import org.apache.spark.storage.StorageLevel
   */
 object Iterate {
 
-  /** Last two generations (both still persisted — R8 emits the
-    * second-to-last table) and the number of rounds executed. `prev` is
-    * null only if zero rounds ran (maxRounds == 0). */
+  /** Last two generations (both still persisted) and the number of
+    * rounds executed. `prev` is null only if zero rounds ran
+    * (maxRounds == 0). */
   final case class Fix(prev: DataFrame, cur: DataFrame, rounds: Int)
 
   /** Run `step` from `init` until `measure` reports convergence or
-    * `maxRounds` is hit, then `extra` more rounds.
+    * `maxRounds` is hit.
     *
     *  - `init` must already be persisted (or be cheap): round 1 reads it
     *    through both `step` and `measure`; it is unpersisted when
@@ -50,27 +50,23 @@ object Iterate {
     *    the RDD); `measure` then runs its final stage.
     *  - `measure(cur, next)` MUST run an action on `next` — it is the
     *    round's single materializing action — and returns whether the
-    *    fixpoint is reached. It also runs on the `extra` rounds (verdict
-    *    ignored) so side effects like an MSE trajectory stay uniform.
+    *    fixpoint is reached.
     */
-  def loop(init: DataFrame, maxRounds: Long, extra: Int = 0)
+  def loop(init: DataFrame, maxRounds: Long)
       (step: (DataFrame, Int) => DataFrame)
       (measure: (DataFrame, DataFrame) => Boolean): Fix = {
     var prev: DataFrame = null
     var cur = init
     var it = 0
     var converged = false
-    def round(): Boolean = {
+    while (!converged && it < maxRounds) {
       it += 1
       val cached = PlanBridge.cut(step(cur, it)).persist(StorageLevel.MEMORY_AND_DISK)
-      val done = measure(cur, cached)
+      converged = measure(cur, cached)
       if (prev != null) prev.unpersist()
       prev = cur
       cur = cached
-      done
     }
-    while (!converged && it < maxRounds) converged = round()
-    (0 until extra).foreach(_ => round())
     Fix(prev, cur, it)
   }
 }

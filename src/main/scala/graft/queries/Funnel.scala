@@ -160,6 +160,11 @@ object Funnel {
       .orderBy("user_id")
   }
 
+  /** q104's bucket parameters, shared with the streaming twin
+    * ([[graft.streaming.Streams.rateLimitStream]]). */
+  private[graft] val RateCap = 21600000000L // 6 h of credit, in microseconds
+  private[graft] val RateCost = 10800000000L // each admitted event spends 3 h
+
   /** Q104 — token-bucket rate-limiter audit: per user, replay events in
     * the deterministic (ts, event_id) order against a token bucket
     * (capacity 6 h of credit, each event costs 3 h, refill = elapsed
@@ -180,11 +185,6 @@ object Funnel {
     * fold is O(events-per-user) with O(1) state. The streaming twin of
     * this shape is a transformWithState ValueState — the same machine
     * the ledger already demonstrates. */
-  /** q104's bucket parameters, shared with the streaming twin
-    * ([[graft.streaming.Streams.rateLimitStream]]). */
-  private[graft] val RateCap = 21600000000L // 6 h of credit, in microseconds
-  private[graft] val RateCost = 10800000000L // each admitted event spends 3 h
-
   val q104_rate_limit: Query = {
     val Cap = RateCap
     val Cost = RateCost

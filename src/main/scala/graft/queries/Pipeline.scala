@@ -63,18 +63,6 @@ object Pipeline {
   private[graft] def mixExpr(col: String): String = mix(col, "div")
   private[graft] def mixSql(col: String): String = mix(col, "//")
 
-  /** Q47 — benchmark contamination check (SURVEY §2.12): the last 4% of
-    * doc_ids form the held-out eval set; report (train, eval) pairs
-    * sharing >= 3 distinct word trigrams, over trigrams with corpus
-    * document frequency <= 10.
-    *
-    * The df cap is the scale control (standard decontamination practice:
-    * boilerplate n-grams carry no signal): it bounds per-gram join fanout
-    * at 10x10 pairs, so candidate volume is linear in corpus size and no
-    * hot gram key can skew the shuffle. Grams travel as xxhash64 longs
-    * (8 bytes, collision odds ~n^2/2^64 — the q25 argument); the eval
-    * boundary is a one-row aggregate joined via broadcast, never a driver
-    * collect. */
   /** Train/eval gram sides shared by q47 and q47b. The persisted tagged
     * gram table is registered in the [[TextOps.memo]] registry (NOT a
     * bare .persist()), so the session-wide release paths — Bench/Verify's
@@ -136,6 +124,18 @@ object Pipeline {
        |SELECT train_id, eval_id, n_shared FROM p WHERE n_shared >= 3
        |ORDER BY train_id, eval_id""".stripMargin
 
+  /** Q47 — benchmark contamination check (SURVEY §2.12): the last 4% of
+    * doc_ids form the held-out eval set; report (train, eval) pairs
+    * sharing >= 3 distinct word trigrams, over trigrams with corpus
+    * document frequency <= 10.
+    *
+    * The df cap is the scale control (standard decontamination practice:
+    * boilerplate n-grams carry no signal): it bounds per-gram join fanout
+    * at 10x10 pairs, so candidate volume is linear in corpus size and no
+    * hot gram key can skew the shuffle. Grams travel as xxhash64 longs
+    * (8 bytes, collision odds ~n^2/2^64 — the q25 argument); the eval
+    * boundary is a one-row aggregate joined via broadcast, never a driver
+    * collect. */
   val q47_contamination: Query = Query(contaminationOracleSql) { (s, dir) =>
     val (train, ev) = contaminationSides(s, dir)
     contaminationPairs(train, ev)
@@ -504,25 +504,6 @@ object Pipeline {
       .orderBy("lang")
   }
 
-  /** Q58 — composite corpus quality filter (the C4/Gopher keep-or-drop
-    * pass, SURVEY §2.12): ONE scan computes every per-doc signal — token
-    * count, mean token length, distinct-token ratio, top-token dominance
-    * (the q51 O(n) sorted-run pass), stopword hits — and assigns each
-    * doc its FIRST matching drop reason in fixed priority order:
-    * too_short → bad_tok_len → repetitive → dominated → no_stopwords →
-    * kept (reason codes carry a priority prefix so output order is
-    * deterministic). Emits per-(lang, reason) doc/token accounting.
-    *
-    * Scale shape: the Spark side derives ALL signals from per-row array
-    * expressions (array_distinct / sorted-run / padded-replace counts) —
-    * a pure map with NO shuffle before the final tiny (lang, reason)
-    * aggregation, i.e. one pass over a 100 TB corpus. The oracle states
-    * the repetition signals the natural SQL way (unnest + groupBy);
-    * both reduce to exact integer ratios and identical IEEE divisions,
-    * so threshold comparisons agree bit-for-bit. Thresholds are tuned
-    * so every reason fires non-vacuously on the fixture (profiled:
-    * n_tok 10–99, avg_tok_len 3.71–5.30, distinct_ratio 0.28–1.0,
-    * top_share ≤ 0.30, zero-stopword docs exist in every lang). */
   /** q58's stopword list + occurrence-count fragments, shared with the
     * q71 end-to-end composition so the two cannot drift. */
   private val CurationStops = Seq("the", "a", "of", "and")
@@ -530,10 +511,6 @@ object Pipeline {
     s"(length(padded) - length(replace(padded, ' $p ', '')))"
   private[graft] val stopHitsSql = CurationStops.map(hitsDiffSql).mkString(" + ")
 
-  /** Per-doc q58 quality verdict: (doc_id, lang, n_tok, reason) with
-    * reason the FIRST failing filter ('6_kept' when all pass). q58
-    * aggregates this; q71 consumes it per-doc. All signals are per-row
-    * array expressions — no shuffle. */
   /** Adds `n_tok` and `reason` (the q58 verdict) to any frame with a
     * `text` column, preserving its other columns — the streaming
     * curation filter runs this on micro-batch survivors. Works on the
@@ -561,9 +538,32 @@ object Pipeline {
       .drop("norm", "a", "padded", "atl", "dr", "ts", "stop_hits")
   }
 
+  /** Per-doc q58 quality verdict: (doc_id, lang, n_tok, reason) with
+    * reason the FIRST failing filter ('6_kept' when all pass). q58
+    * aggregates this; q71 consumes it per-doc. All signals are per-row
+    * array expressions — no shuffle. */
   private[graft] def qualityReasons(s: SparkSession, dir: String): DataFrame =
     withQualityReason(docs(s, dir)).select("doc_id", "lang", "n_tok", "reason")
 
+  /** Q58 — composite corpus quality filter (the C4/Gopher keep-or-drop
+    * pass, SURVEY §2.12): ONE scan computes every per-doc signal — token
+    * count, mean token length, distinct-token ratio, top-token dominance
+    * (the q51 O(n) sorted-run pass), stopword hits — and assigns each
+    * doc its FIRST matching drop reason in fixed priority order:
+    * too_short → bad_tok_len → repetitive → dominated → no_stopwords →
+    * kept (reason codes carry a priority prefix so output order is
+    * deterministic). Emits per-(lang, reason) doc/token accounting.
+    *
+    * Scale shape: the Spark side derives ALL signals from per-row array
+    * expressions (array_distinct / sorted-run / padded-replace counts) —
+    * a pure map with NO shuffle before the final tiny (lang, reason)
+    * aggregation, i.e. one pass over a 100 TB corpus. The oracle states
+    * the repetition signals the natural SQL way (unnest + groupBy);
+    * both reduce to exact integer ratios and identical IEEE divisions,
+    * so threshold comparisons agree bit-for-bit. Thresholds are tuned
+    * so every reason fires non-vacuously on the fixture (profiled:
+    * n_tok 10–99, avg_tok_len 3.71–5.30, distinct_ratio 0.28–1.0,
+    * top_share ≤ 0.30, zero-stopword docs exist in every lang). */
   val q58_corpus_filter: Query = {
     Query(
       s"""WITH d AS (SELECT doc_id, lang, $normSql AS norm,
@@ -764,28 +764,6 @@ object Pipeline {
       .orderBy("doc_id")
   }
 
-  /** Q67 — bigram-LM document scoring (the CCNet/RedPajama "perplexity
-    * filter" shape): train an add-one-smoothed bigram language model on
-    * the corpus itself, then score every document by its mean negative
-    * log-likelihood −(1/n)·Σ ln P(wᵢ | wᵢ₋₁) with
-    * P(w₂|w₁) = (c(w₁,w₂) + 1) / (c(w₁·) + V). Reported as avg_nll
-    * rather than perplexity = exp(avg_nll): the monotone transform ranks
-    * identically and avoids trusting two engines' exp() to round alike.
-    *
-    * Determinism: each bigram's nll is rounded to 6 dp FIRST, then summed
-    * as DECIMAL(30,6) (exact, partition-order-free — the q64 trick), so
-    * the per-doc mean is bit-identical across engines and shuffle
-    * layouts.
-    *
-    * Scale shape: the model is two count aggregations (unigram contexts,
-    * bigrams) — map-side partial, no skew beyond natural token frequency;
-    * the scoring pass is ONE equi-join of the corpus bigram stream
-    * against the model table (1:1 per key — the model side is unique by
-    * (w1, w2)), then a per-doc aggregation. Nothing broadcasts unbounded:
-    * AQE broadcasts the model only while it is small; at 100 TB the
-    * standard move is hashing the vocabulary into a fixed 2^20 bucket
-    * space (as q64 documents), which bounds the model table regardless of
-    * corpus size. */
   /** The bigram-LM CTE block (token arrays → bigram stream → counts →
     * smoothed nll model → per-doc score) shared by q67, q67b and q91 —
     * ends with `sc(doc_id, n_bigrams, s)`. */
@@ -852,6 +830,28 @@ object Pipeline {
         cround(col("s") / col("n_bigrams")).as("avg_nll"))
   }
 
+  /** Q67 — bigram-LM document scoring (the CCNet/RedPajama "perplexity
+    * filter" shape): train an add-one-smoothed bigram language model on
+    * the corpus itself, then score every document by its mean negative
+    * log-likelihood −(1/n)·Σ ln P(wᵢ | wᵢ₋₁) with
+    * P(w₂|w₁) = (c(w₁,w₂) + 1) / (c(w₁·) + V). Reported as avg_nll
+    * rather than perplexity = exp(avg_nll): the monotone transform ranks
+    * identically and avoids trusting two engines' exp() to round alike.
+    *
+    * Determinism: each bigram's nll is rounded to 6 dp FIRST, then summed
+    * as DECIMAL(30,6) (exact, partition-order-free — the q64 trick), so
+    * the per-doc mean is bit-identical across engines and shuffle
+    * layouts.
+    *
+    * Scale shape: the model is two count aggregations (unigram contexts,
+    * bigrams) — map-side partial, no skew beyond natural token frequency;
+    * the scoring pass is ONE equi-join of the corpus bigram stream
+    * against the model table (1:1 per key — the model side is unique by
+    * (w1, w2)), then a per-doc aggregation. Nothing broadcasts unbounded:
+    * AQE broadcasts the model only while it is small; at 100 TB the
+    * standard move is hashing the vocabulary into a fixed 2^20 bucket
+    * space (as q64 documents), which bounds the model table regardless of
+    * corpus size. */
   val q67_lm_score: Query = Query(
     s"""WITH $lmCtesSql
        |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,

@@ -764,14 +764,6 @@ object TextOps {
   private val mhA = graft.functions.MinHashSignature.a
   private val mhB = graft.functions.MinHashSignature.b
 
-  /** Q26 — MinHash + LSH banding near-dup detection, the 100 TB path for
-    * q25: 48 minhashes per doc (single aggregation pass), 8 bands × 6
-    * rows, candidates from band-bucket equi-joins, then exact-jaccard
-    * verification. 6-row bands matter on this corpus: its baseline
-    * cross-doc similarity is ~0.3, so 4-row bands collide at 0.3⁴ ≈ 0.8%
-    * of all pairs while 6-row bands cut that ~40× (recall at jac ≥ 0.95
-    * stays ≥ 1−1e-7). With the corpus's similarity margin the verified
-    * output equals q25's exact result, so it shares q25's oracle. */
   /** (doc_id, band, bh) LSH band buckets from exploded shingle hashes:
     * 48 minhashes in one aggregation pass, 8 bands × 6 rows. Shared by
     * q26 and the streaming near-dup dedup
@@ -815,6 +807,16 @@ object TextOps {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
   }
 
+  /** q26's candidate pairs (d1 < d2): doc pairs sharing at least one
+    * (band, bh) bucket of [[bandedOfSets]]. */
+  private[graft] def bandedCandidates(docSets: DataFrame): DataFrame = {
+    val banded = bandedOfSets(docSets)
+    banded.select(col("doc_id").as("d1"), col("band"), col("bh"))
+      .join(banded.select(col("doc_id").as("d2"), col("band"), col("bh")), Seq("band", "bh"))
+      .filter(col("d1") < col("d2"))
+      .select("d1", "d2").distinct()
+  }
+
   /** Near-dup pairs via MinHash banding + exact jaccard verification —
     * the same (d1, d2, jac) set as [[jaccardPairs]] wherever banding
     * recall is total (the 8×6 band parameters are sized for tau = 0.8;
@@ -829,11 +831,7 @@ object TextOps {
   private[graft] def lshJaccardPairs(s: SparkSession, dir: String): DataFrame =
     memo("lshJaccardPairs", s, dir) {
       val sets = shingleSets(s, dir)
-      val banded = bandedOfSets(sets)
-      val cand = banded.select(col("doc_id").as("d1"), col("band"), col("bh"))
-        .join(banded.select(col("doc_id").as("d2"), col("band"), col("bh")), Seq("band", "bh"))
-        .filter(col("d1") < col("d2"))
-        .select("d1", "d2").distinct()
+      val cand = bandedCandidates(sets)
       // Round 12 (100× campaign): above ~LshRawVerifyMax docs the band
       // collisions mint enough near-miss candidates that the raw
       // shingle-array attach spills — measured 68.6 GB at 500k docs,
@@ -848,6 +846,14 @@ object TextOps {
       out
     }
 
+  /** Q26 — MinHash + LSH banding near-dup detection, the 100 TB path for
+    * q25: 48 minhashes per doc (single aggregation pass), 8 bands × 6
+    * rows, candidates from band-bucket equi-joins, then exact-jaccard
+    * verification. 6-row bands matter on this corpus: its baseline
+    * cross-doc similarity is ~0.3, so 4-row bands collide at 0.3⁴ ≈ 0.8%
+    * of all pairs while 6-row bands cut that ~40× (recall at jac ≥ 0.95
+    * stays ≥ 1−1e-7). With the corpus's similarity margin the verified
+    * output equals q25's exact result, so it shares q25's oracle. */
   val q26_minhash_lsh: Query = Query(jaccardSql) { (s, dir) =>
     lshJaccardPairs(s, dir)
       .select(col("d1"), col("d2"), cround(col("jac")).as("jaccard"))
@@ -929,105 +935,118 @@ object TextOps {
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), expr("graft_simhash(toks)").as("sig"))
 
-  /** Q37 — duplicate clusters: connected components over the exact
-    * near-dup graph (q25 edges), the canonical output of a training-data
-    * dedup pass (keep one doc per cluster). Spark side =
-    * [[connectedComponents]] (min-label propagation with pointer
-    * doubling, O(log diameter) rounds); the oracle computes the same
-    * components with a recursive CTE. */
   /** Connected components over an undirected edge list (cols d1, d2),
     * in two phases.
     *
     * Vertex ids are LONG (every caller feeds BIGINT doc ids; other
     * types are rejected).
     *
-    * Phase 1 — partition-local union-find contraction: each partition
-    * runs a classic union-find (path compression + union by min) over
-    * ITS edges and emits its spanning forest as
-    * (v → local-component-min) pointer edges. A spanning forest
-    * preserves the connectivity of its partition's edge subset, and
-    * connectivity over a union of subgraphs follows from the union of
-    * their forests — so the forest union is connectivity-equivalent to
-    * the input. This is ONE narrow pass (mapPartitions, no shuffle, the
-    * expensive upstream edge producer consumed exactly once), and since
-    * near-dup components are cliques that rarely straddle many
-    * partitions it collapses almost all structure immediately: the
-    * global loop then typically needs 1 real round + 1 detection round.
-    * Memory: per-partition table is O(distinct vertices in partition) —
-    * linear in partition bytes, the same budget as a hash-join build
-    * side, so partition sizing already bounds it at 100 TB.
+    * Phase 1 — [[componentForest]], a partition-local union-find
+    * contraction. Between the phases sits a size gate on the forest's
+    * edge count, which phase 1 materializes anyway:
+    * [[componentsOnDriver]] up to [[ComponentsDriverFinishMax]] edges,
+    * [[componentsByPropagation]] past it.
     *
-    * Phase 2 — min-label propagation with a pointer-doubling shortcut
-    * over the forest edges, via [[graft.ops.Iterate.loop]]. Each round
-    * does (1) a one-hop min over neighbors — propagated rows carry
-    * old = null, the labels side carries each vertex's previous label,
-    * so one groupBy yields the new label AND (min ignores nulls) the
-    * previous one for the convergence check — then from round 4
-    * (2) lbl := lbl(lbl), an equi-join of the label table with itself.
-    * Doubling halves label-chain depth each round, so a pathological
-    * CHAIN of diameter n (which defeats the local pre-pass when sliced
-    * across partitions) still converges in O(log n) rounds (DedupSpec
-    * pins the bound on a diameter-100 path). Monotonicity: lbl(v) is
-    * always the id of a vertex in v's component and only decreases, so
-    * the fixpoint labels every component with its min vertex. The
-    * convergence check is folded into the round's single materializing
-    * action — no separate "did anything change" pass.
-    *
-    * Between the phases sits a size gate (`driverFinishMax`, the q28
-    * pattern): a pointer forest of ≤2M edges (~100 MB collected) is
-    * finished by ONE driver-side union-find instead of 2+ full-cluster
-    * barrier rounds — the forest is already contracted, so its size is
-    * #duplicate-involved docs minus #local components, tiny relative to
-    * any corpus. Past the gate (billions of near-dup docs at 100 TB)
-    * the distributed loop below takes over unchanged; tests force it
-    * with driverFinishMax = 0 so the scale path stays exercised.
-    *
-    * Returns (labels (v, lbl), rounds executed — 0 on the driver-finish
-    * path). */
-  private[graft] def connectedComponents(edges: DataFrame,
-      driverFinishMax: Long = 2L << 20): (DataFrame, Int) = {
+    * Returns (labels (v, lbl), rounds executed — 0 on the driver side). */
+  private[graft] def connectedComponents(edges: DataFrame): (DataFrame, Int) = {
+    val forest = componentForest(edges)
+    val out =
+      if (forest.count() <= ComponentsDriverFinishMax) componentsOnDriver(forest)
+      else componentsByPropagation(forest)
+    forest.unpersist()
+    out
+  }
+
+  /** Driver-finish gate for [[connectedComponents]]: a pointer forest of
+    * ≤2M edges (~100 MB collected) is finished by ONE driver-side
+    * union-find instead of 2+ full-cluster barrier rounds — the forest
+    * is already contracted, so its size is #duplicate-involved docs
+    * minus #local components, tiny relative to any corpus. Past the gate
+    * (billions of near-dup docs at 100 TB) the distributed propagation
+    * takes over. */
+  private[graft] val ComponentsDriverFinishMax = 2L << 20
+
+  /** Union-find with path compression + union by min over an edge
+    * stream, then (v, root) for every vertex seen — the algorithm both
+    * [[componentForest]] (per partition) and [[componentsOnDriver]]
+    * (over the whole forest) run. */
+  private def unionFind(es: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    es.foreach { case (a, b) =>
+      if (!parent.contains(a)) parent(a) = a
+      if (!parent.contains(b)) parent(b) = b
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keysIterator.map(v => (v, find(v)))
+  }
+
+  /** Phase 1 of [[connectedComponents]]: each partition runs
+    * [[unionFind]] over ITS edges and emits its spanning forest as
+    * persisted (a → local-component-min) pointer edges (a, b). A
+    * spanning forest preserves the connectivity of its partition's edge
+    * subset, and connectivity over a union of subgraphs follows from
+    * the union of their forests — so the forest union is
+    * connectivity-equivalent to the input. This is ONE narrow pass
+    * (mapPartitions, no shuffle, the expensive upstream edge producer
+    * consumed exactly once), and since near-dup components are cliques
+    * that rarely straddle many partitions it collapses almost all
+    * structure immediately: the global loop then typically needs 1 real
+    * round + 1 detection round. Memory: per-partition table is
+    * O(distinct vertices in partition) — linear in partition bytes, the
+    * same budget as a hash-join build side, so partition sizing already
+    * bounds it at 100 TB. */
+  private[graft] def componentForest(edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val Array(c1, c2) = edges.columns
     require(edges.schema.fields.forall(_.dataType == LongType),
       s"connectedComponents needs long vertex ids, got ${edges.schema.simpleString}")
     val sess = edges.sparkSession
     import sess.implicits._
-    // the union-find both phases run: path compression + union by min
-    // over an edge stream, then (v, root) for every vertex seen
-    def components(es: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        if (!parent.contains(a)) parent(a) = a
-        if (!parent.contains(b)) parent(b) = b
-        val ra = find(a)
-        val rb = find(b)
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
-      parent.keysIterator.map(v => (v, find(v)))
-    }
     // every vertex that is not a local root points at its root; roots
     // of >=2-vertex components reappear as edge targets, so the vertex
     // set survives the contraction
-    val forest = edges.select(col(c1).as("_1"), col(c2).as("_2")).as[(Long, Long)]
-      .mapPartitions(it => components(it).filter { case (v, r) => v != r })
+    edges.select(col(c1).as("_1"), col(c2).as("_2")).as[(Long, Long)]
+      .mapPartitions(it => unionFind(it).filter { case (v, r) => v != r })
       .toDF("a", "b").persist()
-    val nForest = forest.count()
-    if (nForest <= driverFinishMax) {
-      // driver finish: merge the per-partition forests with one more
-      // union-find pass (same algorithm, all edges), emit (v, root).
-      // Roots are included because every root of a >=2-vertex component
-      // appears as a pointer target.
-      val labels = components(forest.as[(Long, Long)].collect().iterator).toSeq
-      forest.unpersist()
-      return (labels.toDF("v", "lbl"), 0)
-    }
+  }
+
+  /** [[connectedComponents]] below [[ComponentsDriverFinishMax]]: merge
+    * the per-partition forests with one more [[unionFind]] pass (same
+    * algorithm, all edges) on the driver, emit (v, root). Roots are
+    * included because every root of a >=2-vertex component appears as a
+    * pointer target. */
+  private[graft] def componentsOnDriver(forest: DataFrame): (DataFrame, Int) = {
+    val sess = forest.sparkSession
+    import sess.implicits._
+    (unionFind(forest.as[(Long, Long)].collect().iterator).toSeq.toDF("v", "lbl"), 0)
+  }
+
+  /** [[connectedComponents]] past [[ComponentsDriverFinishMax]]:
+    * min-label propagation with a pointer-doubling shortcut over the
+    * forest edges, via [[graft.ops.Iterate.loop]]. Each round does (1) a
+    * one-hop min over neighbors — propagated rows carry old = null, the
+    * labels side carries each vertex's previous label, so one groupBy
+    * yields the new label AND (min ignores nulls) the previous one for
+    * the convergence check — then from round 4 (2) lbl := lbl(lbl), an
+    * equi-join of the label table with itself. Doubling halves
+    * label-chain depth each round, so a pathological CHAIN of diameter
+    * n (which defeats the local pre-pass when sliced across partitions)
+    * still converges in O(log n) rounds (DedupSpec pins the bound on a
+    * diameter-100 path). Monotonicity: lbl(v) is always the id of a
+    * vertex in v's component and only decreases, so the fixpoint labels
+    * every component with its min vertex. The convergence check is
+    * folded into the round's single materializing action — no separate
+    * "did anything change" pass. */
+  private[graft] def componentsByPropagation(forest: DataFrame): (DataFrame, Int) = {
     val bi = forest.unionAll(forest.select(col("b").as("a"), col("a").as("b"))).persist()
     val labels0 = bi.select(col("a").as("v")).distinct()
       .withColumn("lbl", col("v")).persist()
@@ -1056,11 +1075,17 @@ object TextOps {
       }
     } { (_, next) => next.filter(col("lbl") =!= col("old")).count() == 0L }
     bi.unpersist()
-    forest.unpersist()
     if (fix.prev != null) fix.prev.unpersist()
     (fix.cur.select("v", "lbl"), fix.rounds)
   }
 
+  /** Q37 — duplicate clusters: connected components over the exact
+    * near-dup graph (q25 edges), the canonical output of a training-data
+    * dedup pass (keep one doc per cluster). Spark side =
+    * [[connectedComponents]] (partition-local union-find contraction,
+    * then one driver union-find, or past its gate min-label propagation
+    * with pointer doubling in O(log diameter) rounds); the oracle
+    * computes the same components with a recursive CTE. */
   val q37_dup_clusters: Query = Query(
     s"""WITH RECURSIVE
        | $pairCtesSql,
@@ -1131,23 +1156,6 @@ object TextOps {
       .orderBy("cluster_id")
   }
 
-  /** Q54 — passage-level exact dedup (the practical middle ground between
-    * q16's whole-doc dedup and q25/q26's near-dup detection; cf. Lee et
-    * al., "Deduplicating Training Data Makes Language Models Better",
-    * which dedups repeated spans rather than whole documents). Each doc
-    * is cut into non-overlapping 20-word passages; a passage occurrence
-    * is a duplicate unless it is the globally-first occurrence of that
-    * passage text, ordered by (doc_id, passage_idx). Emits per-doc
-    * passage/duplicate accounting.
-    *
-    * Shapes: one groupBy(passage) with map-side-combinable min() finds
-    * first occurrences; the join back is SHUFFLE_HASH so the fat passage
-    * stream is never sorted (q47's pattern). The global order key packs
-    * (doc_id, idx) into one long — exact while idx < 2^20 (docs under
-    * ~21M words) and doc_id < 2^43. Grouping keys are the passage strings
-    * themselves: exact by construction; at petabyte scale swap the key
-    * for xxhash64(passage) (2^-64 collision odds) or re-verify matches
-    * exactly like q25's merge-walk — same plan shape either way. */
   /** (doc_id, i, ptext, okey) — every document cut into non-overlapping
     * 20-word passages; okey packs (doc_id, idx) into one long (exact
     * while idx < 2^20 and doc_id < 2^43). Shared by q54 (exact) and
@@ -1173,7 +1181,7 @@ object TextOps {
     // never mint null text, so this is belt-and-braces for real corpora.
     val base = docs(s, dir).filter(col("text").isNotNull)
     val scan =
-      if (parquetBytes(dir, "documents") <= PassageBroadcastGate)
+      if (tableBytes(dir, "documents") <= PassageBroadcastGate)
         base.repartition(col("doc_id")) else base
     scan
       .select(col("doc_id"), split(norm, " ").as("a"))
@@ -1194,6 +1202,24 @@ object TextOps {
        |        FROM p0),
        | f AS (SELECT ptext, min(okey) AS first_okey FROM p2 GROUP BY ptext)""".stripMargin
 
+  /** Q54 — passage-level exact dedup (the practical middle ground between
+    * q16's whole-doc dedup and q25/q26's near-dup detection; cf. Lee et
+    * al., "Deduplicating Training Data Makes Language Models Better",
+    * which dedups repeated spans rather than whole documents). Each doc
+    * is cut into non-overlapping 20-word passages; a passage occurrence
+    * is a duplicate unless it is the globally-first occurrence of that
+    * passage text, ordered by (doc_id, passage_idx). Emits per-doc
+    * passage/duplicate accounting.
+    *
+    * Shapes: one groupBy(passage) with map-side-combinable min() finds
+    * first occurrences ([[passageReps]]); there is no join back — the
+    * per-doc counts come from the okey arithmetic in the body. The
+    * global order key packs (doc_id, idx) into one long — exact while
+    * idx < 2^20 (docs under ~21M words) and doc_id < 2^43. Grouping
+    * keys are the passage strings themselves: exact by construction; at
+    * petabyte scale swap the key for xxhash64(passage) (2^-64 collision
+    * odds) or re-verify matches exactly like q25's merge-walk — same
+    * plan shape either way. */
   val q54_passage_dedup: Query = Query(
     s"""WITH $passageCtesSql,
        |     j AS (SELECT p2.doc_id,
@@ -1275,20 +1301,11 @@ object TextOps {
   private[graft] def passageRepSets(s: SparkSession, dir: String): DataFrame =
     passageReps(s, dir).filter(col("n") > 0)
 
-  /** Byte size of one table's parquet (file or Spark-written directory)
-    * — a gate input decidable from filesystem metadata alone, before
-    * any job runs (the q85b parquet-metadata gate pattern). */
-  private def parquetBytes(dir: String, table: String): Long = {
-    def sizeOf(p: java.io.File): Long =
-      if (p.isDirectory) Option(p.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-      else p.length()
-    sizeOf(new java.io.File(s"$dir/$table.parquet"))
-  }
-
-  /** Gate for q54b's candidate stage: below it the counted shared-
-    * trigram self-join (exact |A∩B| straight from the join — no verify
+  /** Gate for q54b's pair frame ([[passageNearDupPairs]]), on the
+    * documents' parquet bytes: below it [[countedPassagePairs]] (exact
+    * |A∩B| straight from the shared-trigram self-join — no verify
     * attach, no df ranking; the DuckDB statement's own plan, 2 + 2
-    * exchanges total); past it the PPJoin prefix filter, whose
+    * exchanges total); past it [[ppjoinPassagePairs]], whose
     * near-linear candidate volume is the 100 TB property the counted
     * join lacks (Σ df(g)² blowup on hot trigrams). 256 MB of documents
     * parquet ≈ 10× the 30× fixture, where the counted join still runs
@@ -1296,47 +1313,21 @@ object TextOps {
     * equates them on the fixture. */
   private[graft] val PassageCountJoinGate = 256L * 1024 * 1024
 
-  /** Sub-gate inside the counted tier: below it the candidate stage runs
-    * as [[countedPairsKernel]] — the rep trigram lists ride ONE driver
-    * collect + broadcast and the whole intersection count happens in a
-    * single narrow map stage over the cached reps, emitting only the
-    * ~dozens of surviving pairs. The declarative counted join was
-    * measured at 5 executor-CPU-s + a ~1M-row partial-agg exchange at
-    * sf0.1 for output of 192 rows — all of it Spark machinery around
-    * arithmetic the kernel does in <0.2 s. Budget: 2 MB of documents
-    * parquet ≈ 3.5× the sf0.1 fixture; sf0.1 measures 230k exploded
-    * (g, doc, n) rows, so the ceiling is ~800k ≈ 13 MB interleaved
-    * longs — trivial for driver and broadcast alike. Past the gate the
-    * shuffle-counted join takes over (same exact semantics, distributed
-    * end to end), then PPJoin past [[PassageCountJoinGate]]. */
+  /** Gate for q54b's near-dup accounting, on the documents' parquet
+    * bytes: below it [[nearDupRepsKernel]] — the rep trigram lists ride
+    * ONE driver collect + broadcast and the whole intersection count
+    * happens in a single narrow map stage over the cached reps, emitting
+    * only the dominated reps; past it [[nearDupRepsFlow]], the distinct
+    * d2 of the pair frame. The declarative counted join was measured at
+    * 5 executor-CPU-s + a ~1M-row partial-agg exchange at sf0.1 for
+    * output of 192 rows — all of it Spark machinery around arithmetic
+    * the kernel does in <0.2 s. Budget: 2 MB of documents parquet ≈
+    * 3.5× the sf0.1 fixture; sf0.1 measures 230k exploded (g, doc, n)
+    * rows, so the ceiling is ~800k ≈ 13 MB interleaved longs — trivial
+    * for driver and broadcast alike. [[passagesOf]] reads the same gate
+    * to spread a one-row-group scan. */
   private[graft] val PassageBroadcastGate = 2L * 1024 * 1024
 
-  /** Verified near-dup rep pairs (o1 < o2 by okey, jac ≥ [[JaccardTau]])
-    * — EXACT at every size, gated between two exact plans by
-    * [[PassageCountJoinGate]]. Round 11: this was MinHash banding (the
-    * q26 pattern) until the 30× campaign caught banding's recall
-    * against the exact oracle — 8 bands × 6 rows catches a jac≈τ pair
-    * with p ≈ 0.91, and at 30× the replica perturbation minted enough
-    * near-τ rep pairs that some landed in the missing 9%
-    * (n_neardup_rep under-reported on ~150 of 150k docs; sf0.01/sf0.1
-    * simply never had a marginal pair). q54b's declared semantics are
-    * exact-τ (the oracle brute-forces all pairs), so the candidate
-    * stage must be exact too. Banding remains the right tool where the
-    * semantics are declared approximate (q26/q30/q60). */
-  /** Broadcast-tier exact counted intersection (below
-    * [[PassageBroadcastGate]]): collect the rep trigram lists once
-    * (driver budget in the gate note), broadcast g → interleaved
-    * [d, n, d, n, …] partner lists keyed by a sorted array
-    * (binary-search probes, zero boxing), and count each pair's
-    * |A∩B| in ONE narrow map pass over the cached reps — rep d1's
-    * partition-local accumulator sees every shared trigram exactly once
-    * because gs is distinct, so the count IS the intersection and the
-    * τ test emits final pairs with no join, no aggregation exchange,
-    * and no candidate materialization. Deterministic under stage
-    * retries: output is a pure function of the broadcast and the
-    * partition's rows, emitted in sorted-d2 order per rep. Exactness is
-    * pinned against both distributed tiers (DedupSpec: kernel ≡
-    * shuffle-counted ≡ PPJoin ≡ brute force). */
   /** g → interleaved [d, n, d, n, …] partner lists over the trigram-
     * bearing reps, collected once (driver budget: the
     * [[PassageBroadcastGate]] note) and broadcast keyed by a sorted
@@ -1388,56 +1379,17 @@ object TextOps {
     Graph.track(s.sparkContext.broadcast((keys, offsets, flat)))
   }
 
-  private[graft] def countedPairsKernel(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val psets = passageRepSets(s, dir)
-    val bc = trigramPartnerIndex(s, dir)
-    psets.select(col("doc_id"), col("n"), col("gs"))
-      .as[(Long, Long, Array[Long])]
-      .mapPartitions { it =>
-        val (ks, offs, flat) = bc.value
-        it.flatMap { case (d1, n1, gs) =>
-          // d2 → (n2 << 32) | count; n ≤ 18 trigrams per 20-word
-          // passage, so the packing has ~2^28 headroom
-          val acc = new scala.collection.mutable.LongMap[Long]()
-          var i = 0
-          while (i < gs.length) {
-            val gi = java.util.Arrays.binarySearch(ks, gs(i))
-            if (gi >= 0) {
-              var j = offs(gi)
-              val end = offs(gi + 1)
-              while (j < end) {
-                val d2 = flat(j)
-                if (d2 > d1) {
-                  val cur = acc.getOrElse(d2, 0L)
-                  acc(d2) = if (cur == 0L) (flat(j + 1) << 32) | 1L else cur + 1L
-                }
-                j += 2
-              }
-            }
-            i += 1
-          }
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          acc.foreach { case (d2, packed) =>
-            val inter = packed & 0xffffffffL
-            val n2 = packed >>> 32
-            if (TauDen * inter >= TauNum * (n1 + n2 - inter))
-              out += ((d1, d2, inter * 1.0 / (n1 + n2 - inter)))
-          }
-          out.sortBy(_._2)
-        }
-      }
-      .toDF("d1", "d2", "jac")
-  }
-
-  /** Broadcast-tier accounting kernel: the near-dup REPS themselves —
-    * every trigram-bearing rep r with an EARLIER τ-similar rep (∃ d < r,
-    * jac(d, r) ≥ τ) — emitted one row per such rep, so the accounting
-    * needs no pair materialization and no DISTINCT: it is
-    * [[countedPairsKernel]]'s loop with the comparison flipped (d < r
-    * instead of d > r), answering q54b's actual question ("is this rep
-    * dominated?") directly. Equality with the pair route is pinned by
-    * DedupSpec (flags ≡ distinct d2 of the pairs frame). */
+  /** q54b's accounting below [[PassageBroadcastGate]]: the near-dup REPS
+    * themselves — every trigram-bearing rep r with an EARLIER τ-similar
+    * rep (∃ d < r, jac(d, r) ≥ τ) — emitted one row per such rep, so
+    * the accounting needs no pair materialization and no DISTINCT. Each
+    * rep probes the broadcast [[trigramPartnerIndex]] once per trigram
+    * and counts |A∩B| per earlier partner in a partition-local map; gs
+    * is distinct, so the count IS the intersection and the τ test is
+    * exact integer arithmetic — no join, no aggregation exchange, no
+    * candidate materialization. Deterministic under stage retries:
+    * output is a pure function of the broadcast and the partition's
+    * rows. DedupSpec equates it with [[nearDupRepsFlow]]. */
   private[graft] def nearDupRepsKernel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val psets = passageRepSets(s, dir)
@@ -1447,6 +1399,8 @@ object TextOps {
       .mapPartitions { it =>
         val (ks, offs, flat) = bc.value
         it.flatMap { case (r, n1, gs) =>
+          // d → (n_d << 32) | count; n ≤ 18 trigrams per 20-word
+          // passage, so the packing has ~2^28 headroom
           val acc = new scala.collection.mutable.LongMap[Long]()
           var i = 0
           while (i < gs.length) {
@@ -1476,59 +1430,80 @@ object TextOps {
       .toDF("nd_okey")
   }
 
-  private[graft] def passageNearDupPairs(s: SparkSession, dir: String,
-      forcePpjoin: Boolean = false, forceCountShuffle: Boolean = false): DataFrame =
-    memo(if (forcePpjoin) "q54b.pairsPp"
-         else if (forceCountShuffle) "q54b.pairsCs"
-         else "q54b.pairs", s, dir) {
-      // the rep frame is the memo-registered persist ([[passageReps]]);
-      // psets is a filter over its cached blocks. resetCaches() owns
-      // the lifecycle exactly as for the doc-level shingle frames.
-      val psets = passageRepSets(s, dir)
-      val docBytes = parquetBytes(dir, "documents")
-      if (!forcePpjoin && !forceCountShuffle && docBytes <= PassageBroadcastGate) {
-        countedPairsKernel(s, dir)
-      } else if (!forcePpjoin && docBytes <= PassageCountJoinGate) {
-        // counted join: gs holds DISTINCT trigram hashes per rep, so the
-        // per-pair row count of the shared-trigram self-join IS |A∩B|;
-        // n rides the exploded rows (no cnt-table rejoin), the size-
-        // ratio prefilter kills mismatched pairs before the aggregation,
-        // and the τ test is exact integer arithmetic (TauNum note).
-        val tg = psets.select(col("doc_id"), col("n"), explode(col("gs")).as("g"))
-        tg.select(col("doc_id").as("d1"), col("n").as("n1"), col("g"))
-          .join(tg.select(col("doc_id").as("d2"), col("n").as("n2"), col("g")), "g")
-          .filter(col("d1") < col("d2"))
-          .filter(lit(TauDen) * col("n1") >= lit(TauNum) * col("n2") &&
-            lit(TauDen) * col("n2") >= lit(TauNum) * col("n1"))
-          .groupBy("d1", "d2", "n1", "n2").agg(count(lit(1)).as("inter"))
-          .filter(lit(TauDen) * col("inter") >= lit(TauNum) * (col("n1") + col("n2") - col("inter")))
-          .select(col("d1"), col("d2"),
-            (col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))).as("jac"))
-      } else {
-        val sh = psets.select(col("doc_id"), explode(col("gs")).as("g"))
-        val (cand, prefix) = ppjoinCandidates(sh)
-        memo("q54b.prefix", s, dir)(prefix)
-        // adaptive=true: rep-level candidate volume is a runtime
-        // quantity — let AQE pick broadcast-vs-shuffle from the
-        // candidate aggregation's actual shuffle stats instead of
-        // forcing the doc-level shuffle-hash shape, which paid two full
-        // exchanges of the rep arrays to attach 192 rows.
-        rawJaccard(psets, cand, adaptive = true)
-      }
+  /** Verified near-dup rep pairs (d1 < d2 by okey, jac ≥ [[JaccardTau]])
+    * — EXACT at every size: [[countedPassagePairs]] up to
+    * [[PassageCountJoinGate]] bytes of documents parquet,
+    * [[ppjoinPassagePairs]] past it. Round 11: this was MinHash banding
+    * (the q26 pattern) until the 30× campaign caught banding's recall
+    * against the exact oracle — 8 bands × 6 rows catches a jac≈τ pair
+    * with p ≈ 0.91, and at 30× the replica perturbation minted enough
+    * near-τ rep pairs that some landed in the missing 9%
+    * (n_neardup_rep under-reported on ~150 of 150k docs; sf0.01/sf0.1
+    * simply never had a marginal pair). q54b's declared semantics are
+    * exact-τ (the oracle brute-forces all pairs), so the candidate
+    * stage must be exact too. Banding remains the right tool where the
+    * semantics are declared approximate (q26/q30/q60). */
+  private[graft] def passageNearDupPairs(s: SparkSession, dir: String): DataFrame =
+    if (tableBytes(dir, "documents") <= PassageCountJoinGate) countedPassagePairs(s, dir)
+    else ppjoinPassagePairs(s, dir)
+
+  /** The pair frame below [[PassageCountJoinGate]]: gs holds DISTINCT
+    * trigram hashes per rep, so the per-pair row count of the
+    * shared-trigram self-join IS |A∩B|; n rides the exploded rows (no
+    * cnt-table rejoin), the size-ratio prefilter kills mismatched pairs
+    * before the aggregation, and the τ test is exact integer arithmetic
+    * (TauNum note). The rep frame is the memo-registered persist
+    * ([[passageReps]]), so resetCaches() owns its lifecycle. */
+  private[graft] def countedPassagePairs(s: SparkSession, dir: String): DataFrame =
+    memo("q54b.countedPairs", s, dir) {
+      val tg = passageRepSets(s, dir)
+        .select(col("doc_id"), col("n"), explode(col("gs")).as("g"))
+      tg.select(col("doc_id").as("d1"), col("n").as("n1"), col("g"))
+        .join(tg.select(col("doc_id").as("d2"), col("n").as("n2"), col("g")), "g")
+        .filter(col("d1") < col("d2"))
+        .filter(lit(TauDen) * col("n1") >= lit(TauNum) * col("n2") &&
+          lit(TauDen) * col("n2") >= lit(TauNum) * col("n1"))
+        .groupBy("d1", "d2", "n1", "n2").agg(count(lit(1)).as("inter"))
+        .filter(lit(TauDen) * col("inter") >= lit(TauNum) * (col("n1") + col("n2") - col("inter")))
+        .select(col("d1"), col("d2"),
+          (col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))).as("jac"))
     }
+
+  /** The pair frame past [[PassageCountJoinGate]]: PPJoin prefix
+    * filtering over the rep trigram sets ([[ppjoinCandidates]]), then
+    * the exact verify. adaptive=true: rep-level candidate volume is a
+    * runtime quantity — let AQE pick broadcast-vs-shuffle from the
+    * candidate aggregation's actual shuffle stats instead of forcing
+    * the doc-level shuffle-hash shape, which paid two full exchanges of
+    * the rep arrays to attach 192 rows. */
+  private[graft] def ppjoinPassagePairs(s: SparkSession, dir: String): DataFrame =
+    memo("q54b.ppjoinPairs", s, dir) {
+      val psets = passageRepSets(s, dir)
+      val sh = psets.select(col("doc_id"), explode(col("gs")).as("g"))
+      val (cand, prefix) = ppjoinCandidates(sh)
+      memo("q54b.prefix", s, dir)(prefix)
+      rawJaccard(psets, cand, adaptive = true)
+    }
+
+  /** q54b's accounting past [[PassageBroadcastGate]]: the distinct d2
+    * of [[passageNearDupPairs]] — the reps with an earlier τ-similar
+    * rep, the same set [[nearDupRepsKernel]] emits. */
+  private[graft] def nearDupRepsFlow(s: SparkSession, dir: String): DataFrame =
+    passageNearDupPairs(s, dir).select(col("d2").as("nd_okey")).distinct()
 
   /** Q54b — passage dedup at near-dup strength (the Lee et al. pipeline
     * shape, fuzzy variant): exact dedup first collapses every repeated
     * passage text onto its first occurrence (q54's accounting), THEN
     * EXACT near-dup detection runs over the surviving representatives
-    * only ([[passageNearDupPairs]]: counted shared-trigram join below
-    * [[PassageCountJoinGate]], PPJoin prefix filtering past it — both
+    * only ([[nearDupRepsKernel]] below [[PassageBroadcastGate]],
+    * [[nearDupRepsFlow]] over [[passageNearDupPairs]] past it — all
     * exact) — a rep is additionally dropped when an earlier rep is
     * jaccard-similar (word trigrams, τ = [[JaccardTau]]). Composing
     * exact-then-fuzzy is what keeps this scale-sane: an exact-dup
     * clique of k passages contributes ONE rep to the candidate join
-    * instead of k²/2 pairs, and past the gate prefix filtering keeps
-    * the candidate volume near-linear (Chaudhuri et al.). Emits
+    * instead of k²/2 pairs, and past [[PassageCountJoinGate]] prefix
+    * filtering keeps the candidate volume near-linear (Chaudhuri et
+    * al.). Emits
     * per-doc accounting: exact dups, rep near-dups, combined ratio. */
   val q54b_passage_neardup: Query = Query(
     s"""WITH $passageCtesSql,
@@ -1592,9 +1567,8 @@ object TextOps {
     // is a plain count — no count(DISTINCT) double-aggregation rewrite
     // inflating the 20k-row union into an Expand.
     val ndDistinct =
-      if (parquetBytes(dir, "documents") <= PassageBroadcastGate)
-        nearDupRepsKernel(s, dir)
-      else passageNearDupPairs(s, dir).select(col("d2").as("nd_okey")).distinct()
+      if (tableBytes(dir, "documents") <= PassageBroadcastGate) nearDupRepsKernel(s, dir)
+      else nearDupRepsFlow(s, dir)
     val ndRows = ndDistinct
       .select(expr("nd_okey div 1048576").as("doc_id"),
         nullL.as("n_pass"), nullL.as("rep"), lit(1L).as("nd_okey"))
@@ -1776,9 +1750,45 @@ object TextOps {
     out.toSeq
   }
 
+  /** BPE's corpus-scale feeder: word frequencies split into symbol
+    * arrays — the ONE distributed pass both the driver-finish and the
+    * Iterate-loop merge learners consume (also the fingerprint aux plan
+    * for q69/q72, whose merge rules are driver-side state). */
+  private[graft] def bpeInitVocab(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir)
+      .select(explode(expr(s"regexp_extract_all($normExpr, '[a-z]+', 0)")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("freq"))
+      .select(split(col("w"), "").as("syms"), col("freq"))
+
+  /** Fingerprint feeder plans for this file's driver-eager stages
+    * (VERDICT r11 item 6 — a query whose heavy lifting happens before
+    * a driver-side collect would otherwise hash only its trivial
+    * post-collect plan): q37/q37b's clustering runs eagerly over the
+    * verified pair frame (labels return as a LocalRelation below the
+    * driver-finish gate), q69/q72's merge rules are a driver loop over
+    * the collected vocabulary. The object-land halves (union-find,
+    * local merge loop) have no plan to hash — DedupSpec/GoldenSpec
+    * equivalences pin those. */
+  private[graft] def fingerprintAuxPlan(name: String, s: SparkSession,
+      dir: String): Option[(String, DataFrame)] = name match {
+    case "q37_dup_clusters" | "q37b_cluster_reps" | "q71_curate_corpus" =>
+      // q71 joined the list in round 12: its near-dup stage (exact pair
+      // frame + connectedComponents) executes eagerly during plan
+      // construction, so the labels enter q71's own plan as a
+      // LocalRelation and the finder was invisible to the fingerprint
+      Some(("connectedComponents over verified q25 jaccard pairs " +
+        "(contracted union-find, driver-finish gate)",
+        jaccardPairs(s, dir).select("d1", "d2")))
+    case "q69_bpe_merges" | "q72_bpe_encode" =>
+      Some(("bpe init vocab (corpus word-freq pass, collect gate)",
+        bpeInitVocab(s, dir)))
+    case _ => None
+  }
+
   /** BPE merge-rule learning (Sennrich et al. 2016) over the corpus word
     * frequencies — the tokenizer-training half of q23b's fertility
-    * metric, and the third user of the [[graft.ops.Iterate]] discipline.
+    * metric; its distributed side is one of the two users of the
+    * [[graft.ops.Iterate]] discipline.
     *
     * Distributed shape: the only corpus-scale pass is the initial word
     * count (one token explode + one groupBy); every round after that
@@ -1793,17 +1803,41 @@ object TextOps {
     * round: ONE materializing action (the argmax doubles as the
     * convergence check — stop when no pair repeats).
     *
+    * Size gate on the vocabulary row count, which the one corpus-scale
+    * pass materializes anyway: [[bpeMergesOnDriver]] up to
+    * [[BpeDriverFinishMax]] words, [[bpeMergeRounds]] past it.
+    *
     * Determinism: pair counts are exact long sums and ties break on
     * (count DESC, l ASC, r ASC), so the learned rules are a pure
     * function of the corpus. */
-  /** Driver-local merge loop for the size-gated finish below: the same
-    * argmax tie-break ((cnt DESC, l ASC, r ASC) — exact long sums) and
-    * the same greedy leftmost non-overlapping rewrite as the
-    * distributed rounds, so the two paths are interchangeable bit for
+  private[graft] def bpeMergeRules(s: SparkSession, dir: String,
+      maxMerges: Int = 12): Seq[(Int, String, String, Long)] = {
+    val vocab = bpeInitVocab(s, dir).persist()
+    val merges =
+      if (vocab.count() <= BpeDriverFinishMax) bpeMergesOnDriver(vocab, maxMerges)
+      else bpeMergeRounds(vocab, maxMerges)
+    vocab.unpersist()
+    merges
+  }
+
+  /** Driver-finish gate for [[bpeMergeRules]] (the q37 forest gate /
+    * IVF-centroid exemption): after the one corpus-scale pass, the
+    * state is the VOCABULARY table. When it fits the driver budget
+    * (~tens of MB at 1M words), 12 serial distributed rounds — each a
+    * full explode + exchange + argmax job — collapse into one collect
+    * and a microsecond-scale local loop. Past the gate (100 TB corpora
+    * with unbounded token universes) the distributed rounds run. */
+  private[graft] val BpeDriverFinishMax = 1L << 20
+
+  /** [[bpeMergeRules]] below [[BpeDriverFinishMax]]: one collect of the
+    * (syms, freq) vocabulary, then the merge loop on the driver with the
+    * same argmax tie-break ((cnt DESC, l ASC, r ASC) — exact long sums)
+    * and the same greedy leftmost non-overlapping rewrite as
+    * [[bpeMergeRounds]], so the two sides are interchangeable bit for
     * bit (BpeSpec runs both against the sequential reference). */
-  private def bpeMergeLocal(vocab: Array[(Array[String], Long)],
+  private[graft] def bpeMergesOnDriver(vocab: DataFrame,
       maxMerges: Int): Seq[(Int, String, String, Long)] = {
-    var table = vocab
+    var table = vocab.collect().map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var done = false
     while (!done && merges.length < maxMerges) {
@@ -1841,44 +1875,14 @@ object TextOps {
     merges.toSeq
   }
 
-  /** BPE's corpus-scale feeder: word frequencies split into symbol
-    * arrays — the ONE distributed pass both the driver-finish and the
-    * Iterate-loop merge learners consume (also the fingerprint aux plan
-    * for q69/q72, whose merge rules are driver-side state). */
-  private[graft] def bpeInitVocab(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
-      .select(explode(expr(s"regexp_extract_all($normExpr, '[a-z]+', 0)")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(split(col("w"), "").as("syms"), col("freq"))
-
-  /** Fingerprint feeder plans for this file's driver-eager stages
-    * (VERDICT r11 item 6 — a query whose heavy lifting happens before
-    * a driver-side collect would otherwise hash only its trivial
-    * post-collect plan): q37/q37b's clustering runs eagerly over the
-    * verified pair frame (labels return as a LocalRelation below the
-    * driver-finish gate), q69/q72's merge rules are a driver loop over
-    * the collected vocabulary. The object-land halves (union-find,
-    * local merge loop) have no plan to hash — DedupSpec/GoldenSpec
-    * equivalences pin those. */
-  private[graft] def fingerprintAuxPlan(name: String, s: SparkSession,
-      dir: String): Option[(String, DataFrame)] = name match {
-    case "q37_dup_clusters" | "q37b_cluster_reps" | "q71_curate_corpus" =>
-      // q71 joined the list in round 12: its near-dup stage (exact pair
-      // frame + connectedComponents) executes eagerly during plan
-      // construction, so the labels enter q71's own plan as a
-      // LocalRelation and the finder was invisible to the fingerprint
-      Some(("connectedComponents over verified q25 jaccard pairs " +
-        "(contracted union-find, driver-finish gate)",
-        jaccardPairs(s, dir).select("d1", "d2")))
-    case "q69_bpe_merges" | "q72_bpe_encode" =>
-      Some(("bpe init vocab (corpus word-freq pass, collect gate)",
-        bpeInitVocab(s, dir)))
-    case _ => None
-  }
-
-  private[graft] def bpeMergeRules(s: SparkSession, dir: String,
-      maxMerges: Int = 12,
-      driverFinishMax: Long = 1L << 20): Seq[(Int, String, String, Long)] = {
+  /** [[bpeMergeRules]] past [[BpeDriverFinishMax]]: one
+    * [[graft.ops.Iterate.loop]] round per merge over the (syms, freq)
+    * vocabulary frame. The argmax over generation g is computed as
+    * generation g's single action (in measure) and APPLIED in the next
+    * round's step — so the loop body stays one-action-per-round with no
+    * extra barrier. */
+  private[graft] def bpeMergeRounds(vocab: DataFrame,
+      maxMerges: Int): Seq[(Int, String, String, Long)] = {
     val pairs = expr(
       "transform(sequence(1, size(syms) - 1), i -> struct(syms[i-1] AS l, syms[i] AS r))")
     def bestPair(gen: DataFrame): Option[(String, String, Long)] =
@@ -1889,28 +1893,10 @@ object TextOps {
         .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
         .limit(1).collect().headOption
         .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
-    val init = bpeInitVocab(s, dir).persist()
-    // Size-gated driver finish (the q37 forest gate / IVF-centroid
-    // exemption): after the one corpus-scale pass, the state is the
-    // VOCABULARY table. When it fits the driver budget (~tens of MB at
-    // the default gate), 12 serial distributed rounds — each a full
-    // explode + exchange + argmax job — collapse into one collect and a
-    // microsecond-scale local loop. Past the gate (100 TB corpora with
-    // unbounded token universes) the Iterate rounds below run unchanged.
-    val nVocab = init.count()
-    if (nVocab <= driverFinishMax) {
-      val vocab = init.collect().map(r =>
-        (r.getSeq[String](0).toArray, r.getLong(1)))
-      init.unpersist()
-      return bpeMergeLocal(vocab, maxMerges)
-    }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    // argmax over generation g is computed as generation g's single
-    // action (in measure) and APPLIED in the next round's step — so the
-    // loop body stays one-action-per-round with no extra barrier
-    var pending = bestPair(init)
+    var pending = bestPair(vocab)
     if (pending.exists(_._3 >= 2)) {
-      val fix = Iterate.loop(init, maxRounds = maxMerges) { (cur, it) =>
+      val fix = Iterate.loop(vocab, maxRounds = maxMerges) { (cur, it) =>
         val (l, r, f) = pending.get
         merges += ((it, l, r, f))
         cur.select(bpeMergeUdf(col("syms"), lit(l), lit(r)).as("syms"), col("freq"))
@@ -1921,20 +1907,9 @@ object TextOps {
       fix.cur.unpersist()
       if (fix.prev != null) fix.prev.unpersist()
     }
-    init.unpersist()
     merges.toSeq
   }
 
-  /** Oracle SQL for [[q69_bpe_merges]]: the 12-round merge loop unrolled
-    * as chained CTEs (the q71 replay pattern, but iteration is unrolled
-    * since each round's argmax feeds the next round's rewrite). Each
-    * word's segmentation is encoded as `<sym><sym>...`; applying merge
-    * (l, r) is then a plain left-to-right `replace('<l><r>' -> '<lr>')`,
-    * which is exactly the greedy leftmost non-overlapping merge of the
-    * Spark UDF (matches can't straddle symbols because every symbol is
-    * delimiter-bounded, and replace() never overlaps matches). Ties
-    * break (count DESC, l ASC, r ASC) in both engines, so the merge
-    * list is a pure function of the corpus. */
   /** The shared unrolled CTE chain: word frequencies, encoded
     * generation tables v0..v{maxMerges} (each carrying the original
     * word through the rewrites), and per-round argmax rows
@@ -1969,6 +1944,16 @@ object TextOps {
     (head ++ rounds).map(_.stripMargin).mkString(",\n")
   }
 
+  /** Oracle SQL for [[q69_bpe_merges]]: the 12-round merge loop unrolled
+    * as chained CTEs (the q71 replay pattern, but iteration is unrolled
+    * since each round's argmax feeds the next round's rewrite). Each
+    * word's segmentation is encoded as `<sym><sym>...`; applying merge
+    * (l, r) is then a plain left-to-right `replace('<l><r>' -> '<lr>')`,
+    * which is exactly the greedy leftmost non-overlapping merge of the
+    * Spark UDF (matches can't straddle symbols because every symbol is
+    * delimiter-bounded, and replace() never overlaps matches). Ties
+    * break (count DESC, l ASC, r ASC) in both engines, so the merge
+    * list is a pure function of the corpus. */
   private def bpeOracleSql(maxMerges: Int): String = {
     val union = (1 to maxMerges).map { k =>
       s"""SELECT CAST($k AS INT) AS "rank", l AS "left", r AS "right", CAST(cnt AS BIGINT) AS freq FROM p$k"""
@@ -2002,25 +1987,6 @@ object TextOps {
       .orderBy("rank")
   }
 
-  /** Q73 — exact substring-level dedup (the "dedup makes LMs better"
-    * mode, at rolling-window granularity): a 20-token window is
-    * duplicated when its text occurs ≥ 2 times anywhere in the corpus;
-    * a token is duplicated when any duplicated window covers it. Emits
-    * per-doc token counts and the duplicated-token fraction — the
-    * number a curation pass thresholds to drop boilerplate-heavy docs.
-    *
-    * Distributed shape: windows travel as 16-byte md5 digests (the
-    * q16 digest-key move — the 20-word text never leaves the scan),
-    * the ≥2 count is a partial-agg'd groupBy on the digest, and
-    * coverage is a ±k position explode + distinct with NO join wider
-    * than (doc_id, digest). The digest exchange is ~n_tok rows × 16 B —
-    * the inherent cost of exact substring dedup; at 100 TB the standard
-    * prefilter (seen-digest bloom from a first pass) bolts onto the
-    * same plan in front of the exchange, exactly like q47b's. */
-  /** Engine body of q73 over an arbitrary documents frame (PropertySpec
-    * drives it with shuffled partitionings: the collect_list in the
-    * duplicate-window aggregation is order-nondeterministic, but only
-    * its SET of elements is consumed, so the output must be invariant). */
   /** (doc_id, a, n) token frame for the substring-window family. */
   private[graft] def substringToks(docsDf: DataFrame): DataFrame =
     docsDf
@@ -2036,6 +2002,10 @@ object TextOps {
         s"transform(sequence(1, n - ${k - 1}), i -> struct(i AS i, unhex(md5(array_join(slice(a, i, $k), ' '))) AS h))")).as("w"))
       .select(col("doc_id"), col("w.i").as("i"), col("w.h").as("h"))
 
+  /** Engine body of q73 over an arbitrary documents frame (PropertySpec
+    * drives it with shuffled partitionings: the collect_list in the
+    * duplicate-window aggregation is order-nondeterministic, but only
+    * its SET of elements is consumed, so the output must be invariant). */
   private[graft] def substringDedupOf(docsDf: DataFrame, k: Int = 20): DataFrame = {
     val toks = substringToks(docsDf)
     val wins = substringWindows(toks, k)
@@ -2059,6 +2029,21 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** Q73 — exact substring-level dedup (the "dedup makes LMs better"
+    * mode, at rolling-window granularity): a 20-token window is
+    * duplicated when its text occurs ≥ 2 times anywhere in the corpus;
+    * a token is duplicated when any duplicated window covers it. Emits
+    * per-doc token counts and the duplicated-token fraction — the
+    * number a curation pass thresholds to drop boilerplate-heavy docs.
+    *
+    * Distributed shape ([[substringDedupOf]]): windows travel as
+    * 16-byte md5 digests (the q16 digest-key move — the 20-word text
+    * never leaves the scan), the ≥2 test is one groupBy on the digest,
+    * and coverage is a ±k position explode + distinct with NO join wider
+    * than (doc_id, digest). The digest exchange is ~n_tok rows × 16 B —
+    * the inherent cost of exact substring dedup; at 100 TB the standard
+    * prefilter (seen-digest bloom from a first pass) bolts onto the
+    * same plan in front of the exchange, exactly like q47b's. */
   val q73_substring_dedup: Query = Query(
     s"""WITH d AS (SELECT doc_id, string_split($normSql, ' ') AS a FROM documents),
        |     t AS (SELECT doc_id, a, len(a) AS n FROM d),

@@ -126,59 +126,72 @@ object VectorOps {
       .orderBy("label", "pos")
   }
 
-  /** Row-count gate for the q28 brute-force kernel: up to ~200k rows ×
-    * 64 floats ≈ 60-100 MB broadcast — comfortable on production
-    * executors; beyond that the LSH-blocked pair generator takes over. */
+  /** Row-count gate for [[cosinePairs]]: up to ~200k rows × 64 floats ≈
+    * 60-100 MB broadcast — comfortable on production executors — the
+    * exact [[bruteCosinePairs]] kernel runs; beyond that
+    * [[lshCosinePairs]] takes over. */
   private[graft] val BruteForceBroadcastLimit = 200000L
 
-  /** Scored cosine pairs (v1 < v2) with a runtime size gate: if the
-    * corpus fits [[BruteForceBroadcastLimit]] (one cheap count — parquet
-    * metadata fast-path) the exact broadcast nested-loop kernel runs;
-    * otherwise candidates come from the q30 LSH cells (shared planes,
-    * (tbl, bkt) equi-join, never a cross product) and only candidates
-    * are rescored exactly. The fallback is approximate by construction,
-    * but for the HIGH-cosine pairs — the ones near-dup consumers act on —
-    * per-table collision odds are highest (sign-LSH: (1−θ/π)^8 per
-    * table, 64 tables), so recall is strongest exactly where it
-    * matters.
+  /** Scored cosine pairs (v1 < v2, cos) with a runtime size gate on the
+    * corpus row count (one cheap count — parquet metadata fast-path):
+    * [[bruteCosinePairs]] up to [[BruteForceBroadcastLimit]] rows,
+    * [[lshCosinePairs]] past it.
     *
-    * The q28/q46 DuckDB oracles describe the EXACT branch: they hold at
+    * The q28/q46 DuckDB oracles describe the EXACT side: they hold at
     * every oracle-gate scale (the gate only trips past 200k vectors,
     * 40× the sf0.1 corpus). Past the gate the declared contract weakens
     * to DedupSpec's recall bound by design — an exact 100 TB all-pairs
     * answer does not exist on any engine, and the oracle's own quadratic
     * join would be the first casualty. */
-  private[graft] def cosinePairs(embTab: DataFrame, broadcastLimit: Long): DataFrame = {
-    val e = embTab.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
-    val pairs =
-      if (embTab.count() <= broadcastLimit) {
-        val lhs = e.select(col("vec_id").as("v1"), col("embedding").as("e1"), col("nrm").as("n1"))
-          // the O(n²) kernel must run at FULL parallelism even when the
-          // scan is one split (single row group locally; a small dim
-          // file at scale): hash-spread the probe side — at most the
-          // gate's ~100 MB moves, and the pair set is partition-invariant
-          .repartition(embTab.sparkSession.sparkContext.defaultParallelism, col("v1"))
-        val rhs = e.select(col("vec_id").as("v2"), col("embedding").as("e2"), col("nrm").as("n2"))
-        lhs.join(broadcast(rhs), col("v1") < col("v2"))
-      } else {
-        val cells = lshCells(e)
-        cells.select(col("vec_id").as("v1"), col("embedding").as("e1"),
-            col("nrm").as("n1"), col("tbl"), col("bkt"))
-          .join(cells.select(col("vec_id").as("v2"), col("embedding").as("e2"),
-            col("nrm").as("n2"), col("tbl"), col("bkt")), Seq("tbl", "bkt"))
-          .filter(col("v1") < col("v2"))
-          .dropDuplicates("v1", "v2")
-      }
+  private[graft] def cosinePairs(embTab: DataFrame): DataFrame =
+    if (embTab.count() <= BruteForceBroadcastLimit) bruteCosinePairs(embTab)
+    else lshCosinePairs(embTab)
+
+  /** (vec_id, embedding, nrm) — the input both [[cosinePairs]] sides pair up. */
+  private def withNorm(embTab: DataFrame): DataFrame =
+    embTab.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("nrm"))
+
+  /** (v1, v2, cos) from pair rows carrying (e1, n1, e2, n2). */
+  private def scoredPairs(pairs: DataFrame): DataFrame =
     pairs.select(col("v1"), col("v2"),
       (dot(col("e1"), col("e2")) / (col("n1") * col("n2"))).as("cos"))
+
+  /** [[cosinePairs]] below [[BruteForceBroadcastLimit]]: the exact
+    * broadcast nested-loop kernel over every pair. */
+  private[graft] def bruteCosinePairs(embTab: DataFrame): DataFrame = {
+    val e = withNorm(embTab)
+    val lhs = e.select(col("vec_id").as("v1"), col("embedding").as("e1"), col("nrm").as("n1"))
+      // the O(n²) kernel must run at FULL parallelism even when the
+      // scan is one split (single row group locally; a small dim
+      // file at scale): hash-spread the probe side — at most the
+      // gate's ~100 MB moves, and the pair set is partition-invariant
+      .repartition(embTab.sparkSession.sparkContext.defaultParallelism, col("v1"))
+    val rhs = e.select(col("vec_id").as("v2"), col("embedding").as("e2"), col("nrm").as("n2"))
+    scoredPairs(lhs.join(broadcast(rhs), col("v1") < col("v2")))
   }
 
-  /** Top-`k` cosine pairs over the gated [[cosinePairs]] generator;
-    * orderBy+limit plans as TakeOrderedAndProject, so only per-partition
-    * top-k rows move. */
-  private[graft] def topCosinePairs(embTab: DataFrame, broadcastLimit: Long,
-      k: Int = 50): DataFrame =
-    cosinePairs(embTab, broadcastLimit)
+  /** [[cosinePairs]] past [[BruteForceBroadcastLimit]]: candidates from
+    * the q30 LSH cells (shared planes, (tbl, bkt) equi-join, never a
+    * cross product), rescored exactly. Approximate by construction, but
+    * for the HIGH-cosine pairs — the ones near-dup consumers act on —
+    * per-table collision odds are highest (sign-LSH: (1−θ/π)^8 per
+    * table, 64 tables), so recall is strongest exactly where it
+    * matters. Nothing is broadcast. */
+  private[graft] def lshCosinePairs(embTab: DataFrame): DataFrame = {
+    val cells = lshCells(withNorm(embTab))
+    scoredPairs(cells.select(col("vec_id").as("v1"), col("embedding").as("e1"),
+        col("nrm").as("n1"), col("tbl"), col("bkt"))
+      .join(cells.select(col("vec_id").as("v2"), col("embedding").as("e2"),
+        col("nrm").as("n2"), col("tbl"), col("bkt")), Seq("tbl", "bkt"))
+      .filter(col("v1") < col("v2"))
+      .dropDuplicates("v1", "v2"))
+  }
+
+  /** Top-`k` pairs of a scored (v1, v2, cos) pair frame; orderBy+limit
+    * plans as TakeOrderedAndProject, so only per-partition top-k rows
+    * move. */
+  private[graft] def topCosinePairs(pairs: DataFrame, k: Int = 50): DataFrame =
+    pairs
       .orderBy(col("cos").desc, col("v1"), col("v2"))
       .limit(k)
       .select(col("v1"), col("v2"), cround(col("cos")).as("cos_sim"))
@@ -190,10 +203,10 @@ object VectorOps {
     * broadcast copy), the `graft_dot` native expression fuses the dot
     * product inside whole-stage codegen, and orderBy+limit plans as
     * TakeOrderedAndProject so only per-partition top-50s are shuffled —
-    * nothing quadratic moves. Past the gate ([[topCosinePairs]]) the
-    * corpus no longer broadcasts and the q30 LSH cells become the pair
-    * generator — the 100 TB path, exercised by DedupSpec at a forced-low
-    * threshold. */
+    * nothing quadratic moves ([[bruteCosinePairs]]). Past the gate
+    * ([[lshCosinePairs]]) the corpus no longer broadcasts and the q30
+    * LSH cells become the pair generator — the 100 TB path, which
+    * DedupSpec calls directly. */
   val q28_cosine_top_pairs: Query = Query(
     s"""WITH u AS ($unnestSql),
        |     nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS nrm FROM u GROUP BY 1),
@@ -206,7 +219,7 @@ object VectorOps {
        |FROM cos
        |ORDER BY cos DESC, v1, v2
        |LIMIT 50""") { (s, dir) =>
-    topCosinePairs(emb(s, dir), BruteForceBroadcastLimit)
+    topCosinePairs(cosinePairs(emb(s, dir)))
   }
 
   /** Cosine threshold for embedding near-dup dedup (q46). This synthetic
@@ -236,7 +249,7 @@ object VectorOps {
        |FROM cos WHERE cos >= $EmbedDupTau
        |GROUP BY 1
        |ORDER BY 1""") { (s, dir) =>
-    cosinePairs(emb(s, dir), BruteForceBroadcastLimit)
+    cosinePairs(emb(s, dir))
       .filter(col("cos") >= EmbedDupTau)
       .groupBy(col("v2").as("vec_id"))
       .agg(count(lit(1)).as("n_dups"), cround(max(col("cos"))).as("best_cos"))
@@ -315,22 +328,6 @@ object VectorOps {
       .orderBy("vec_id")
   }
 
-  /** Q30 — multi-table LSH ANN (the 100 TB path for Q17): L=64
-    * sign-random-projection tables of k=8 bits each; a candidate is any
-    * vector sharing a (table, bucket) cell with the probe, then exact
-    * cosine rescoring + top-5 rank. At cos≈0.5 neighbor similarity (this
-    * corpus) the per-table collision odds are ~0.667^8, so 64 tables give
-    * ~0.93 expected recall while touching ~20% of the corpus; k and L
-    * trade recall vs candidate volume as the corpus hardens/softens.
-    * Candidates join on the (table, bucket) key — an equi-join, never a
-    * cross product.
-    *
-    * Fully DuckDB-oracled (round-8, completing the q27/q61/q43/q62
-    * conversion arc): the md5-Rademacher planes, the exact-integer
-    * bucket signs and the float-cosine re-rank are all pure functions
-    * of the table, so the oracle rebuilds the entire index in SQL.
-    * DedupSpec still gates measured recall vs exact q17 — the oracle
-    * proves determinism, the spec proves the index is any good. */
   /** Sign-random-projection planes for the shared LSH index (L=64 tables
     * × k=8 bits over dim=64): symmetric 16-bit-uniform INTEGER entries
     * derived from md5("t_b_i") — the q27/q73 digest precedent. Entry =
@@ -396,6 +393,22 @@ object VectorOps {
       .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bkt")
   }
 
+  /** Q30 — multi-table LSH ANN (the 100 TB path for Q17): L=64
+    * sign-random-projection tables of k=8 bits each; a candidate is any
+    * vector sharing a (table, bucket) cell with the probe, then exact
+    * cosine rescoring + top-5 rank. At cos≈0.5 neighbor similarity (this
+    * corpus) the per-table collision odds are ~0.667^8, so 64 tables give
+    * ~0.93 expected recall while touching ~20% of the corpus; k and L
+    * trade recall vs candidate volume as the corpus hardens/softens.
+    * Candidates join on the (table, bucket) key — an equi-join, never a
+    * cross product.
+    *
+    * Fully DuckDB-oracled (round-8, completing the q27/q61/q43/q62
+    * conversion arc): the md5-Rademacher planes, the exact-integer
+    * bucket signs and the float-cosine re-rank are all pure functions
+    * of the table, so the oracle rebuilds the entire index in SQL.
+    * DedupSpec still gates measured recall vs exact q17 — the oracle
+    * proves determinism, the spec proves the index is any good. */
   val q30_ann_lsh: Query = Query(
     s"""WITH u AS ($unnestSql),
        |     qg AS MATERIALIZED (SELECT vec_id, i, CAST(round(v * 1000000.0) AS BIGINT) AS vn
@@ -456,26 +469,6 @@ object VectorOps {
       .orderBy("probe_id", "rn")
   }
 
-  /** Q43 — IVF-Flat ANN (the second scale path for Q17, complementing
-    * Q30's LSH): a spherical k-means coarse quantizer (nlist cells,
-    * deterministic init from the first vectors, 3 Lloyd rounds) built
-    * with distributed assignment + aggregation; each Lloyd round collects
-    * only the nlist×dim centroid sums — MODEL state, not data (at 100 TB
-    * you train on a sample; assignment stays a full parallel scan).
-    * Search probes the nprobe nearest cells, so candidates ≈
-    * nprobe/nlist of the corpus joined on the cell id — an equi-join,
-    * never a cross product. Approximate by construction → no SQL oracle;
-    * DedupSpec gates measured recall vs exact Q17. */
-  /** Deterministic spherical k-means fit over a (vec_id, embedding, …)
-    * frame: init = the `nlist` lowest-id vectors unit-normalized (vec_id
-    * collected alongside and the order fixed on the driver — relying on
-    * limit/collect to preserve the sort would lean on an implementation
-    * detail of TakeOrderedAndProject, not a contract), then `rounds`
-    * Lloyd iterations with distributed assignment + aggregation. Each
-    * round collects only the nlist×dim centroid sums — MODEL state, not
-    * data (at 100 TB you train on a sample; assignment stays a full
-    * parallel scan). Shared by q43's IVF coarse quantizer and q62's
-    * SemDeDup clustering. */
   /** Round half AWAY FROM ZERO — the rounding both Spark's `round()`
     * (BigDecimal HALF_UP over the shortest decimal repr) and DuckDB's
     * `round()` (C `round()`) apply to doubles. `math.round` would floor
@@ -506,22 +499,6 @@ object VectorOps {
     }
   }
 
-  /** Deterministic spherical k-means on the EXACT INTEGER GRID — the
-    * coarse quantizer shared by q43's IVF, q62's SemDeDup and q79b's
-    * IVF-PQ, now bit-replayable in DuckDB SQL (the PageRank
-    * long-numerator discipline applied to clustering): vectors live on
-    * the 1e-6 grid, centroids on the 1e-8 grid, Lloyd's per-cell sums
-    * are exact long sums (order-free by construction — THE property the
-    * old double-sum form lacked, where the reduction order of a
-    * distributed float sum made centroids partitioning-dependent at the
-    * last ulp), means re-quantize to the vector grid, and assignment
-    * scores are exact long dots divided by deterministic norms
-    * ([[graft.functions.NearestCellsGrid]]). Seeds are the `nlist`
-    * lowest-vec_id vectors grid-normalized; empty cells keep their
-    * previous centroid. Because every arithmetic step is a
-    * deterministic function of exact integers, the q62/q43 oracles
-    * replay the full fit with `rounds` unrolled CTE blocks (the q69 BPE
-    * unrolled-merge precedent). */
   /** Fingerprint feeder plans for this file's driver-eager codebook
     * fits (VERDICT r11 item 6): the kmeans / PQ fits collect a bounded
     * seed/sample frame and iterate driver-side, so the returned query
@@ -559,10 +536,42 @@ object VectorOps {
     * pure scheduling at sf0.1 against ~2 ms of arithmetic). */
   private[graft] val KmeansDriverFitGate = 64L << 20
 
+  /** Deterministic spherical k-means on the EXACT INTEGER GRID — the
+    * coarse quantizer shared by q43's IVF, q62's SemDeDup and q79b's
+    * IVF-PQ, now bit-replayable in DuckDB SQL (the PageRank
+    * long-numerator discipline applied to clustering): vectors live on
+    * the 1e-6 grid, centroids on the 1e-8 grid, Lloyd's per-cell sums
+    * are exact long sums (order-free by construction — THE property the
+    * old double-sum form lacked, where the reduction order of a
+    * distributed float sum made centroids partitioning-dependent at the
+    * last ulp), means re-quantize to the vector grid, and assignment
+    * scores are exact long dots divided by deterministic norms
+    * ([[graft.functions.NearestCellsGrid]]). Seeds are the `nlist`
+    * lowest-vec_id vectors grid-normalized; empty cells keep their
+    * previous centroid. Because every arithmetic step is a
+    * deterministic function of exact integers, the q62/q43 oracles
+    * replay the full fit with `rounds` unrolled CTE blocks (the q69 BPE
+    * unrolled-merge precedent). The caller passes the embeddings'
+    * parquet bytes: [[fitKmeansGridDriver]] up to
+    * [[KmeansDriverFitGate]], [[fitKmeansGridDistributed]] past it. */
   private[graft] def fitKmeansGrid(e: DataFrame, nlist: Int, rounds: Int,
-      embBytes: Long = Long.MaxValue): Array[Array[Long]] = {
-    val q = e.select(col("vec_id"), gridVec(col("embedding")).as("vn"))
-    if (embBytes <= KmeansDriverFitGate) return fitKmeansGridDriver(q, nlist, rounds)
+      embBytes: Long): Array[Array[Long]] =
+    if (embBytes <= KmeansDriverFitGate) fitKmeansGridDriver(e, nlist, rounds)
+    else fitKmeansGridDistributed(e, nlist, rounds)
+
+  /** (vec_id, vn) — the 1e-6-grid vectors both fit sides read. */
+  private def gridRows(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), gridVec(col("embedding")).as("vn"))
+
+  /** [[fitKmeansGrid]] past [[KmeansDriverFitGate]]: each Lloyd round is
+    * a distributed assignment + (cell, pos) aggregation that collects
+    * only the nlist×dim centroid sums — MODEL state, not data. The seeds'
+    * vec_ids are collected alongside and their order fixed on the
+    * driver: limit/collect preserving the sort would be an
+    * implementation detail of TakeOrderedAndProject, not a contract. */
+  private[graft] def fitKmeansGridDistributed(e: DataFrame, nlist: Int,
+      rounds: Int): Array[Array[Long]] = {
+    val q = gridRows(e)
     var cents: Array[Array[Long]] = q.orderBy("vec_id").limit(nlist).collect()
       .sortBy(_.getLong(0))
       .map(r => gridNormalize(r.getSeq[Long](1).toArray))
@@ -597,8 +606,9 @@ object VectorOps {
     * the mean/normalize steps reuse the very same rndAway/gridNormalize
     * calls. Empty cells keep their previous centroid, exactly as the
     * distributed form's absent groups do. */
-  private def fitKmeansGridDriver(q: DataFrame, nlist: Int, rounds: Int): Array[Array[Long]] = {
-    val rows = q.collect()
+  private[graft] def fitKmeansGridDriver(e: DataFrame, nlist: Int,
+      rounds: Int): Array[Array[Long]] = {
+    val rows = gridRows(e).collect()
     val data: Array[(Long, Array[Long])] =
       rows.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
     var cents: Array[Array[Long]] = data.sortBy(_._1).take(nlist)
@@ -679,11 +689,11 @@ object VectorOps {
     cents
   }
 
-  /** Nearest-centroid assignment as a fused primitive loop (cells are
-    * unit vectors, so argmax dot == argmax cosine for a fixed |v|). */
   /** Argmax cell assignment — `graft_nearest_cells` at k=1 (the
     * codegen'd [[graft.functions.NearestCells]] kernel; NearestCellsSpec
-    * pins bitwise equality with the interpreted argmax it replaced). */
+    * pins bitwise equality with the interpreted argmax it replaced).
+    * Cells are unit vectors, so argmax dot == argmax cosine for a fixed
+    * |v|. */
   private[graft] def assignCell(v: Column, cs: Array[Array[Double]]): Column =
     element_at(nearestCells(v, cs, 1), 1)
 
@@ -848,7 +858,13 @@ object VectorOps {
        |FROM rk WHERE rn <= 5
        |ORDER BY probe_id, rn""".stripMargin
 
-  /** Q43 — IVF ANN (coarse-quantize, probe nprobe cells, exact re-rank).
+  /** Q43 — IVF ANN (coarse-quantize, probe nprobe cells, exact re-rank):
+    * the spherical k-means coarse quantizer ([[fitKmeansGrid]]: nlist
+    * cells, seeded from the lowest-id vectors, 3 Lloyd rounds — on the
+    * driver below [[KmeansDriverFitGate]], distributed rounds past it,
+    * either way only MODEL state crosses the driver), then search probes
+    * the nprobe nearest cells, so candidates ≈ nprobe/nlist of the
+    * corpus joined on the cell id — an equi-join, never a cross product.
     * Fully DuckDB-oracled since the coarse quantizer moved to the exact
     * integer grid ([[fitKmeansGrid]]): the oracle replays the whole fit
     * with 3 unrolled Lloyd-round CTE blocks, reassigns every vector and
@@ -1125,16 +1141,6 @@ object VectorOps {
     out
   }
 
-  /** Q79 — product-quantization ANN (the memory-bandwidth scale path for
-    * 100 TB similarity search, complementing Q30 LSH / Q43 IVF / Q61
-    * int8): vectors compress 32× to m=8 byte codes; search scans the
-    * CODES with per-probe ADC lookup tables (approx cosine = ADC dot /
-    * (probe norm × reconstruction norm)), shortlists the top 40 per
-    * probe, then re-ranks the shortlist EXACTLY — full vectors are
-    * fetched only for shortlist×probes rows via a broadcast semi-join,
-    * so the float corpus is read once at encode time and never again in
-    * the scan. Approximate by construction → no SQL oracle; DedupSpec
-    * gates recall vs exact Q17 plus the 32× code-size claim. */
   /** Shared PQ search tail: ADC-shortlist the top `shortlist` candidates
     * per probe, then re-rank the shortlist EXACTLY — full vectors are
     * fetched only for shortlist×probes rows via broadcast semi-joins, so
@@ -1159,6 +1165,17 @@ object VectorOps {
       .orderBy("probe_id", "rn")
   }
 
+  /** Q79 — product-quantization ANN (the memory-bandwidth scale path for
+    * 100 TB similarity search, complementing Q30 LSH / Q43 IVF / Q61
+    * int8): vectors compress 32× to m=8 byte codes; search scans the
+    * CODES with per-probe ADC lookup tables (approx cosine = ADC dot /
+    * (probe norm × reconstruction norm)), shortlists the top 40 per
+    * probe, then re-ranks the shortlist EXACTLY — full vectors are
+    * fetched only for shortlist×probes rows via a broadcast semi-join,
+    * so the float corpus is read once at encode time and never again in
+    * the scan. The DuckDB oracle replays the codebook fit, the code
+    * scan and the re-rank; DedupSpec gates recall vs exact Q17 plus the
+    * 32× code-size claim. */
   val q79_pq_ann: Query = Query(
     s"""WITH u AS ($unnestSql),
        |     $qgCte,

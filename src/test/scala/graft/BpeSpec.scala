@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.TextOps
 
-/** Gate for q69 BPE merge learning: the distributed Iterate-based
-  * trainer must produce EXACTLY the merge list a sequential textbook
+/** Gate for q69 BPE merge learning: both sides of the driver-finish
+  * gate (the driver merge loop and the distributed Iterate rounds)
+  * must produce EXACTLY the merge list a sequential textbook
   * implementation (Sennrich et al. 2016, greedy leftmost application,
   * ties on count DESC then pair ASC) derives from the same word
   * frequencies — on a hand-checkable synthetic corpus and on the real
@@ -59,10 +60,12 @@ class BpeSpec extends SparkSpec {
     docsDf.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val want = referenceBpe(
       Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L), 8)
-    // both engine paths: the size-gated driver finish (default) and the
-    // distributed Iterate rounds (gate forced to 0)
-    val gotLocal = TextOps.bpeMergeRules(spark, tmp, maxMerges = 8)
-    val gotDist = TextOps.bpeMergeRules(spark, tmp, maxMerges = 8, driverFinishMax = 0L)
+    // both sides of the driver-finish gate over the same vocabulary:
+    // the driver merge loop and the distributed Iterate rounds
+    val vocab = TextOps.bpeInitVocab(spark, tmp).persist()
+    val gotLocal = TextOps.bpeMergesOnDriver(vocab, maxMerges = 8)
+    val gotDist = TextOps.bpeMergeRounds(vocab, maxMerges = 8)
+    vocab.unpersist()
     assert(gotLocal == want, s"\ngot  $gotLocal\nwant $want")
     assert(gotDist == want, s"\ngot  $gotDist\nwant $want")
     // spot-check the textbook head: "es" (9) then "est" (9) lead
@@ -75,7 +78,7 @@ class BpeSpec extends SparkSpec {
       .groupBy("w").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = referenceBpe(freqs, 12)
-    val got = TextOps.bpeMergeRules(spark, dir, maxMerges = 12, driverFinishMax = 0L)
+    val got = TextOps.bpeMergeRounds(TextOps.bpeInitVocab(spark, dir), maxMerges = 12)
     assert(want.nonEmpty && got == want, s"\ngot  ${got.take(4)}…\nwant ${want.take(4)}…")
   }
 

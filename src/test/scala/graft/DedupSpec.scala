@@ -20,6 +20,35 @@ class DedupSpec extends SparkSpec {
     assert(lsh == exact)
   }
 
+  private def jacTriples(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.select("d1", "d2", "jac").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  // siftedJaccard is the past side of SigBroadcastGate (1M docs) and of
+  // LshRawVerifyMax (100k docs), so no fixture reaches it through q25 or
+  // q26; these call it directly on each query's own candidates.
+  test("q25 past SigBroadcastGate: unsifted PPJoin + siftedJaccard equal rawJaccard and q25") {
+    val sets = TextOps.shingleSets(spark, dir)
+    val (cand, prefix) = TextOps.ppjoinCandidates(TextOps.shingles(spark, dir), None)
+    val sifted = jacTriples(TextOps.siftedJaccard(sets, cand))
+    val raw = jacTriples(TextOps.rawJaccard(sets, cand))
+    prefix.unpersist()
+    assert(sifted.nonEmpty, "fixture should contain near-dup pairs")
+    assert(sifted == raw)
+    assert(sifted == jacTriples(TextOps.jaccardPairs(spark, dir)))
+  }
+
+  test("q26 past LshRawVerifyMax: siftedJaccard equals rawJaccard on the banded candidates") {
+    val sets = TextOps.shingleSets(spark, dir)
+    val cand = TextOps.bandedCandidates(sets).persist()
+    val sifted = jacTriples(TextOps.siftedJaccard(sets, cand))
+    val raw = jacTriples(TextOps.rawJaccard(sets, cand))
+    cand.unpersist()
+    assert(sifted.nonEmpty, "fixture should contain near-dup pairs")
+    assert(sifted == raw)
+    assert(sifted == jacTriples(TextOps.lshJaccardPairs(spark, dir)))
+  }
+
   test("q27 SimHash chunk-banded pairs equal brute-force hamming pairs") {
     val sigs = TextOps.simhashSignatures(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
@@ -54,11 +83,17 @@ class DedupSpec extends SparkSpec {
     // CHAIN A~B~C~… has diameter = n and would cost n rounds under
     // plain min-label propagation. The pointer-doubling loop must label
     // a diameter-100 path correctly in ~log2(100) rounds.
-    // driverFinishMax = 0 forces the DISTRIBUTED loop — the default
-    // size gate would finish these toy graphs on the driver and make
-    // the doubling bound vacuous
+    // componentsByPropagation is the DISTRIBUTED side — the size gate
+    // would finish these toy graphs on the driver and make the doubling
+    // bound vacuous
+    def propagate(edges: org.apache.spark.sql.DataFrame) = {
+      val forest = TextOps.componentForest(edges)
+      val out = TextOps.componentsByPropagation(forest)
+      forest.unpersist()
+      out
+    }
     val path = (0L until 100L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val (labels, rounds) = TextOps.connectedComponents(path, driverFinishMax = 0L)
+    val (labels, rounds) = propagate(path)
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 101 && got.forall(_._2 == 0L),
       "every vertex of the path must carry the component-min label")
@@ -68,7 +103,7 @@ class DedupSpec extends SparkSpec {
     // disjoint chains must keep distinct labels (no cross-component bleed)
     val two = ((0L until 50L).map(i => (i, i + 1))
       ++ (1000L until 1050L).map(i => (i, i + 1))).toDF("d1", "d2")
-    val (labels2, _) = TextOps.connectedComponents(two, driverFinishMax = 0L)
+    val (labels2, _) = propagate(two)
     val byLbl = labels2.collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._2)
     assert(byLbl.keySet == Set(0L, 1000L))
     assert(byLbl(0L).map(_._1).toSet == (0L to 50L).toSet)
@@ -79,10 +114,11 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // brute force: ALL rep pairs sharing >= 1 trigram, exact jaccard —
     // a different plan (shared-shingle join + groupBy, no prefix
-    // filtering) over the same rep sets. Round 11: the production path
-    // is exact PPJoin (banding lost marginal jac~tau pairs at 30x), so
-    // this equality is now a THEOREM (prefix filtering is lossless),
-    // and any miss is a bug in the prefix/positional bounds.
+    // filtering) over the same rep sets, against the PPJoin side of
+    // PassageCountJoinGate (the fixture's default is the counted join).
+    // Round 11: banding lost marginal jac~tau pairs at 30x, so this
+    // equality is a THEOREM (prefix filtering is lossless), and any
+    // miss is a bug in the prefix/positional bounds.
     val psets = TextOps.passageRepSets(spark, dir).persist()
     val tg = psets.select(col("doc_id"), explode(col("gs")).as("g"))
     val cnt = psets.select(col("doc_id"), col("n"))
@@ -94,7 +130,7 @@ class DedupSpec extends SparkSpec {
       .join(cnt.select(col("doc_id").as("o2"), col("n").as("n2")), "o2")
       .filter(col("inter") * 1.0 / (col("n1") + col("n2") - col("inter")) >= TextOps.JaccardTau)
       .select("o1", "o2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val found = TextOps.passageNearDupPairs(spark, dir)
+    val found = TextOps.ppjoinPassagePairs(spark, dir)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     psets.unpersist()
     assert(found == brute)
@@ -107,46 +143,45 @@ class DedupSpec extends SparkSpec {
     // materializing pairs — so a wrong flag set that happened to
     // preserve per-doc counts would slip past the q54b oracle rollup.
     // Pin the flag set itself against the pair route (ADVICE r12: the
-    // kernel's scaladoc claimed this test existed; now it does).
-    // forceCountShuffle: the comparison pair frame must NOT share the
-    // kernel's broadcast partner index, or a bug in the index itself
-    // would cancel out of the equality
+    // kernel's scaladoc claimed this test existed; now it does). The
+    // flow side reads the counted trigram join on this fixture, which
+    // does NOT share the kernel's broadcast partner index, so a bug in
+    // the index itself cannot cancel out of the equality
+    assert(graft.queries.tableBytes(dir, "documents") <= TextOps.PassageCountJoinGate)
     val flags = TextOps.nearDupRepsKernel(spark, dir)
       .collect().map(_.getLong(0)).toSet
-    val viaPairs = TextOps.passageNearDupPairs(spark, dir, forceCountShuffle = true)
-      .select("d2").distinct().collect().map(_.getLong(0)).toSet
+    val viaPairs = TextOps.nearDupRepsFlow(spark, dir)
+      .collect().map(_.getLong(0)).toSet
     assert(flags == viaPairs)
     assert(flags.nonEmpty, "fixture should contain dominated passage reps")
   }
 
-  test("q54b all three exact tiers agree pair-for-pair: kernel ≡ shuffle-counted ≡ PPJoin") {
-    // round 12: three gate tiers, all EXACT by construction — the
-    // broadcast kernel (default below PassageBroadcastGate), the
-    // shuffle-counted trigram join (below PassageCountJoinGate), and
-    // the prefix-filtered PPJoin (the 100 TB shape) — must agree on
-    // the full (d1, d2) pair set, not just the oracle's per-doc rollup.
-    val kernel = TextOps.passageNearDupPairs(spark, dir)
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val counted = TextOps.passageNearDupPairs(spark, dir, forceCountShuffle = true)
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pp = TextOps.passageNearDupPairs(spark, dir, forcePpjoin = true)
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(kernel == counted)
+  test("q54b counted trigram join equals PPJoin pair-for-pair") {
+    // both sides of PassageCountJoinGate are EXACT by construction — the
+    // shuffle-counted trigram join below it and the prefix-filtered
+    // PPJoin (the 100 TB shape) past it — and must agree on the full
+    // (d1, d2, jac) set, not just the oracle's per-doc rollup.
+    val counted = jacTriples(TextOps.countedPassagePairs(spark, dir))
+    val pp = jacTriples(TextOps.ppjoinPassagePairs(spark, dir))
     assert(counted == pp)
-    assert(kernel.nonEmpty, "fixture should contain near-dup passage reps")
+    assert(counted.nonEmpty, "fixture should contain near-dup passage reps")
   }
 
   test("connected components: driver-finish path equals the distributed loop") {
     import spark.implicits._
     // mixed shapes — a clique, a cross-partition chain, an isolated pair —
-    // must label identically through both the size-gated driver finish
-    // (default gate) and the full distributed propagation loop (gate 0)
+    // must label identically through both sides of the driver-finish
+    // gate: the driver union-find and the distributed propagation loop
     val edges = ((10L until 20L).flatMap(i => (i + 1 to 20L).map(j => (i, j)))
       ++ (100L until 140L).map(i => (i, i + 1))
       ++ Seq((500L, 501L))).toDF("d1", "d2")
-    val (viaDriver, r1) = TextOps.connectedComponents(edges)
-    val (viaLoop, _) = TextOps.connectedComponents(edges, driverFinishMax = 0L)
-    assert(r1 == 0, "small forest must take the driver-finish path")
+    assert(TextOps.connectedComponents(edges)._2 == 0,
+      "small forest must take the driver-finish path")
+    val forest = TextOps.componentForest(edges)
+    val (viaDriver, _) = TextOps.componentsOnDriver(forest)
+    val (viaLoop, loopRounds) = TextOps.componentsByPropagation(forest)
+    forest.unpersist()
+    assert(loopRounds > 0)
     val a = viaDriver.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = viaLoop.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
@@ -307,9 +342,9 @@ class DedupSpec extends SparkSpec {
 
   test("q28 past-the-gate LSH fallback recovers >= 0.8 of the brute-force top-50") {
     val e = graft.engine.Tables.table(spark, dir, "embeddings")
-    val brute = VectorOps.topCosinePairs(e, broadcastLimit = Long.MaxValue).collect()
+    val brute = VectorOps.topCosinePairs(VectorOps.bruteCosinePairs(e)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fallback = VectorOps.topCosinePairs(e, broadcastLimit = 0L)
+    val fallback = VectorOps.topCosinePairs(VectorOps.lshCosinePairs(e))
     val got = fallback.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute & got).size.toDouble / brute.size
     assert(recall >= 0.8, s"recall $recall")

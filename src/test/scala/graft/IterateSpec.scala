@@ -15,18 +15,18 @@ class IterateSpec extends SparkSpec {
   private def inc(df: org.apache.spark.sql.DataFrame) =
     df.select((col("x") + 1).as("x"))
 
-  test("loop runs until the measure converges, then exactly `extra` more rounds") {
+  test("loop stops on the round the measure converges, keeping the last two generations") {
     var measured = 0
-    val fix = Iterate.loop(Seq(0).toDF("x").persist(), maxRounds = 100, extra = 2) {
+    val fix = Iterate.loop(Seq(0).toDF("x").persist(), maxRounds = 100) {
       (cur, _) => inc(cur)
     } { (_, next) =>
       measured += 1
       next.head().getInt(0) >= 5 // converges on round 5
     }
-    assert(fix.rounds == 7, s"5 converging + 2 extra, got ${fix.rounds}")
-    assert(measured == 7, "measure must also run on extra rounds (MSE trajectories)")
-    assert(fix.cur.head().getInt(0) == 7)
-    assert(fix.prev.head().getInt(0) == 6, "second-to-last generation retained")
+    assert(fix.rounds == 5, s"5 converging rounds, got ${fix.rounds}")
+    assert(measured == 5, "one measure per round")
+    assert(fix.cur.head().getInt(0) == 5)
+    assert(fix.prev.head().getInt(0) == 4, "second-to-last generation retained")
   }
 
   test("maxRounds bounds a non-converging loop") {

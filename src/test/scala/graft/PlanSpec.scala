@@ -276,17 +276,18 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q54b passage near-dup: hash joins only, no cartesian, no sort of the fat verify stream") {
-    // round 11: BOTH exact gate sides pinned. Below PassageCountJoinGate
-    // the counted trigram self-join carries no arrays at all; past it
-    // the PPJoin path's rep shingle-array attach must stay free of any
-    // sort of the array-carrying stream (the q25 argument: sorting that
-    // stream is the spill risk).
+    // At this fixture q54b's accounting runs nearDupRepsKernel (below
+    // PassageBroadcastGate), a broadcast map pass with no join at all.
+    // The PPJoin side of PassageCountJoinGate is pinned directly: its
+    // rep shingle-array attach must stay free of any sort of the
+    // array-carrying stream (the q25 argument: sorting that stream is
+    // the spill risk).
     val df = graft.queries.TextOps.q54b_passage_neardup.fn(spark, dir)
     df.collect()
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       .split("== Initial Plan ==")(0)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    val pp = graft.queries.TextOps.passageNearDupPairs(spark, dir, forcePpjoin = true)
+    val pp = graft.queries.TextOps.ppjoinPassagePairs(spark, dir)
     pp.collect()
     val p2 = pp.queryExecution.explainString(ExplainMode.fromString("formatted"))
       .split("== Initial Plan ==")(0)

@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** fitKmeansGrid's round-13 driver path (one collect + driver-thread
-  * Lloyd rounds below KmeansDriverFitGate) must be BITWISE the
-  * distributed rounds it replaces — same seeds, same NearestCellsGrid
-  * assignment semantics, same exact-long (cell, pos) sums, same
-  * rndAway/gridNormalize steps. Forcing embBytes to each side of the
-  * gate exercises both code paths on the same fixture. */
+/** fitKmeansGrid's driver side (one collect + driver-thread Lloyd
+  * rounds below KmeansDriverFitGate) must be BITWISE its distributed
+  * side — same seeds, same NearestCellsGrid assignment semantics, same
+  * exact-long (cell, pos) sums, same rndAway/gridNormalize steps. Both
+  * named sides run on the same fixture. */
 class VectorDriverFitSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.01"
@@ -15,14 +14,14 @@ class VectorDriverFitSpec extends SparkSpec {
   test("driver-side kmeans fit equals the distributed fit bitwise") {
     val e = graft.engine.Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val driver = graft.queries.VectorOps.fitKmeansGrid(e, 16, 3, embBytes = 0L)
-    val dist = graft.queries.VectorOps.fitKmeansGrid(e, 16, 3, embBytes = Long.MaxValue)
+    val driver = graft.queries.VectorOps.fitKmeansGridDriver(e, 16, 3)
+    val dist = graft.queries.VectorOps.fitKmeansGridDistributed(e, 16, 3)
     assert(driver.length == dist.length)
     driver.indices.foreach { c =>
       assert(driver(c).sameElements(dist(c)), s"centroid $c differs")
     }
     // non-vacuous: the fit must actually move some centroid off its seed
-    val seeds = graft.queries.VectorOps.fitKmeansGrid(e, 16, 0, embBytes = 0L)
+    val seeds = graft.queries.VectorOps.fitKmeansGridDriver(e, 16, 0)
     assert(driver.indices.exists(c => !driver(c).sameElements(seeds(c))),
       "3 Lloyd rounds should move at least one centroid")
   }
