@@ -46,14 +46,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         BloomFilterMightContain(children.head, children(1))
       }))
     ext.injectFunction((
-      FunctionIdentifier("graft_nearest_cells"),
-      new ExpressionInfo(classOf[NearestCells].getName, "graft_nearest_cells"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          s"graft_nearest_cells expects exactly 3 arguments, got ${children.length}")
-        NearestCells(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
       FunctionIdentifier("graft_shingle_hashes"),
       new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
       (children: Seq[Expression]) => {

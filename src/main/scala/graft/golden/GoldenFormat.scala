@@ -1,6 +1,6 @@
 package graft.golden
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 /** Byte-faithful formatter for the reference's golden output files
   * (SURVEY.md §5.3): Python `str(float)` float repr, Hadoop-style

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 
@@ -771,7 +770,7 @@ object Graph {
     // and the [[TriangleCsrEdgeLimit]] trade note); past it the
     // intersect dataflow unchanged
     val e = coPurchaseEdges(s, dir)
-    if (graphStat("coPurchaseEdges", s, dir)._1 <= TriangleCsrEdgeLimit) trianglesKernel(s, dir, e)
+    if (graphStat("coPurchaseEdges", s, dir)._1 <= TriangleCsrEdgeLimit) trianglesKernel(s, e)
     else trianglesIntersect(e)
   }
 
@@ -852,8 +851,7 @@ object Graph {
     * GraphSpec equates kernel ≡ intersect ≡ brute force. Past the gate
     * the intersect dataflow is unchanged (its shuffle-hash shape is the
     * 100 TB path). */
-  private[graft] def trianglesKernel(s: SparkSession, dir: String,
-      e: DataFrame): DataFrame = {
+  private[graft] def trianglesKernel(s: SparkSession, e: DataFrame): DataFrame = {
     import s.implicits._
     val ids = nodeIds(e)
     val n = ids.length

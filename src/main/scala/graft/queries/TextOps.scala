@@ -123,7 +123,6 @@ object TextOps {
     }
     def argmax(scores: Seq[(String, String)]): String = {
       // pred = first lang (asc) whose score equals the max and > 0
-      val maxExpr = s"greatest(${scores.map(_._2).mkString(", ")})"
       val cases = scores.map { case (l, e) => s"WHEN ($e) = mx THEN '$l'" }.mkString(" ")
       s"CASE WHEN mx <= 0 THEN 'und' $cases END"
     }
@@ -551,12 +550,6 @@ object TextOps {
     rawJaccard(docSets, pass)
   }
 
-  /** [[rawJaccard]] with the canonical output shape (rounded, ordered). */
-  private def verifiedJaccard(docSets: DataFrame, cand: DataFrame): DataFrame =
-    rawJaccard(docSets, cand)
-      .select(col("d1"), col("d2"), cround(col("jac")).as("jaccard"))
-      .orderBy("d1", "d2")
-
   /** Q25 — n-gram Jaccard near-duplicate pairs (exact), PPJoin-style:
     * a naive shingle self-join explodes as Σ df(g)² on frequent shingles,
     * so candidates come from *prefix filtering* instead — rank each doc's
@@ -765,10 +758,12 @@ object TextOps {
   private val mhB = graft.functions.MinHashSignature.b
 
   /** (doc_id, band, bh) LSH band buckets from exploded shingle hashes:
-    * 48 minhashes in one aggregation pass, 8 bands × 6 rows. Shared by
-    * q26 and the streaming near-dup dedup
-    * ([[graft.streaming.Streams.startNearDupDedup]]) so batch and stream
-    * bucket documents identically. */
+    * 48 minhashes in one aggregation pass, 8 bands × 6 rows. The
+    * reference form of the banding: q26 and the streaming near-dup dedup
+    * ([[graft.streaming.Streams.startNearDupDedup]]) both run the fused
+    * [[bandedOfSets]], and MinHashSignatureSpec and StreamsSpec compare
+    * against this aggregation so batch and stream provably bucket
+    * documents identically. */
   private[graft] def bandedOf(sh: DataFrame): DataFrame = {
     val rBand = 6
     val nBands = 8

@@ -8,7 +8,6 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import scala.collection.parallel.CollectionConverters._
 
 import graft.engine.Tables
-import graft.functions.NearestCells.nearestCells
 
 /** Vector / embedding surface over the `embeddings` table (SURVEY.md
   * §2.10, Q17/Q18): similarity search, all-pairs similarity, and a typed
@@ -688,14 +687,6 @@ object VectorOps {
     }
     cents
   }
-
-  /** Argmax cell assignment — `graft_nearest_cells` at k=1 (the
-    * codegen'd [[graft.functions.NearestCells]] kernel; NearestCellsSpec
-    * pins bitwise equality with the interpreted argmax it replaced).
-    * Cells are unit vectors, so argmax dot == argmax cosine for a fixed
-    * |v|. */
-  private[graft] def assignCell(v: Column, cs: Array[Array[Double]]): Column =
-    element_at(nearestCells(v, cs, 1), 1)
 
   /** Argmax GRID cell assignment — `graft_nearest_cells_grid` at k=1
     * over the exact-integer quantizer ([[fitKmeansGrid]]). */

@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
 
@@ -283,43 +284,20 @@ object Streams {
   /** Streaming MinHash-LSH near-dup dedup via foreachBatch — the
     * production pattern for cross-batch near-dup state: per micro-batch,
     * band the incoming docs with EXACTLY the q26 bucketing
-    * (TextOps.bandedOf over TextOps.shinglesOf), drop any doc whose
-    * bucket was occupied by an earlier doc — earlier batch, or a
+    * (TextOps.bandedOfSets over TextOps.shingleSetsOf), drop any doc
+    * whose bucket was occupied by an earlier doc — earlier batch, or a
     * lower-doc_id row of the same batch — then record the batch's
     * buckets in the seen-store and the survivors in the output. Dropped
     * docs' buckets are recorded too (the conservative policy: a near-dup
     * of a dropped doc is also a near-dup of what got it dropped,
     * transitively through the shared bucket).
     *
-    * State lives in parquet, not the state store, in the LSM shape that
-    * survives 100 TB:
-    *
-    *  - base: a table bucketed on (band, bh) holding the distinct
-    *    buckets of every compacted batch. The per-batch membership
-    *    probe co-locates against the bucket layout — the store side is
-    *    scanned in place, NEVER shuffled (the BucketingSpec property;
-    *    StreamsSpec pins it on this exact join), so per-batch shuffle
-    *    cost is O(batch), not O(corpus history).
-    *  - delta: one small parquet dir per recent batch
-    *    (delta/batch=<id>); the membership probe against it is
-    *    O(batches since compaction), and compaction (every
-    *    `compactEvery` batches) folds it into a fresh distinct base
-    *    generation, so the store's size tracks the DISTINCT bucket set,
-    *    not the append history.
-    *
-    * Replay is exactly-once end to end: survivors and the batch's delta
-    * are both written to batch=<id> paths with overwrite (a replayed
-    * batch lands on top of its own partial output); the membership
-    * probe excludes the current batch's own delta partition (a replay
-    * must not see its first attempt's bands as "earlier"); and
-    * compaction runs at the START of its designated batch — before that
-    * batch's delta exists — so a replayed compaction folds exactly what
-    * the first attempt folded. Generation discovery keys off _SUCCESS
-    * markers, and the bucketed table definition is re-declared into a
-    * fresh session's catalog on restart (bucket metadata lives in the
-    * catalog; bucket ids live in the file names). The store and the
-    * checkpoint share a lifecycle: reuse a populated store only with
-    * its own checkpoint.
+    * State lives in a [[SeenStore]] keyed on (band, bh), not in the
+    * state store; its layout and replay contract are documented there.
+    * Survivors are written to `outDir/batch=<id>` with overwrite, so a
+    * replayed batch lands on top of its own partial output and the run
+    * is exactly-once end to end. The store and the checkpoint share a
+    * lifecycle: reuse a populated store only with its own checkpoint.
     *
     * Returns the started query; stop it via the handle. */
   def startNearDupDedup(docs: DataFrame, storeDir: String, outDir: String,
@@ -336,50 +314,157 @@ object Streams {
     * parallelism — on a cluster this is sized to executor count. */
   private[graft] val StoreBuckets = 32
 
-  private def emptyBands(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.range(0).select(lit(0).as("band"), lit(0L).as("bh"))
+  /** The LSM seen-store behind both streaming dedups: the set of keys
+    * every earlier micro-batch has recorded, under `dir`, in the shape
+    * that survives 100 TB. `keys` are its (column, SQL type) pairs —
+    * [[SeenStore.Bands]] for near-dup, [[SeenStore.Digests]] for
+    * substring — and the only thing the two callers differ in.
+    *
+    *  - base: a table bucketed on the keys holding the distinct keys of
+    *    every compacted batch. The membership probe co-locates against
+    *    the bucket layout — the store side is scanned in place, NEVER
+    *    shuffled (the BucketingSpec property; StreamsSpec pins it on
+    *    [[hits]]), so per-batch shuffle cost is O(batch), not O(corpus
+    *    history).
+    *  - delta: one small parquet dir per recent batch
+    *    (delta/batch=<id>); the probe against it is O(batches since
+    *    compaction), and compaction (every `compactEvery` batches) folds
+    *    it into a fresh distinct base generation, so the store's size
+    *    tracks the DISTINCT key set, not the append history.
+    *
+    * Replay contract: re-running any batch over any partial state of its
+    * first attempt yields the same committed store. A batch's delta is
+    * written to its batch=<id> path with overwrite; the probe excludes
+    * the current batch's own delta (a replay must not see its first
+    * attempt's keys as "earlier"); and compaction runs at the START of
+    * its designated batch — before that batch's delta exists — so a
+    * replayed compaction folds exactly what the first attempt folded.
+    * Generation discovery keys off _SUCCESS markers, and the bucketed
+    * table definition is re-declared into a fresh session's catalog on
+    * restart (bucket metadata lives in the catalog; bucket ids live in
+    * the file names). */
+  private[graft] final class SeenStore(spark: SparkSession, dir: String,
+      keys: Seq[(String, String)]) {
+    private val names = keys.map(_._1)
+    private val keyCols = names.map(col)
+    private val schema = keys.map { case (c, t) => s"$c $t" }.mkString(", ")
+    private val path = new Path(dir)
+    private val deltaPath = new Path(path, "delta")
+    private val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Catalog name for a store generation — keyed by the store path so
-    * two stores in one session can't collide, by generation so a
-    * compaction never overwrites the table it is reading. */
-  private def storeTable(storeDir: String, gen: Long): String =
-    f"graft_ndstore_${storeDir.hashCode & 0xffffffffL}%08x_${storeDir.length}%d_g$gen%d"
+    /** Catalog name for a generation — keyed by the store path so two
+      * stores in one session can't collide, by generation so a
+      * compaction never overwrites the table it is reading. */
+    private def tableName(gen: Long): String =
+      f"graft_seen_${dir.hashCode & 0xffffffffL}%08x_${dir.length}%d_g$gen%d"
 
-  /** Completed base generations under the store dir, oldest first.
-    * Only dirs with a _SUCCESS marker count: a compaction that crashed
-    * mid-write leaves no marker and is invisible (its replay rewrites
-    * the dir with overwrite). */
-  private def listGens(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: org.apache.hadoop.fs.Path): Seq[Long] = {
-    if (!fs.exists(storePath)) return Nil
-    fs.listStatus(storePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("base_g")
-        && fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("base_g").toLong)
-      .sorted
+    /** Completed base generations, oldest first. Only dirs with a
+      * _SUCCESS marker count: a compaction that crashed mid-write leaves
+      * no marker and is invisible (its replay rewrites the dir with
+      * overwrite). */
+    private def gens: Seq[Long] =
+      if (!fs.exists(path)) Nil
+      else fs.listStatus(path).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("base_g")
+          && fs.exists(new Path(st.getPath, "_SUCCESS")))
+        .map(_.getPath.getName.stripPrefix("base_g").toLong)
+        .sorted
+
+    /** Declare generation `gen`'s bucketed table into the session catalog
+      * if absent (a restarted job has a fresh catalog; the files carry
+      * their bucket ids in their names, so the re-declared definition
+      * reads them bucketed). Returns the table name. */
+    def table(gen: Long): String = {
+      val tbl = tableName(gen)
+      val ks = names.mkString(", ")
+      if (!spark.catalog.tableExists(tbl))
+        spark.sql(
+          s"""CREATE TABLE $tbl ($schema) USING parquet
+             |CLUSTERED BY ($ks) SORTED BY ($ks) INTO $StoreBuckets BUCKETS
+             |LOCATION '$dir/base_g$gen'""".stripMargin)
+      tbl
+    }
+
+    private def base(gens: Seq[Long]): Option[DataFrame] =
+      gens.lastOption.map(g => spark.table(table(g)).select(keyCols: _*))
+
+    /** The delta dirs of every recorded batch except `skip`'s. */
+    private def delta(skip: Option[Long]): Option[DataFrame] = {
+      val dirs =
+        if (!fs.exists(deltaPath)) Nil
+        else fs.listStatus(deltaPath).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch=")
+            && !skip.exists(id => st.getPath.getName == s"batch=$id"))
+          .map(_.getPath.toString)
+      if (dirs.isEmpty) None else Some(spark.read.schema(schema).parquet(dirs: _*))
+    }
+
+    /** The membership probe, isolated so StreamsSpec can pin its plan:
+      * `probe` (O(batch)) left-semi `seen` on the keys. Against the
+      * bucketed base only the probe side exchanges — the store is
+      * scanned co-located. */
+    def hits(probe: DataFrame, seen: DataFrame): DataFrame =
+      probe.join(seen.select(keyCols: _*), names, "left_semi")
+
+    /** Rows of `probe` whose key an earlier batch recorded: in the latest
+      * base generation or in any delta but `batchId`'s own. The delta
+      * dirs are enumerated explicitly, so a replay never counts its
+      * first attempt's keys as "earlier" (that would drop the whole
+      * batch), and the possibly-torn dir of a crashed write is never
+      * read. A row hit in both base and delta appears twice. */
+    def seenHits(probe: DataFrame, batchId: Long): DataFrame =
+      (base(gens) ++ delta(Some(batchId))).map(hits(probe, _))
+        .reduceOption(_ unionAll _).getOrElse(probe.limit(0))
+
+    /** Compaction at the start of batch `batchId` when it is due, BEFORE
+      * this batch's delta exists: the fold can then never contain the
+      * current batch. The gen check skips the fold when a first attempt
+      * of this batch already committed it. */
+    def compactIfDue(batchId: Long, compactEvery: Int): Unit =
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
+          && !gens.contains(batchId))
+        compact(batchId)
+
+    /** Record batch `batchId`'s keys (`recorded`'s key columns). */
+    def writeDelta(recorded: DataFrame, batchId: Long): Unit =
+      recorded.select(keyCols: _*).write.mode("overwrite")
+        .parquet(s"$dir/delta/batch=$batchId")
+
+    /** Fold base + all delta partitions into a fresh distinct base
+      * generation `newGen` bucketed on the keys, then drop the folded
+      * inputs. Crash-safe at every cut: the new generation is invisible
+      * until its _SUCCESS lands (a partial write is rewritten with
+      * overwrite on replay), and delta/old-gen deletion only happens
+      * after that marker, at which point the new base covers them. */
+    def compact(newGen: Long): Unit = {
+      val oldGens = gens
+      val parts = base(oldGens) ++ delta(None)
+      if (parts.nonEmpty) {
+        // repartition on the bucket key first: each task then owns whole
+        // buckets and writes exactly one file per bucket (a sorted
+        // single-file bucket scans back sort-free under SMJ)
+        val folded = parts.reduce(_ unionAll _).distinct()
+          .repartition(StoreBuckets, keyCols: _*)
+        spark.sql(s"DROP TABLE IF EXISTS ${tableName(newGen)}")
+        folded.write.bucketBy(StoreBuckets, names.head, names.tail: _*)
+          .sortBy(names.head, names.tail: _*)
+          .option("path", s"$dir/base_g$newGen")
+          .mode("overwrite").saveAsTable(tableName(newGen))
+        fs.delete(deltaPath, true)
+        oldGens.foreach { g =>
+          spark.sql(s"DROP TABLE IF EXISTS ${tableName(g)}")
+          fs.delete(new Path(path, s"base_g$g"), true)
+        }
+      }
+    }
   }
 
-  /** Declare generation `gen`'s bucketed table into the session catalog
-    * if absent (a restarted job has a fresh catalog; the files carry
-    * their bucket ids in their names, so the re-declared definition
-    * reads them bucketed). Returns the table name. */
-  private[graft] def ensureStoreTable(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, gen: Long): String = {
-    val tbl = storeTable(storeDir, gen)
-    if (!spark.catalog.tableExists(tbl))
-      spark.sql(
-        s"""CREATE TABLE $tbl (band INT, bh BIGINT) USING parquet
-           |CLUSTERED BY (band, bh) SORTED BY (band, bh) INTO $StoreBuckets BUCKETS
-           |LOCATION '$storeDir/base_g$gen'""".stripMargin)
-    tbl
+  private[graft] object SeenStore {
+    /** Near-dup keys: one row per occupied LSH bucket. */
+    val Bands: Seq[(String, String)] = Seq("band" -> "INT", "bh" -> "BIGINT")
+    /** Substring keys: one row per 20-token window digest. */
+    val Digests: Seq[(String, String)] = Seq("h" -> "BINARY")
   }
-
-  /** The base-side membership probe, isolated so StreamsSpec can pin its
-    * plan: bands (O(batch)) left-semi the bucketed base (O(corpus)).
-    * With the base bucketed on the join key, only the bands side
-    * exchanges — the store is scanned co-located. */
-  private[graft] def baseHits(bands: DataFrame, base: DataFrame): DataFrame =
-    bands.join(base.select("band", "bh"), Seq("band", "bh"), "left_semi")
 
   /** One micro-batch of [[startNearDupDedup]] — package-private so the
     * spec can replay a batch directly (the crash-recovery contract:
@@ -389,46 +474,17 @@ object Streams {
       storeDir: String, outDir: String, compactEvery: Int,
       refine: DataFrame => DataFrame = identity): Unit = {
     import graft.queries.TextOps
-    val spark = batch.sparkSession
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val deltaPath = new org.apache.hadoop.fs.Path(storePath, "delta")
-
-    // compaction first, BEFORE this batch's delta exists: the fold can
-    // then never contain the current batch, so a replayed compaction
-    // batch folds exactly what the first attempt folded. The gen check
-    // skips the fold when the first attempt already committed it.
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
-        && !listGens(fs, storePath).contains(batchId))
-      compactNearDupStore(spark, storeDir, batchId)
-
+    val store = new SeenStore(batch.sparkSession, storeDir, SeenStore.Bands)
+    store.compactIfDue(batchId, compactEvery)
     val b = batch.persist()
     // fused array path: bitwise-identical buckets to bandedOf(shinglesOf),
     // with no explode/aggregate shuffle inside the micro-batch
     val bands = TextOps.bandedOfSets(TextOps.shingleSetsOf(b)).persist()
     try {
-      val base = listGens(fs, storePath).lastOption
-        .map(g => spark.table(ensureStoreTable(spark, storeDir, g)))
-        .getOrElse(emptyBands(spark))
-      // delta dirs are enumerated explicitly, excluding the current
-      // batch's own partition: a replay must not count its first
-      // attempt's bands as "earlier docs" (that would drop the whole
-      // batch), and skipping the possibly-torn dir also means no footer
-      // of a crashed write is ever read
-      val deltaDirs =
-        if (!fs.exists(deltaPath)) Seq.empty[String]
-        else fs.listStatus(deltaPath).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch=")
-            && st.getPath.getName != s"batch=$batchId")
-          .map(_.getPath.toString)
-      val delta =
-        if (deltaDirs.isEmpty) emptyBands(spark)
-        else spark.read.schema("band INT, bh BIGINT").parquet(deltaDirs: _*)
       val intraFirst = bands.groupBy("band", "bh").agg(min(col("doc_id")).as("first_id"))
       val intraHit = bands.join(intraFirst, Seq("band", "bh"))
         .filter(col("doc_id") > col("first_id"))
-      val droppedIds = baseHits(bands, base).select("doc_id")
-        .unionAll(baseHits(bands, delta).select("doc_id"))
+      val droppedIds = store.seenHits(bands, batchId).select("doc_id")
         .unionAll(intraHit.select("doc_id")).distinct()
       // refine = the caller's stateless post-dedup filters (curation);
       // the store update below stays based on the FULL batch's bands, so
@@ -439,60 +495,18 @@ object Streams {
       // re-run lands on top of the first attempt's (possibly partial)
       // output instead of appending next to it
       survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      bands.select("band", "bh").write.mode("overwrite")
-        .parquet(s"$storeDir/delta/batch=$batchId")
-      ()
+      store.writeDelta(bands, batchId)
     } finally { bands.unpersist(); b.unpersist() }
-  }
-
-  /** Fold base + all delta partitions into a fresh distinct base
-    * generation bucketed on (band, bh), then drop the folded inputs.
-    * Crash-safe at every cut: the new generation is invisible until its
-    * _SUCCESS lands (a partial write is rewritten with overwrite on
-    * replay), and delta/old-gen deletion only happens after that marker,
-    * at which point the new base covers them. Package-private so the
-    * spec can exercise the fold and its growth accounting directly. */
-  private[graft] def compactNearDupStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, newGen: Long): Unit = {
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val deltaPath = new org.apache.hadoop.fs.Path(storePath, "delta")
-    val oldGens = listGens(fs, storePath)
-    val deltaDirs =
-      if (!fs.exists(deltaPath)) Seq.empty[String]
-      else fs.listStatus(deltaPath).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-        .map(_.getPath.toString)
-    if (oldGens.isEmpty && deltaDirs.isEmpty) return
-    val base = oldGens.lastOption
-      .map(g => spark.table(ensureStoreTable(spark, storeDir, g)).select("band", "bh"))
-      .getOrElse(emptyBands(spark))
-    val delta =
-      if (deltaDirs.isEmpty) emptyBands(spark)
-      else spark.read.schema("band INT, bh BIGINT").parquet(deltaDirs: _*)
-    // repartition on the bucket key first: each task then owns whole
-    // buckets and writes exactly one file per bucket (a sorted
-    // single-file bucket scans back sort-free under SMJ)
-    val folded = base.unionAll(delta).distinct()
-      .repartition(StoreBuckets, col("band"), col("bh"))
-    spark.sql(s"DROP TABLE IF EXISTS ${storeTable(storeDir, newGen)}")
-    folded.write.bucketBy(StoreBuckets, "band", "bh").sortBy("band", "bh")
-      .option("path", s"$storeDir/base_g$newGen")
-      .mode("overwrite").saveAsTable(storeTable(storeDir, newGen))
-    fs.delete(deltaPath, true)
-    oldGens.foreach { g =>
-      spark.sql(s"DROP TABLE IF EXISTS ${storeTable(storeDir, g)}")
-      fs.delete(new org.apache.hadoop.fs.Path(storePath, s"base_g$g"), true)
-    }
   }
 
   /** Streaming face of q73 (exact substring dedup): drop an incoming doc
     * when ≥ `tau` of its tokens are covered by 20-token windows that are
     * already in the seen-store (any earlier batch — including windows of
     * docs that were themselves dropped) or duplicated WITHIN the batch
-    * (≥ 2 occurrences, q73's in-corpus rule). Store layout, compaction,
-    * exactly-once replay and bucketed membership probes are the
-    * near-dup store's, with (h BINARY) window digests as the key. */
+    * (≥ 2 occurrences, q73's in-corpus rule). The seen-store is the
+    * near-dup dedup's [[SeenStore]] — same layout, compaction,
+    * exactly-once replay and bucketed membership probe — keyed on
+    * (h BINARY) window digests. */
   def startSubstringDedup(docs: DataFrame, storeDir: String, outDir: String,
       checkpointDir: String, compactEvery: Int = 8,
       tau: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
@@ -503,58 +517,21 @@ object Streams {
       }
       .start()
 
-  private def emptyDigests(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.range(0).select(lit(Array.empty[Byte]).as("h"))
-
-  private def substringStoreTable(storeDir: String, gen: Long): String =
-    f"graft_ssstore_${storeDir.hashCode & 0xffffffffL}%08x_${storeDir.length}%d_g$gen%d"
-
-  private[graft] def ensureSubstringStoreTable(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, gen: Long): String = {
-    val tbl = substringStoreTable(storeDir, gen)
-    if (!spark.catalog.tableExists(tbl))
-      spark.sql(
-        s"""CREATE TABLE $tbl (h BINARY) USING parquet
-           |CLUSTERED BY (h) SORTED BY (h) INTO $StoreBuckets BUCKETS
-           |LOCATION '$storeDir/base_g$gen'""".stripMargin)
-    tbl
-  }
-
   /** One micro-batch of [[startSubstringDedup]] — same replay contract
     * as [[processNearDupBatch]]: re-running any batch over any partial
     * state of its first attempt yields the same committed outputs. */
   private[graft] def processSubstringBatch(batch: DataFrame, batchId: Long,
       storeDir: String, outDir: String, compactEvery: Int, tau: Double): Unit = {
     import graft.queries.TextOps
-    val spark = batch.sparkSession
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val deltaPath = new org.apache.hadoop.fs.Path(storePath, "delta")
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
-        && !listGens(fs, storePath).contains(batchId))
-      compactSubstringStore(spark, storeDir, batchId)
+    val store = new SeenStore(batch.sparkSession, storeDir, SeenStore.Digests)
+    store.compactIfDue(batchId, compactEvery)
     val b = batch.persist()
     val toks = TextOps.substringToks(b)
     val wins = TextOps.substringWindows(toks).persist()
     try {
-      val base = listGens(fs, storePath).lastOption
-        .map(g => spark.table(ensureSubstringStoreTable(spark, storeDir, g)))
-        .getOrElse(emptyDigests(spark))
-      val deltaDirs =
-        if (!fs.exists(deltaPath)) Seq.empty[String]
-        else fs.listStatus(deltaPath).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch=")
-            && st.getPath.getName != s"batch=$batchId")
-          .map(_.getPath.toString)
-      val delta =
-        if (deltaDirs.isEmpty) emptyDigests(spark)
-        else spark.read.schema("h BINARY").parquet(deltaDirs: _*)
       // duplicated windows: seen in the store (bucketed co-located probe,
       // only the batch side exchanges) or ≥2 occurrences within the batch
-      val seenHit = wins.join(base.select("h"), Seq("h"), "left_semi")
-        .select("doc_id", "i")
-        .unionAll(wins.join(delta.select("h"), Seq("h"), "left_semi")
-          .select("doc_id", "i"))
+      val seenHit = store.seenHits(wins, batchId).select("doc_id", "i")
       val intraHit = wins.groupBy("h")
         .agg(collect_list(struct(col("doc_id"), col("i"))).as("ws"))
         .filter(size(col("ws")) >= 2)
@@ -573,44 +550,9 @@ object Streams {
       val survivors = b.join(droppedIds, Seq("doc_id"), "left_anti")
       survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       // the store ingests ALL batch windows — dedup state is independent
-      // of what the threshold drops, the near-dup store's rule
-      wins.select("h").distinct().write.mode("overwrite")
-        .parquet(s"$storeDir/delta/batch=$batchId")
-      ()
+      // of what the threshold drops, the near-dup dedup's rule
+      store.writeDelta(wins.select("h").distinct(), batchId)
     } finally { wins.unpersist(); b.unpersist() }
-  }
-
-  /** [[compactNearDupStore]] for the digest store: fold base + deltas
-    * into one distinct bucketed generation, then drop the folded inputs. */
-  private[graft] def compactSubstringStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, newGen: Long): Unit = {
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val deltaPath = new org.apache.hadoop.fs.Path(storePath, "delta")
-    val oldGens = listGens(fs, storePath)
-    val deltaDirs =
-      if (!fs.exists(deltaPath)) Seq.empty[String]
-      else fs.listStatus(deltaPath).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-        .map(_.getPath.toString)
-    if (oldGens.isEmpty && deltaDirs.isEmpty) return
-    val base = oldGens.lastOption
-      .map(g => spark.table(ensureSubstringStoreTable(spark, storeDir, g)).select("h"))
-      .getOrElse(emptyDigests(spark))
-    val delta =
-      if (deltaDirs.isEmpty) emptyDigests(spark)
-      else spark.read.schema("h BINARY").parquet(deltaDirs: _*)
-    val folded = base.unionAll(delta).distinct()
-      .repartition(StoreBuckets, col("h"))
-    spark.sql(s"DROP TABLE IF EXISTS ${substringStoreTable(storeDir, newGen)}")
-    folded.write.bucketBy(StoreBuckets, "h").sortBy("h")
-      .option("path", s"$storeDir/base_g$newGen")
-      .mode("overwrite").saveAsTable(substringStoreTable(storeDir, newGen))
-    fs.delete(deltaPath, true)
-    oldGens.foreach { g =>
-      spark.sql(s"DROP TABLE IF EXISTS ${substringStoreTable(storeDir, g)}")
-      fs.delete(new org.apache.hadoop.fs.Path(storePath, s"base_g$g"), true)
-    }
   }
 
   /** Streaming corpus decontamination (the streaming face of

@@ -189,7 +189,7 @@ object ProbeScaleVerify {
     // against the shuffle-attach intersect dataflow on the same edges
     // (integer counts + the same cround — any CSR pack/merge-walk slip
     // diverges)
-    val triK = Graph.trianglesKernel(spark, dir, edges).collect().head
+    val triK = Graph.trianglesKernel(spark, edges).collect().head
     val triF = Graph.trianglesIntersect(edges).collect().head
     val triOk = triK.getLong(0) == triF.getLong(0) &&
       triK.getLong(1) == triF.getLong(1) &&

@@ -111,7 +111,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("q54b prefix-filtered passage near-dup pairs equal brute-force trigram jaccard, non-vacuously") {
-    import spark.implicits._
     // brute force: ALL rep pairs sharing >= 1 trigram, exact jaccard —
     // a different plan (shared-shingle join + groupBy, no prefix
     // filtering) over the same rep sets, against the PPJoin side of

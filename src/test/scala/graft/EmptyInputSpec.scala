@@ -89,7 +89,6 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("documented empty-case scalars: q34 MSE 0, q88 zero counts, q90 empty") {
-    import org.apache.spark.sql.functions.col
     val mse = SparkEntry.queries("q34_mse_on_orders")(spark, dir).collect()
     assert(mse.length == 1 && mse(0).getDouble(0) == 0.0)
     val tri = SparkEntry.queries("q88_triangles")(spark, dir).collect()

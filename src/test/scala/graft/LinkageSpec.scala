@@ -127,8 +127,6 @@ class LinkageSpec extends SparkSpec {
       s"one representative per cluster: got ${reps.length}, want ${clusters.size}")
     val quality = TextOps.q22_quality_score.fn(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getDouble(4)).toMap // doc_id -> quality
-    // recompute each cluster's member set from q37's label frame
-    val labels = TextOps.q37_dup_clusters.fn(spark, dir) // cluster_id, n_docs, min_doc, max_doc
     reps.foreach { r =>
       val (cid, rep, repQ, nDocs) = (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))
       assert(clusters(cid) == nDocs, s"cluster $cid size drifted")

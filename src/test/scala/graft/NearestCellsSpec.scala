@@ -2,35 +2,43 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.NearestCells.nearestCells
+import graft.functions.NearestCells.nearestCellsGrid
 
-/** Native NearestCells expression (graft.functions.NearestCells): the
-  * codegen'd IVF assignment/probe kernel must reproduce the interpreted
-  * argmax / stable-sort-desc-take-k UDF semantics it replaced EXACTLY —
-  * the IVF index layout and every recall gate downstream (q43, q62,
-  * q79b) depend on deterministic cell ids. */
+/** Native NearestCellsGrid expression (graft.functions.NearestCellsGrid),
+  * the IVF assignment/probe kernel q43, q62 and q79b run: it must
+  * reproduce the interpreted exact-long-dot / norm, stable-sort-desc,
+  * take-k semantics EXACTLY — the IVF index layout, the DuckDB oracle
+  * replay and every recall gate downstream depend on deterministic cell
+  * ids. */
 class NearestCellsSpec extends SparkSpec {
 
-  private def mkCents(n: Int, dim: Int, seed: Int): Array[Array[Double]] = {
+  /** Random centroids on the 1e-8 grid (|cn| ≤ 1e8, as fitKmeansGrid's). */
+  private def mkCents(n: Int, dim: Int, seed: Int): Array[Array[Long]] = {
     val rnd = new scala.util.Random(seed)
-    Array.fill(n)(Array.fill(dim)(rnd.nextGaussian()))
+    Array.fill(n)(Array.fill(dim)((rnd.nextGaussian() * 2e7).toLong))
   }
 
-  /** The interpreted reference: dots, stable sort by -dot, take k. */
-  private def refCells(cs: Array[Array[Double]], v: Array[Float], k: Int): Seq[Int] =
+  /** Random vectors on the 1e-6 grid (|vn| ≲ 1e6, as gridVec's). */
+  private def mkVec(dim: Int, rnd: scala.util.Random): Array[Long] =
+    Array.fill(dim)(((rnd.nextFloat() * 2 - 1) * 1e6).toLong)
+
+  /** The interpreted reference: exact long dot / sqrt((Σ cn²).toDouble),
+    * -1e308 for a zero-norm centroid, stable sort by -score, take k. */
+  private def refCells(cs: Array[Array[Long]], v: Array[Long], k: Int): Seq[Int] =
     cs.indices.map { c =>
-      val ct = cs(c); var d = 0.0; var i = 0
-      while (i < ct.length) { d += ct(i) * v(i).toDouble; i += 1 }
-      (c, d)
+      val ct = cs(c)
+      val dot = ct.indices.map(i => ct(i) * v(i)).sum
+      val nrm = math.sqrt(ct.map(x => x * x).sum.toDouble)
+      (c, if (nrm == 0) -1e308 else dot.toDouble / nrm)
     }.sortBy(-_._2).take(k).map(_._1)
 
-  test("graft_nearest_cells equals the interpreted stable top-k on random data") {
+  test("graft_nearest_cells_grid equals the interpreted stable top-k") {
     import spark.implicits._
     val cents = mkCents(16, 64, 11)
     val rnd = new scala.util.Random(13)
-    val rows = Seq.tabulate(200)(i => (i.toLong, Array.fill(64)(rnd.nextFloat() * 2 - 1)))
-    val got = rows.toDF("id", "v")
-      .select(col("id"), nearestCells(col("v"), cents, 4).as("cells"))
+    val rows = Seq.tabulate(200)(i => (i.toLong, mkVec(64, rnd)))
+    val got = rows.toDF("id", "vn")
+      .select(col("id"), nearestCellsGrid(col("vn"), cents, 4).as("cells"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     rows.foreach { case (id, v) =>
       assert(got(id) == refCells(cents, v, 4), s"vector $id")
@@ -39,11 +47,13 @@ class NearestCellsSpec extends SparkSpec {
 
   test("ties break toward the lower cell id (duplicate centroids)") {
     import spark.implicits._
-    val c = Array.fill(8)(1.0)
-    // cells 1 and 3 are identical; both beat the zero cell
-    val cents = Array(Array.fill(8)(0.0), c, Array.fill(8)(-1.0), c.clone())
-    val out = Seq(Tuple1(Array.fill(8)(1.0f))).toDF("v")
-      .select(nearestCells(col("v"), cents, 3).as("cells"))
+    val c = Array.fill(8)(1L)
+    // cells 1 and 3 are identical; both beat the orthogonal cell 0,
+    // which beats the opposed cell 2
+    val cents = Array(Array.tabulate(8)(i => if (i % 2 == 0) 1L else -1L), c,
+      Array.fill(8)(-1L), c.clone())
+    val out = Seq(Tuple1(Array.fill(8)(1L))).toDF("vn")
+      .select(nearestCellsGrid(col("vn"), cents, 3).as("cells"))
       .head().getSeq[Int](0)
     assert(out == Seq(1, 3, 0), s"stable tie order violated: $out")
   }
@@ -52,47 +62,55 @@ class NearestCellsSpec extends SparkSpec {
     import spark.implicits._
     val cents = mkCents(8, 16, 3)
     val rnd = new scala.util.Random(17)
-    Seq.tabulate(50)(i => (i.toLong, Array.fill(16)(rnd.nextFloat())))
-      .toDF("id", "v").createOrReplaceTempView("nc_t")
-    val lit = cents.map(_.map(v => s"${v}D").mkString("array(", ",", ")"))
+    val rows = Seq.tabulate(50)(i => (i.toLong, mkVec(16, rnd)))
+    rows.toDF("id", "vn").createOrReplaceTempView("nc_t")
+    val lit = cents.map(_.map(v => s"${v}L").mkString("array(", ",", ")"))
       .mkString("array(", ",", ")")
     val viaSql = spark.sql(
-      s"SELECT id, element_at(graft_nearest_cells(v, $lit, 1), 1) AS cell FROM nc_t")
+      s"SELECT id, element_at(graft_nearest_cells_grid(vn, $lit, 1), 1) AS cell FROM nc_t")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val viaCol = spark.table("nc_t")
-      .select(col("id"), element_at(nearestCells(col("v"), cents, 1), 1).as("cell"))
+      .select(col("id"), element_at(nearestCellsGrid(col("vn"), cents, 1), 1).as("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(viaSql == viaCol)
-    viaSql.foreach { case (id, cell) =>
-      // argmax = head of the full ranking
-      val v = spark.table("nc_t").filter(col("id") === id)
-        .head().getSeq[Float](1).toArray
-      assert(cell == refCells(cents, v, 1).head)
-    }
+    // argmax = head of the full ranking
+    rows.foreach { case (id, v) => assert(viaSql(id) == refCells(cents, v, 1).head, s"vector $id") }
   }
 
-  test("robustness: all-NaN vectors fall back to lowest cells; long vectors clamp to centroid dim") {
+  test("long vectors clamp to centroid dim; zero-norm cells rank last") {
     import spark.implicits._
     val cents = mkCents(4, 8, 7)
-    // NaN embedding: every dot is NaN, no comparison fires — the old
-    // interpreted UDF returned cell 0; the k>1 form must keep emitting
-    // lowest-unused ids, never index used(-1)
-    val nan = Seq(Tuple1(Array.fill(8)(Float.NaN))).toDF("v")
-      .select(nearestCells(col("v"), cents, 3).as("cells"))
+    // vector longer than the centroid dim: iterate min(dims) — must not
+    // throw AIOOBE
+    val long = Seq(Tuple1(Array.fill(12)(1000000L))).toDF("vn")
+      .select(nearestCellsGrid(col("vn"), cents, 1).as("cells"))
       .head().getSeq[Int](0)
-    assert(nan == Seq(0, 1, 2), s"NaN fallback must be lowest unused ids: $nan")
-    // vector longer than the centroid dim: iterate min(dims), as the
-    // UDF's ct.length loop did — must not throw AIOOBE
-    val long = Seq(Tuple1(Array.fill(12)(1.0f))).toDF("v")
-      .select(nearestCells(col("v"), cents, 1).as("cells"))
+    assert(long == refCells(cents, Array.fill(8)(1000000L), 1), s"clamped dot mismatch: $long")
+    // a zero-norm centroid scores the sentinel: ranked below every real
+    // score however negative, and among degenerate cells the lower id
+    // first
+    val zero = Array.fill(8)(0L)
+    val neg = Array.fill(8)(-100000000L)
+    val vn = Seq(Tuple1(Array.fill(8)(1000000L))).toDF("vn")
+    val ranked = vn.select(nearestCellsGrid(col("vn"), Array(zero, neg, zero.clone()), 3))
       .head().getSeq[Int](0)
-    assert(long == refCells(cents, Array.fill(8)(1.0f), 1), s"clamped dot mismatch: $long")
+    assert(ranked == Seq(1, 0, 2), s"zero-norm cells must rank last: $ranked")
+    val allZero = vn.select(nearestCellsGrid(col("vn"), Array.fill(3)(zero), 2))
+      .head().getSeq[Int](0)
+    assert(allZero == Seq(0, 1), s"all-degenerate cells keep id order: $allZero")
   }
 
   test("the IVF build scan stays whole-stage codegen (no BatchEvalPython/ScalaUDF)") {
+    import spark.implicits._
     val cents = mkCents(16, 64, 5)
-    val e = graft.engine.Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
-      .select(col("vec_id"), nearestCells(col("embedding"), cents, 1).as("cells"))
+    val rnd = new scala.util.Random(19)
+    val tmp = java.nio.file.Files.createTempDirectory("nc-scan").toString
+    Seq.tabulate(100)(i => (i.toLong, mkVec(64, rnd)))
+      .toDF("vec_id", "vn").write.parquet(s"$tmp/grid")
+    // the production assignment column (k=1) over a scan of grid vectors
+    val e = spark.read.parquet(s"$tmp/grid")
+      .select(col("vec_id"),
+        graft.queries.VectorOps.assignCellGrid(col("vn"), cents).as("cell"))
     val p = e.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!p.contains("ScalaUDF") && !p.contains("BatchEval"),

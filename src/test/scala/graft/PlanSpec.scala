@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.catalyst
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions.broadcast
 
 import graft.queries.Relational
 

@@ -10,9 +10,8 @@ import graft.queries.VectorOps.rndAway
 object PqReferenceUdfs {
 
   /** PQ encode: vector → `m` 8-bit codes (one byte each, read back
-    * unsigned): per subspace, the L2-nearest codebook entry. A fused primitive loop for
-    * the same reason as [[graft.queries.VectorOps.assignCellUdf]] — the interpreted HOF
-    * formulation would allocate per element.
+    * unsigned): per subspace, the L2-nearest codebook entry. A fused primitive loop:
+    * the interpreted HOF formulation would allocate per element.
     *
     * r14: retained as PqEncodeSpec's REFERENCE implementation only —
     * the hot path uses the graft_pq_encode codegen expression

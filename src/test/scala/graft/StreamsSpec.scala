@@ -584,15 +584,31 @@ class StreamsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       q.processAllAvailable()
     }
     q.stop()
-    val got = spark.read.parquet(s"$tmp/out").select("doc_id")
+    def readOut(): Set[Long] = spark.read.parquet(s"$tmp/out").select("doc_id")
       .collect().map(_.getLong(0)).toSet
-    assert(got == wantSurvivors.toSet)
+    assert(readOut() == wantSurvivors.toSet)
     // compaction accounting: one live generation, only post-fold deltas
     val gens = new java.io.File(s"$tmp/store").listFiles()
       .filter(_.getName.startsWith("base_g")).map(_.getName).toSeq
     assert(gens == Seq("base_g4"), s"exactly one live generation: $gens")
     val baseH = spark.read.parquet(s"$tmp/store/base_g4")
     assert(baseH.count() == baseH.distinct().count(), "folded store must be distinct")
+
+    // --- crash-replay over the digest-keyed store, as for near-dup: the
+    // last batch (also a compaction batch) re-run over its committed
+    // state, then over a state whose delta write never landed
+    val lastId = chunkIds.size - 1L
+    val lastBatch = chunkIds.last.toSeq.map(id => Streams.Doc(id, byId(id))).toDF()
+    Streams.processSubstringBatch(lastBatch, lastId,
+      s"$tmp/store", s"$tmp/out", compactEvery = 2, tau = tau)
+    assert(readOut() == wantSurvivors.toSet, "replay after full commit must change nothing")
+    new scala.reflect.io.Directory(
+      new java.io.File(s"$tmp/store/delta/batch=$lastId")).deleteRecursively()
+    Streams.processSubstringBatch(lastBatch, lastId,
+      s"$tmp/store", s"$tmp/out", compactEvery = 2, tau = tau)
+    assert(readOut() == wantSurvivors.toSet, "replay after partial commit must converge")
+    assert(new java.io.File(s"$tmp/store/delta/batch=$lastId").exists(),
+      "replay must restore the missing delta partition")
   }
 
   test("streaming curation equals near-dup replay + batch decontamination + batch quality") {
@@ -655,8 +671,9 @@ class StreamsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val tmp = java.nio.file.Files.createTempDirectory("neardup-plan").toString
     // seed a store: one delta batch folded into a bucketed base generation
     bands.select("band", "bh").write.parquet(s"$tmp/delta/batch=0")
-    Streams.compactNearDupStore(spark, tmp, 1L)
-    val base = spark.table(Streams.ensureStoreTable(spark, tmp, 1L))
+    val store = new Streams.SeenStore(spark, tmp, Streams.SeenStore.Bands)
+    store.compact(1L)
+    val base = spark.table(store.table(1L))
     // pin the at-scale plan: past the broadcast threshold the probe must
     // co-locate against the bucket layout, shuffling ONLY the batch side.
     // AQE off so the executed plan is a plain tree the walk below can
@@ -666,7 +683,7 @@ class StreamsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val probe = Streams.baseHits(bands, base)
+      val probe = store.hits(bands, base)
       probe.collect()
       val executed = probe.queryExecution.executedPlan
       assert(executed.toString.contains("SelectedBucketsCount"),

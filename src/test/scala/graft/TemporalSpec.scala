@@ -305,7 +305,7 @@ class TemporalSpec extends SparkSpec {
         col("event_type"), col("value")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3), r.getDouble(4)))
     val byUser = ev.groupBy(_._2)
-    def stateAt(user: Long, us: Long, eid: Long): Option[(String, Long, Long)] = {
+    def stateAt(user: Long, us: Long): Option[(String, Long, Long)] = {
       // runs of the user's non-purchase events in (us, event_id) order;
       // the active run is the last one starting at or before the probe
       val acts = byUser(user).filter(_._4 != "purchase").sortBy(e => (e._3, e._1))
@@ -321,7 +321,7 @@ class TemporalSpec extends SparkSpec {
     }
     val purchases = ev.filter(_._4 == "purchase")
     val expect = purchases.flatMap { p =>
-      stateAt(p._2, p._3, p._1).map(st => p._1 -> st)
+      stateAt(p._2, p._3).map(st => p._1 -> st)
     }.toMap
     val got = Temporal.q101_pit_join.fn(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getString(4), r.getLong(5), r.getLong(6)))).toMap
