@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Memo, Tables}
 
 /** Graph analytics over relational facts: PageRank (uniform and
   * co-purchase-weighted), triangle counting, and bounded shortest
@@ -76,7 +76,7 @@ object Graph {
     // q88 and q90 all consume this graph, so a session builds it once
     // (the bench's cache reset still charges each query its full
     // standalone cost)
-    TextOps.memo("coPurchaseEdges", s, dir) {
+    Memo("coPurchaseEdges", s, dir) {
       // ONE pass, ONE materialization: the dedup output is already
       // src-partitioned, so the degree fold is a window count whose only
       // cost is the per-partition sort by src (measured cheaper than the
@@ -90,43 +90,6 @@ object Graph {
       out
     }
 
-  /** The graph metadata every consumer needs — edge count (q88's CSR
-    * gate, the kernels' task sizing), node count (the PageRank init and
-    * the node gate), min node id (q90's source) — computed in the ONE
-    * action that materializes the edge cache, instead of a separate
-    * barrier job per consumer. Keyed like [[TextOps.memo]]'s frames and
-    * cleared with them by [[TextOps.resetCaches]], so an entry lives
-    * exactly as long as the memoized edge frame it describes. */
-  private val graphStats =
-    scala.collection.mutable.Map[(String, SparkSession, String), (Long, Long, Long)]()
-
-  /** Node/edge-sized kernel broadcasts whose lifetime matches the memo
-    * caches (ADVICE r10: the final-round rank vectors, dense-id maps
-    * and the q88 CSR were never released, so a long-lived session
-    * accumulated them until ContextCleaner GC). [[TextOps.resetCaches]]
-    * releases them together with the memoized frames they belong to.
-    * Released via unpersist(blocking = false) + dropping the strong
-    * ref — NOT destroy(): the memoized RDDs' recompute lineage closes
-    * over some of these (an evicted adjacency partition re-reads bIds),
-    * and unpersist keeps re-fetch-from-driver legal until GC finishes
-    * the job, while destroy would poison the lineage. */
-  private val trackedBroadcasts =
-    scala.collection.mutable.Buffer.empty[org.apache.spark.broadcast.Broadcast[_]]
-
-  private[graft] def track[T](b: org.apache.spark.broadcast.Broadcast[T])
-      : org.apache.spark.broadcast.Broadcast[T] =
-    trackedBroadcasts.synchronized { trackedBroadcasts += b; b }
-
-  /** Releases the tracked broadcasts and forgets the graph stats —
-    * [[TextOps.resetCaches]] calls it as it drops the memoized frames. */
-  private[graft] def resetGraphCaches(): Unit = {
-    trackedBroadcasts.synchronized {
-      trackedBroadcasts.foreach(_.unpersist(blocking = false))
-      trackedBroadcasts.clear()
-    }
-    graphStats.synchronized(graphStats.clear())
-  }
-
   private def recordGraphStats(tag: String, s: SparkSession, dir: String,
       edges: DataFrame): Unit = {
     // distinct src rides the frame's src partitioning (partial distinct
@@ -138,16 +101,18 @@ object Graph {
     // the memo build — consumers see n = 0 and return their documented
     // empty-graph value (see EmptyInputSpec)
     val minSrc = if (r.isNullAt(2)) Long.MaxValue else r.getLong(2)
-    graphStats.synchronized {
-      graphStats((tag, s, dir)) = (r.getLong(0), r.getLong(1), minSrc)
-    }
+    Memo(s"$tag.stats", s, dir)((r.getLong(0), r.getLong(1), minSrc))
   }
 
-  /** (nEdges, nNodes, minNode) recorded when `tag`'s edge memo
-    * ([[coPurchaseEdges]] or [[coPurchaseEdgesW]]) was built; call the
-    * memo first. */
+  /** The graph metadata every consumer needs — edge count (q88's CSR
+    * gate, the kernels' task sizing), node count (the PageRank init and
+    * the node gate), min node id (q90's source) — as (nEdges, nNodes,
+    * minNode), recorded by the ONE action that materializes `tag`'s edge
+    * memo ([[coPurchaseEdges]] or [[coPurchaseEdgesW]]) instead of a
+    * separate barrier job per consumer; call the memo first. */
   private[graft] def graphStat(tag: String, s: SparkSession, dir: String): (Long, Long, Long) =
-    graphStats.synchronized(graphStats((tag, s, dir)))
+    Memo[(Long, Long, Long)](s"$tag.stats", s, dir)(
+      throw new NoSuchElementException(s"graphStat($tag) before its edge memo was built"))
 
   /** The raw directed pair stream (one row per order co-containing a
     * part pair, both directions), delivered REPARTITIONED BY src — the
@@ -407,9 +372,9 @@ object Graph {
       bR.destroy()
       r = nr
     }
-    val bIds = track(s.sparkContext.broadcast(ids))
+    val bIds = Memo.track(s.sparkContext.broadcast(ids))
     val idOf = udf((i: Int) => bIds.value(i))
-    partials(track(s.sparkContext.broadcast(r)))
+    partials(Memo.track(s.sparkContext.broadcast(r)))
       .groupBy("i").agg(sum(col("k")).as("sk"))
       .select(idOf(col("i")).as("node"),
         cround(lit(tele) + lit(Damping) * (col("sk").cast("double") / scaleF), Digits)
@@ -433,12 +398,12 @@ object Graph {
   private def adjacencyUniform(s: SparkSession, dir: String,
       edges: DataFrame, ids: Array[Long]): org.apache.spark.rdd.RDD[(Int, Long, Array[Int])] = {
     import s.implicits._
-    TextOps.memoRdd("coPurchase.adj", s, dir) {
+    Memo("coPurchase.adj", s, dir) {
       // broadcast INSIDE the memo build (ADVICE r10: on a memo hit the
       // id array was re-broadcast on every call and never read); the
       // persisted RDD's recompute lineage closes over it, so it is
       // tracked and released together with the memo entry
-      val bIds = track(s.sparkContext.broadcast(ids))
+      val bIds = Memo.track(s.sparkContext.broadcast(ids))
       val built = edges.select("src", "dst", "outdeg").as[(Long, Long, Long)].rdd
         .mapPartitions { it =>
           val idsL = bIds.value
@@ -524,7 +489,7 @@ object Graph {
     // round 10.2: object-RDD adjacency, same rationale as the uniform
     // kernel — the Dataset persist paid ~10 cpu-s of UnsafeArrayData
     // encode and every round paid the matching decode
-    val rawAdj = TextOps.memoRdd("q85b.adjRaw", s, dir) {
+    val rawAdj = Memo("q85b.adjRaw", s, dir) {
       val built = coPurchasePairs(s, dir)
         .as[(Long, Long)].rdd
         .mapPartitions { it =>
@@ -563,17 +528,21 @@ object Graph {
       built
     }
     // node ids + edge count off the node-sized adjacency — no second
-    // E-row scan; srcs are globally unique (one partition owns a src)
-    val meta = rawAdj.map(r => (r._1, r._3.length)).collect()
-    val ids = meta.map(_._1).distinct.sorted
-    val nEdges = meta.map(_._2.toLong).sum
+    // E-row scan; srcs are globally unique (one partition owns a src).
+    // Memoized with the adjacency, so a memo hit launches no collect
+    val (ids, nEdges) = Memo("q85b.meta", s, dir) {
+      val meta = rawAdj.map(r => (r._1, r._3.length)).collect()
+      (meta.map(_._1).distinct.sorted, meta.map(_._2.toLong).sum)
+    }
     val n = ids.length.toLong
-    val bIds = track(s.sparkContext.broadcast(ids))
     // dense-index rewrite persisted ONCE (a per-round rewrite view
     // measured ~0.35 s/round — the binary searches plus array realloc
     // dominate the rounds' own arithmetic), coalesced without shuffle
     // to the work-sized task count for the round passes
-    val adjDense = TextOps.memoRdd("q85b.adj", s, dir) {
+    val adjDense = Memo("q85b.adj", s, dir) {
+      // broadcast inside the build, as in [[adjacencyUniform]]: only
+      // the rewrite reads the id array
+      val bIds = Memo.track(s.sparkContext.broadcast(ids))
       val built = rawAdj.mapPartitions { it =>
         val idsL = bIds.value
         it.map { case (src, wsum, dsts, ws) =>
@@ -656,7 +625,7 @@ object Graph {
     * [[buildCoPurchaseEdges]] — the (src, dst) count reuses the src
     * repartition. */
   private[graft] def coPurchaseEdgesW(s: SparkSession, dir: String): DataFrame =
-    TextOps.memo("coPurchaseEdgesW", s, dir) {
+    Memo("coPurchaseEdgesW", s, dir) {
       // same single-pass window fold as [[coPurchaseEdges]]: wsum (the
       // src's total outgoing weight) folds onto the edge rows so q85b's
       // rounds need no per-round stats join either
@@ -693,11 +662,11 @@ object Graph {
        |     ${prRoundCtes("r.r * e.w / s.wsum",
           k => s"ew e JOIN r${k - 1} r ON e.src = r.node JOIN ws s ON e.src = s.src")}
        |SELECT node, r AS pagerank FROM r$Rounds ORDER BY node""") { (s, dir) =>
-    // gate on the PART-table row count — a parquet-metadata-cheap UPPER
-    // bound on the node count (nodes ⊆ parts), decidable before any
-    // graph artifact is built: below it the kernel never touches the
-    // flat weighted frame at all; past it the exact n comes with the
-    // frame build as before
+    // gate on the PART-table row count — an UPPER bound on the node
+    // count (nodes ⊆ parts), decidable before any graph artifact is
+    // built, at the price of one count job at plan build: below it the
+    // kernel never touches the flat weighted frame at all; past it the
+    // exact n comes with the frame build as before
     if (t(s, dir, "part").count() <= NodeBroadcastLimit) pagerankKernelWeighted(s, dir)
     else weightedPagerankFlow(s, dir)
   }
@@ -855,7 +824,7 @@ object Graph {
     import s.implicits._
     val ids = nodeIds(e)
     val n = ids.length
-    val bIds = track(s.sparkContext.broadcast(ids))
+    val bIds = Memo.track(s.sparkContext.broadcast(ids))
     // one pass over the oriented edges: per-partition grouping, then
     // each partition ships ONE primitive-packed block (srcIdx[], len[],
     // concatenated dstIdx[]) — NO repartition; a pivot split across
@@ -869,7 +838,7 @@ object Graph {
     // (ProbeCsrPack, since removed — the number the 128M-edge gate's budget is
     // now justified by: 10.0 B/edge ≈ 1.28 GB driver at the ceiling).
     val (indptr, indices) = packCsr(orientOf(e).as[(Long, Long)].rdd, bIds, n)
-    val bCsr = track(s.sparkContext.broadcast((indptr, indices)))
+    val bCsr = Memo.track(s.sparkContext.broadcast((indptr, indices)))
     // pivot sweep sized to the INTERSECT work (~Σ walk lengths), not the
     // node count — contiguous index ranges are fine under the degree
     // orientation (out-degrees are sqrt-bounded, no head pivot)
@@ -1056,9 +1025,9 @@ object Graph {
     // round 4 stays distributed so the output plan ends in-cluster
     // (the kernelRounds discipline); idOf maps dense indexes back to
     // node ids in the same pass
-    val bIds = track(s.sparkContext.broadcast(ids))
+    val bIds = Memo.track(s.sparkContext.broadcast(ids))
     val idOf = udf((i: Int) => bIds.value(i))
-    partials(track(s.sparkContext.broadcast(v))).toDF("i", "v")
+    partials(Memo.track(s.sparkContext.broadcast(v))).toDF("i", "v")
       .groupBy("i").agg(min(col("v")).as("v"))
       .select(idOf(col("i")).as("node"), col("v"))
       .orderBy("node")
@@ -1135,7 +1104,7 @@ object Graph {
     // is the result (q90's documented empty value, EmptyInputSpec)
     var cur = (if (n == 0) Seq.empty[(Long, Int)] else Seq((source, 0))).toDF("node", "dist")
     for (round <- 1 to 4) {
-      val c = TextOps.memo(s"q90.gen$round", s, dir)(cur.persist())
+      val c = Memo(s"q90.gen$round", s, dir)(cur.persist())
       cur = c.unionByName(
         edges.join(c, edges("src") === c("node"))
           .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
@@ -1214,8 +1183,8 @@ object Graph {
       // serves both references, with no extra job and no barrier.
       // Memoized (not bare-persisted) so repeated session calls reuse
       // the generations instead of accumulating orphaned blocks, and
-      // resetCaches covers them.
-      val c = TextOps.memo(s"q98.gen$round", s, dir)(cur.persist())
+      // Memo.reset covers them.
+      val c = Memo(s"q98.gen$round", s, dir)(cur.persist())
       cur = c.unionByName(
         edges.join(c, edges("src") === c("node"))
           .select(col("dst").as("node"), col("lbl")))

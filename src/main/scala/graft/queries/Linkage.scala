@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Memo, Tables}
 
 /** Record-linkage + data-profiling surface: the entity-resolution and
   * corpus-inventory operators a curation pipeline runs before/after the
@@ -214,8 +214,8 @@ object Linkage {
       .select(col("o_totalprice").as("p"), col("o_orderkey").as("k"))
     // memoized (not bare-persisted): repeated invocations in a long
     // session reuse one cached frame instead of accumulating orphaned
-    // blocks, and TextOps.resetCaches()/evict covers it
-    val parted = TextOps.memo("q99.parted", s, dir)(
+    // blocks, and Memo.reset()/evict covers it
+    val parted = Memo("q99.parted", s, dir)(
       base.repartitionByRange(col("p"), col("k"))
         .withColumn("pid", spark_partition_id()).persist())
     val counts = parted.groupBy("pid").agg(count(lit(1)).as("c"))

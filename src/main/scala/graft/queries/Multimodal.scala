@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Memo, Tables}
 
 /** Multimodal-column plumbing (builder-prompt surface): media payloads as
   * opaque `binary` columns with typed metadata, decoded per-partition.
@@ -193,9 +193,9 @@ object Multimodal {
       val embExpr = graft.queries.Pipeline.mixExpr("(doc_id * 131 + frame_no * 7 + d)")
       // the decoded + embedded frame table is memoized-persisted so the
       // probe and candidate branches read ONE decode/fanout pass instead
-      // of each re-running the full corpus decode (TextOps memo registry;
+      // of each re-running the full corpus decode ([[Memo]];
       // the bench's cache reset still charges the full build)
-      val fe = graft.queries.TextOps.memo("q31dFrames", s, dir) {
+      val fe = Memo("q31dFrames", s, dir) {
         val frames = docsT
           .select(col("doc_id"), col("text").cast("binary").as("payload"))
           .as[(Long, Array[Byte])]

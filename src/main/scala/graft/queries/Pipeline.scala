@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Memo, Tables}
 
 /** Training-data pipeline operators beyond the reference's own surface
   * (SURVEY.md §2.12): benchmark-contamination detection, concat-and-chunk
@@ -22,14 +22,16 @@ object Pipeline {
   private def docs(s: SparkSession, dir: String): DataFrame = Tables.table(s, dir, "documents")
   private def events(s: SparkSession, dir: String): DataFrame = Tables.table(s, dir, "events")
 
-  /** Same normalization as TextOps (lower + collapse whitespace + trim);
-    * kept textually identical so the two surfaces agree on tokens.
-    * normExprStr is the single Spark-side source of truth — the streaming
-    * decontamination filter and the specs reference it rather than
-    * re-spelling the regex. */
-  private[graft] val normExprStr = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
+  /** The text normalization every text operator shares: lower +
+    * collapse whitespace + trim, as a Spark expression and as the
+    * oracle's DuckDB SQL. The one definition: TextOps, the streaming
+    * decontamination filter and the specs read it rather than
+    * re-spelling the regex. `final` makes both compile-time constants,
+    * so TextOps reads them without initializing this object, whose own
+    * initialization reads TextOps. */
+  private[graft] final val normExprStr = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
   private def norm: Column = expr(normExprStr)
-  private[graft] val normSql = """trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"""
+  private[graft] final val normSql = """trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"""
 
   /** Word-trigram xxhash64 array over a pre-split token array column
     * named `a`; empty for docs under 3 tokens. Single source of truth
@@ -64,7 +66,7 @@ object Pipeline {
   private[graft] def mixSql(col: String): String = mix(col, "//")
 
   /** Train/eval gram sides shared by q47 and q47b. The persisted tagged
-    * gram table is registered in the [[TextOps.memo]] registry (NOT a
+    * gram table is registered in the [[Memo]] (NOT a
     * bare .persist()), so the session-wide release paths — Bench/Verify's
     * resetCaches between queries, evalBloomBlob's targeted evict — all
     * see it; a bare persist here would pin the materialization for the
@@ -97,7 +99,7 @@ object Pipeline {
     // memoized + persisted tagged gram table: the self-join below reads it
     // twice, and without the cache the whole scan+explode+count+join chain
     // runs once per side (measured 4x cost). Two longs per gram.
-    val tagged = TextOps.memo("q47grams", s, dir)(
+    val tagged = Memo("q47grams", s, dir)(
       gg.crossJoin(broadcast(cut)).persist())
     val train = tagged.filter(col("doc_id") < col("cut")).select(col("doc_id").as("train_id"), col("g"))
     val ev = tagged.filter(col("doc_id") >= col("cut")).select(col("doc_id").as("eval_id"), col("g"))
@@ -975,7 +977,7 @@ object Pipeline {
     // a blob consumer (e.g. a long-lived streaming decontamination job)
     // has no further use for the gram materialization — release it from
     // the registry instead of pinning it for the session lifetime
-    TextOps.evict("q47grams", s, dir)
+    Memo.evict("q47grams", s, dir)
     blob
   }
 
@@ -1096,9 +1098,10 @@ object Pipeline {
     val keepers = trainDocs.groupBy("norm").agg(min("doc_id").as("keeper"))
     // two consumers each (disposition join + substring scope): persist
     // the tiny per-doc frames so the norm groupBy and the LSH + label
-    // propagation subtrees run once
-    val ek = trainDocs.join(keepers, "norm").select(col("doc_id"), col("keeper")).persist()
-    val keeperIds = ek.filter(col("doc_id") === col("keeper")).select("doc_id")
+    // propagation subtrees run once — through the memo, whose release
+    // paths free them (a bare persist pins its blocks for the session)
+    val ek = Memo("q71.ek", s, dir)(
+      trainDocs.join(keepers, "norm").select(col("doc_id"), col("keeper")).persist())
     // EXACT pair finder (round 12): q71's oracle replays the exact
     // brute-force pair set, and the q54b 30× episode proved 8×6 MinHash
     // banding loses marginal jac≈τ pairs once the corpus mints them
@@ -1108,13 +1111,16 @@ object Pipeline {
     // already-persisted pairs instead of paying a second finder.
     // Banding remains in the operators whose semantics are DECLARED
     // approximate (q26's MinHash demo, q60's incremental dedup).
-    val kEdges = TextOps.jaccardPairs(s, dir).select(col("d1"), col("d2"))
-      .join(keeperIds.select(col("doc_id").as("d1")), "d1")
-      .join(keeperIds.select(col("doc_id").as("d2")), "d2")
-      .select("d1", "d2")
-    val (labels, _) = TextOps.connectedComponents(kEdges)
-    val nearDrop = labels.filter(col("v") =!= col("lbl"))
-      .select(col("v").as("doc_id"), lit(1).as("nd")).persist()
+    val nearDrop = Memo("q71.nearDrop", s, dir) {
+      val keeperIds = ek.filter(col("doc_id") === col("keeper")).select("doc_id")
+      val kEdges = TextOps.jaccardPairs(s, dir).select(col("d1"), col("d2"))
+        .join(keeperIds.select(col("doc_id").as("d1")), "d1")
+        .join(keeperIds.select(col("doc_id").as("d2")), "d2")
+        .select("d1", "d2")
+      val (labels, _) = TextOps.connectedComponents(kEdges)
+      labels.filter(col("v") =!= col("lbl"))
+        .select(col("v").as("doc_id"), lit(1).as("nd")).persist()
+    }
     val contam = {
       val (tr, ev) = contaminationSides(s, dir)
       contaminationPairs(tr, ev)
@@ -1130,13 +1136,13 @@ object Pipeline {
     // materialized once: the near-dup labels feed BOTH the disposition
     // join and the substring scope below — without the persist the
     // whole LSH + label-propagation subtree executes twice
-    val dedupSurvivorIds = base.select(col("doc_id"), col("cut"))
+    val dedupSurvivorIds = Memo("q71.survivors", s, dir)(base.select(col("doc_id"), col("cut"))
       .join(ek, Seq("doc_id"), "left")
       .join(nearDrop, Seq("doc_id"), "left")
       .filter(col("doc_id") >= col("cut")
         || (col("doc_id") === col("keeper") && col("nd").isNull))
       .select("doc_id")
-      .persist()
+      .persist())
     // windows stay a scan-side pass over the full corpus (no join
     // barrier in front of the md5 projection); the survivor scope is a
     // semi-join on the digest rows, same semantics as scoping the docs

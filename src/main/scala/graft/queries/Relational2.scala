@@ -93,8 +93,8 @@ object Relational2 {
     * document frequency, ln(N/df) weighting — two aggregations + a join
     * (SURVEY §2.10 text analysis). */
   val q29_tfidf: Query = Query(
-    """WITH tok AS (SELECT doc_id,
-      |                    unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS w
+    s"""WITH tok AS (SELECT doc_id,
+      |                    unnest(string_split(${Pipeline.normSql}, ' ')) AS w
       |             FROM documents),
       |     tf AS (SELECT doc_id, w, count(*) AS tf FROM tok WHERE length(w) >= 4 GROUP BY 1, 2),
       |     df AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
@@ -112,7 +112,7 @@ object Relational2 {
     import org.apache.spark.sql.expressions.Window
     val docs = t(s, dir, "documents")
     val tok = docs.select(col("doc_id"),
-        explode(split(expr("trim(regexp_replace(lower(text), '\\\\s+', ' '))"), " ")).as("w"))
+        explode(split(expr(Pipeline.normExprStr), " ")).as("w"))
       .filter(length(col("w")) >= 4)
     val tf = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("w").agg(count(lit(1)).as("df"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Memo, Tables}
 
 /** Temporal / behavioral analytics surface: the warehouse-side operators
   * an event pipeline runs downstream of ingestion — slowly-changing-
@@ -697,8 +697,8 @@ object Temporal {
       when(col("ts") < lit("2024-01-16").cast("timestamp_ntz"), 1).otherwise(0).as("is_ref"))
     // memoized (not bare-persisted): repeated invocations in a long
     // session reuse one cached frame instead of accumulating orphaned
-    // blocks, and TextOps.resetCaches()/evict covers it
-    val parted = TextOps.memo("q103.parted", s, dir)(
+    // blocks, and Memo.reset()/evict covers it
+    val parted = Memo("q103.parted", s, dir)(
       e.repartitionByRange(col("value"))
         .withColumn("pid", spark_partition_id()).persist())
     val pc = parted.groupBy("pid")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Memo, Tables}
 import graft.ops.Iterate
 
 /** Text-analysis + deduplication surface over the `documents` table
@@ -24,11 +24,8 @@ object TextOps {
 
   private def docs(s: SparkSession, dir: String): DataFrame = Tables.table(s, dir, "documents")
 
-  /** lower + collapse whitespace + trim; identical to the oracle's
-    * trim(regexp_replace(lower(text), '\s+', ' ', 'g')). */
-  private[graft] val normExpr = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
-  private def norm: Column = expr(normExpr)
-  private val normSql = """trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"""
+  import Pipeline.{normExprStr, normSql}
+  private def norm: Column = expr(normExprStr)
 
   /** Number of non-overlapping occurrences of `pat` in ' '||norm||' '.
     * replace() is leftmost-non-overlapping in both engines. */
@@ -308,60 +305,9 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Session-scoped persisted-DataFrame memoizer: near-dup operators
-    * share expensive intermediates (shingles, signatures, verified pairs)
-    * instead of recomputing them per query. synchronized so a concurrent
-    * first call cannot double-build and leak a persisted copy. */
-  private val dfCache =
-    scala.collection.mutable.Map.empty[(String, SparkSession, String), DataFrame]
-
-  private[graft] def memo(tag: String, s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    dfCache.synchronized(dfCache.getOrElseUpdate((tag, s, dir), build))
-
-  /** Object-RDD sibling of [[memo]], for the graph kernels' adjacency
-    * caches. A Dataset persist stores Tungsten rows, so every pass over
-    * an array-typed adjacency pays UnsafeArrayData decode (~180 ns/edge
-    * measured on the PageRank rounds) and the persist itself pays the
-    * encode (~10 cpu-s at sf0.1); a deserialized MEMORY_ONLY RDD stores
-    * the JVM arrays themselves — rounds read Array[Int]/Array[Long]
-    * directly. Same lifecycle as dfCache: session-scoped, cleared (and
-    * unpersisted) by [[resetCaches]]. */
-  private val rddCache =
-    scala.collection.mutable.Map.empty[(String, SparkSession, String), org.apache.spark.rdd.RDD[_]]
-
-  private[graft] def memoRdd[T](tag: String, s: SparkSession, dir: String)(
-      build: => org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] =
-    rddCache.synchronized(rddCache.getOrElseUpdate((tag, s, dir), build))
-      .asInstanceOf[org.apache.spark.rdd.RDD[T]]
-
-  /** Unpersist and forget ONE memoized intermediate — for callers that
-    * know they are done with a shared frame (e.g. a blob builder handing
-    * state to a long-lived streaming job) and must not pin it for the
-    * session. The next query needing it simply rebuilds + re-memoizes. */
-  private[graft] def evict(tag: String, s: SparkSession, dir: String): Unit =
-    dfCache.synchronized(dfCache.remove((tag, s, dir))).foreach(_.unpersist())
-
-  /** Unpersist and forget every memoized intermediate. The bench calls
-    * this between queries so each one pays its own full cost (per-query
-    * times stay order-independent) and no persisted blocks accumulate
-    * across the 50-query run. */
-  private[graft] def resetCaches(): Unit = {
-    dfCache.synchronized {
-      dfCache.values.foreach(_.unpersist())
-      dfCache.clear()
-    }
-    rddCache.synchronized {
-      rddCache.values.foreach(_.unpersist(blocking = false))
-      rddCache.clear()
-    }
-    // forget the q54b partner-index broadcast handle; its DESTRUCTION
-    // rides resetGraphCaches below (it is Graph.track'd)
-    partnerIdxCache.synchronized(partnerIdxCache.clear())
-    // the graph kernels' node/edge-sized broadcasts and the edge memos'
-    // stats share the memo lifecycle (ADVICE r10: a long-lived session
-    // otherwise accumulates the broadcasts until ContextCleaner GC)
-    graft.queries.Graph.resetGraphCaches()
-  }
+  /** Kept for callers outside this module (perfbench's layer runner
+    * calls it between statements); the registry itself is [[Memo]]. */
+  private[graft] def resetCaches(): Unit = Memo.reset()
 
   /** Distinct 5-gram character shingle hashes of the normalized text,
     * exploded to (doc_id, g) rows. Derived from the persisted
@@ -369,7 +315,7 @@ object TextOps {
     * (re-exploding from the cached arrays is a single Generate, far
     * cheaper than a second normalization + hash pass over the corpus). */
   private[graft] def shingles(s: SparkSession, dir: String): DataFrame =
-    memo("shingles", s, dir)(
+    Memo("shingles", s, dir)(
       shingleSets(s, dir).select(col("doc_id"), explode(col("gs")).as("g")))
 
   /** Per-doc sorted distinct shingle-hash SETS, straight off the table
@@ -385,7 +331,7 @@ object TextOps {
       .select(col("doc_id"), col("gs"), size(col("gs")).cast("long").as("n"))
 
   private[graft] def shingleSets(s: SparkSession, dir: String): DataFrame =
-    memo("shingleSets", s, dir)(shingleSetsOf(docs(s, dir)).persist())
+    Memo("shingleSets", s, dir)(shingleSetsOf(docs(s, dir)).persist())
 
   /** The exact shingling q25/q26/q37 run — distinct 5-gram character
     * shingles of the normalized text of any (doc_id, text) frame.
@@ -570,7 +516,7 @@ object TextOps {
     * edges. */
 
   private[graft] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    memo("jaccardPairs", s, dir)(buildJaccardPairs(s, dir))
+    Memo("jaccardPairs", s, dir)(buildJaccardPairs(s, dir))
 
   /** PPJoin candidate pairs (d1 < d2) from prefix filtering over the
     * given (doc_id, g) shingle set. Returns (candidates, prefixHandle) —
@@ -824,7 +770,7 @@ object TextOps {
     * it as its dedup edge source (the PPJoin path stays the EXACT
     * operator, q25/q37). */
   private[graft] def lshJaccardPairs(s: SparkSession, dir: String): DataFrame =
-    memo("lshJaccardPairs", s, dir) {
+    Memo("lshJaccardPairs", s, dir) {
       val sets = shingleSets(s, dir)
       val cand = bandedCandidates(sets)
       // Round 12 (100× campaign): above ~LshRawVerifyMax docs the band
@@ -913,7 +859,7 @@ object TextOps {
   /** 64-bit SimHash per document over distinct whitespace tokens
     * (memoized + persisted per (session, dir), like [[shingles]]). */
   private[graft] def simhashSignatures(s: SparkSession, dir: String): DataFrame =
-    memo("simhash", s, dir)(buildSimhash(s, dir).persist())
+    Memo("simhash", s, dir)(buildSimhash(s, dir).persist())
 
   private def buildSimhash(s: SparkSession, dir: String): DataFrame =
     // one fused map pass ([[graft.functions.SimHash]]): per-token md5-64 +
@@ -926,7 +872,7 @@ object TextOps {
     // aggregation emitted no row for them).
     docs(s, dir)
       .select(col("doc_id"),
-        array_distinct(expr(s"filter(split($normExpr, ' '), w -> length(w) > 0)")).as("toks"))
+        array_distinct(expr(s"filter(split($normExprStr, ' '), w -> length(w) > 0)")).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), expr("graft_simhash(toks)").as("sig"))
 
@@ -1161,24 +1107,13 @@ object TextOps {
     // oracle's WHERE len(a) > 0 is equally vacuous in DuckDB), and the
     // pushed-down filter would re-run the regex-normalize+split in the
     // scan stage just to test a tautology
-    // tiny fixtures arrive as ONE parquet row group, so the scan (and
-    // with it the regex normalize + split + passage build, the query's
-    // single biggest CPU block) would run on ONE core. Below the
-    // broadcast gate the raw text is at most ~2 MB — an exchange of it
-    // is ~free and buys 32-way passage building. Past the gate the
-    // fixture has many row groups and the repartition would only add an
-    // exchange of the full corpus text, so it stays out of the plan.
     // text IS NOT NULL: a null-text doc has no passages on either engine
     // (the oracle's inner join from p2 omits it), but without the guard
     // the per-doc accounting frames in q54/q54b would emit it with null
     // n_pass — a row-count divergence. The filter is on the RAW column
     // (parquet-pushable null check, no regex re-run); fixtures happen to
     // never mint null text, so this is belt-and-braces for real corpora.
-    val base = docs(s, dir).filter(col("text").isNotNull)
-    val scan =
-      if (tableBytes(dir, "documents") <= PassageBroadcastGate)
-        base.repartition(col("doc_id")) else base
-    scan
+    docs(s, dir).filter(col("text").isNotNull)
       .select(col("doc_id"), split(norm, " ").as("a"))
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, cast(ceil(size(a)/$P.0) as int) - 1)," +
@@ -1275,7 +1210,7 @@ object TextOps {
     * trigram column costs q54 ~0.4 executor-CPU-s at sf0.1 — noise next
     * to the ptext join it replaced. */
   private[graft] def passageReps(s: SparkSession, dir: String): DataFrame =
-    memo("q54b.reps", s, dir) {
+    Memo("q54b.reps", s, dir) {
       passagesOf(s, dir)
         .groupBy("ptext").agg(min(col("okey")).as("doc_id"))
         // fused codegen trigram hashing (WordNgramHashesSpec pins
@@ -1319,60 +1254,46 @@ object TextOps {
     * the kernel does in <0.2 s. Budget: 2 MB of documents parquet ≈
     * 3.5× the sf0.1 fixture; sf0.1 measures 230k exploded (g, doc, n)
     * rows, so the ceiling is ~800k ≈ 13 MB interleaved longs — trivial
-    * for driver and broadcast alike. [[passagesOf]] reads the same gate
-    * to spread a one-row-group scan. */
+    * for driver and broadcast alike. */
   private[graft] val PassageBroadcastGate = 2L * 1024 * 1024
 
   /** g → interleaved [d, n, d, n, …] partner lists over the trigram-
     * bearing reps, collected once (driver budget: the
     * [[PassageBroadcastGate]] note) and broadcast keyed by a sorted
-    * array — binary-search probes, zero boxing. Shares the graph
-    * kernels' broadcast lifecycle (released by resetCaches together
-    * with the memoized frames). */
-  private val partnerIdxCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String),
-      org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Int], Array[Long])]]
-
-  /** Memoized per (session, dir) like the q54b.reps frame it derives
-    * from (ADVICE r12: the eager collect + broadcast ran on EVERY q54b
-    * plan construction, accumulating tracked broadcasts until
-    * resetCaches); destruction rides the tracked-broadcast lifecycle,
-    * the map is forgotten in the same [[resetCaches]] call. */
+    * array — binary-search probes, zero boxing. Memoized per (session,
+    * dir) like the q54b.reps frame it derives from (ADVICE r12: the
+    * eager collect + broadcast ran on EVERY q54b plan construction). */
   private def trigramPartnerIndex(s: SparkSession, dir: String)
       : org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Int], Array[Long])] =
-    partnerIdxCache.synchronized(partnerIdxCache.getOrElseUpdate((s, dir),
-      buildTrigramPartnerIndex(s, passageRepSets(s, dir))))
-
-  private def buildTrigramPartnerIndex(s: SparkSession, psets: DataFrame)
-      : org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Int], Array[Long])] = {
-    import s.implicits._
-    val reps = psets.select(col("doc_id"), col("n"), col("gs"))
-      .as[(Long, Long, Array[Long])].collect()
-    // CSR layout (keys / offsets / flat interleaved [d, n, …]) instead
-    // of 230k tiny Array[Long] objects: three primitive arrays
-    // serialize in one block, probe with one pointer chase, and cost
-    // the driver zero per-entry headers. Two counting passes beat a
-    // builder-per-key map at this shape.
-    val keyList = new scala.collection.mutable.LongMap[Int]() // g -> slot
-    reps.foreach(r => r._3.foreach(g => keyList.getOrElseUpdate(g, keyList.size)))
-    val keys = keyList.keysIterator.toArray
-    java.util.Arrays.sort(keys)
-    val slot = new scala.collection.mutable.LongMap[Int](keys.length)
-    keys.indices.foreach(i => slot(keys(i)) = i)
-    val counts = new Array[Int](keys.length)
-    reps.foreach(r => r._3.foreach(g => counts(slot(g)) += 2))
-    val offsets = new Array[Int](keys.length + 1)
-    keys.indices.foreach(i => offsets(i + 1) = offsets(i) + counts(i))
-    val flat = new Array[Long](offsets(keys.length))
-    val cursor = offsets.clone()
-    reps.foreach { case (d, n, gs) =>
-      gs.foreach { g =>
-        val si = slot(g)
-        flat(cursor(si)) = d; flat(cursor(si) + 1) = n; cursor(si) += 2
+    Memo("q54b.partnerIdx", s, dir) {
+      import s.implicits._
+      val reps = passageRepSets(s, dir).select(col("doc_id"), col("n"), col("gs"))
+        .as[(Long, Long, Array[Long])].collect()
+      // CSR layout (keys / offsets / flat interleaved [d, n, …]) instead
+      // of 230k tiny Array[Long] objects: three primitive arrays
+      // serialize in one block, probe with one pointer chase, and cost
+      // the driver zero per-entry headers. Two counting passes beat a
+      // builder-per-key map at this shape.
+      val keyList = new scala.collection.mutable.LongMap[Int]() // g -> slot
+      reps.foreach(r => r._3.foreach(g => keyList.getOrElseUpdate(g, keyList.size)))
+      val keys = keyList.keysIterator.toArray
+      java.util.Arrays.sort(keys)
+      val slot = new scala.collection.mutable.LongMap[Int](keys.length)
+      keys.indices.foreach(i => slot(keys(i)) = i)
+      val counts = new Array[Int](keys.length)
+      reps.foreach(r => r._3.foreach(g => counts(slot(g)) += 2))
+      val offsets = new Array[Int](keys.length + 1)
+      keys.indices.foreach(i => offsets(i + 1) = offsets(i) + counts(i))
+      val flat = new Array[Long](offsets(keys.length))
+      val cursor = offsets.clone()
+      reps.foreach { case (d, n, gs) =>
+        gs.foreach { g =>
+          val si = slot(g)
+          flat(cursor(si)) = d; flat(cursor(si) + 1) = n; cursor(si) += 2
+        }
       }
+      s.sparkContext.broadcast((keys, offsets, flat))
     }
-    Graph.track(s.sparkContext.broadcast((keys, offsets, flat)))
-  }
 
   /** q54b's accounting below [[PassageBroadcastGate]]: the near-dup REPS
     * themselves — every trigram-bearing rep r with an EARLIER τ-similar
@@ -1447,10 +1368,10 @@ object TextOps {
     * shared-trigram self-join IS |A∩B|; n rides the exploded rows (no
     * cnt-table rejoin), the size-ratio prefilter kills mismatched pairs
     * before the aggregation, and the τ test is exact integer arithmetic
-    * (TauNum note). The rep frame is the memo-registered persist
-    * ([[passageReps]]), so resetCaches() owns its lifecycle. */
+    * (TauNum note). The rep frame is the [[Memo]]-registered persist
+    * ([[passageReps]]), so the memo owns its lifecycle. */
   private[graft] def countedPassagePairs(s: SparkSession, dir: String): DataFrame =
-    memo("q54b.countedPairs", s, dir) {
+    Memo("q54b.countedPairs", s, dir) {
       val tg = passageRepSets(s, dir)
         .select(col("doc_id"), col("n"), explode(col("gs")).as("g"))
       tg.select(col("doc_id").as("d1"), col("n").as("n1"), col("g"))
@@ -1472,11 +1393,11 @@ object TextOps {
     * the doc-level shuffle-hash shape, which paid two full exchanges of
     * the rep arrays to attach 192 rows. */
   private[graft] def ppjoinPassagePairs(s: SparkSession, dir: String): DataFrame =
-    memo("q54b.ppjoinPairs", s, dir) {
+    Memo("q54b.ppjoinPairs", s, dir) {
       val psets = passageRepSets(s, dir)
       val sh = psets.select(col("doc_id"), explode(col("gs")).as("g"))
       val (cand, prefix) = ppjoinCandidates(sh)
-      memo("q54b.prefix", s, dir)(prefix)
+      Memo("q54b.prefix", s, dir)(prefix)
       rawJaccard(psets, cand, adaptive = true)
     }
 
@@ -1751,7 +1672,7 @@ object TextOps {
     * for q69/q72, whose merge rules are driver-side state). */
   private[graft] def bpeInitVocab(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
-      .select(explode(expr(s"regexp_extract_all($normExpr, '[a-z]+', 0)")).as("w"))
+      .select(explode(expr(s"regexp_extract_all($normExprStr, '[a-z]+', 0)")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(split(col("w"), "").as("syms"), col("freq"))
 
@@ -2092,7 +2013,7 @@ object TextOps {
       syms.length
     }
     val words = docs(s, dir).select(col("doc_id"),
-      explode(expr(s"regexp_extract_all($normExpr, '[a-z]+', 0)")).as("w"))
+      explode(expr(s"regexp_extract_all($normExprStr, '[a-z]+', 0)")).as("w"))
     val vocabEnc = words.select("w").distinct()
       .withColumn("n_pieces", nPieces(col("w")))
     words.join(vocabEnc, "w")

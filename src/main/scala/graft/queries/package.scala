@@ -62,8 +62,8 @@ package object queries {
 
   /** Byte size of one table's parquet (file or directory) — a gate
     * input decidable from filesystem metadata alone, before any job
-    * runs (shared by [[spreadScan]]; same pattern as TextOps' private
-    * copy and the q85b parquet-metadata gate). */
+    * runs (read by [[spreadScan]] and the TextOps and VectorOps byte
+    * gates). */
   private[graft] def tableBytes(dir: String, table: String): Long = {
     def sizeOf(p: java.io.File): Long =
       if (p.isDirectory) Option(p.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)

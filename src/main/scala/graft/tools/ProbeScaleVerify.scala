@@ -372,8 +372,7 @@ object ProbeScaleVerify {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("nrm")
       val dupExactTruth = docsT
-        .select(col("doc_id"), expr(
-          "trim(regexp_replace(lower(text), '\\\\s+', ' '))").as("nrm"))
+        .select(col("doc_id"), expr(graft.queries.Pipeline.normExprStr).as("nrm"))
         .filter(col("doc_id") < cut)
         .withColumn("mn", min(col("doc_id")).over(w))
         .filter(col("doc_id") =!= col("mn"))

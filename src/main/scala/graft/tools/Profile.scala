@@ -61,11 +61,11 @@ object Profile {
   /** The min-wall run among those that did not fail. */
   def best(runs: Seq[Run]): Option[Run] = runs.filter(_.ok).minByOption(_.wallS)
 
-  /** Drops every memo cache a query run can leave behind (TextOps'
-    * frame memos, Tables' cached frames, the catalog cache), so the
-    * next timed run pays its own builds. */
+  /** Drops every memo cache a query run can leave behind (the session
+    * [[graft.engine.Memo]], Tables' cached frames, the catalog cache), so
+    * the next timed run pays its own builds. */
   private[graft] def resetCaches(spark: SparkSession): Unit = {
-    graft.queries.TextOps.resetCaches()
+    graft.engine.Memo.reset()
     graft.engine.Tables.clearCache()
     spark.catalog.clearCache()
   }

@@ -74,7 +74,7 @@ class BpeSpec extends SparkSpec {
 
   test("q69 distributed path equals the sequential reference on sf0.001") {
     val freqs = engine.Tables.table(spark, dir, "documents")
-      .select(explode(expr(s"regexp_extract_all(${TextOps.normExpr}, '[a-z]+', 0)")).as("w"))
+      .select(explode(expr(s"regexp_extract_all(${graft.queries.Pipeline.normExprStr}, '[a-z]+', 0)")).as("w"))
       .groupBy("w").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = referenceBpe(freqs, 12)
@@ -84,7 +84,7 @@ class BpeSpec extends SparkSpec {
 
   test("q69 equals the sequential reference on sf0.001") {
     val freqs = engine.Tables.table(spark, dir, "documents")
-      .select(explode(expr(s"regexp_extract_all(${TextOps.normExpr}, '[a-z]+', 0)")).as("w"))
+      .select(explode(expr(s"regexp_extract_all(${graft.queries.Pipeline.normExprStr}, '[a-z]+', 0)")).as("w"))
       .groupBy("w").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = referenceBpe(freqs, 12)

@@ -486,7 +486,7 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     // exact per-(lang, w) counts, same token definition as q18b/q70
     val exact = engine.Tables.table(spark, dir, "documents")
-      .select(col("lang"), explode(split(expr(TextOps.normExpr), " ")).as("w"))
+      .select(col("lang"), explode(split(expr(graft.queries.Pipeline.normExprStr), " ")).as("w"))
       .filter(length(col("w")) >= 4)
       .groupBy("lang", "w").count()
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap

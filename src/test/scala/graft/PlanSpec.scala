@@ -366,7 +366,7 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ShuffledHashJoin"), p.take(2000))
     assert(!p.contains("SortMergeJoin"),
       "near-dup verify must not sort-merge the array-carrying stream")
-    graft.queries.TextOps.resetCaches()
+    graft.engine.Memo.reset()
   }
 
   test("q47 contamination: hash joins only, no cartesian beyond the scalar cut") {

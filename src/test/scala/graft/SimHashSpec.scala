@@ -37,7 +37,7 @@ class SimHashSpec extends SparkSpec {
     val tokens = engine.Tables.table(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"),
         array_distinct(expr(
-          s"filter(split(${graft.queries.TextOps.normExpr}, ' '), w -> length(w) > 0)")).as("toks"))
+          s"filter(split(${graft.queries.Pipeline.normExprStr}, ' '), w -> length(w) > 0)")).as("toks"))
       .filter(size(col("toks")) > 0)
     val fused = tokens.select(col("doc_id"), expr("graft_simhash(toks)").as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -154,7 +154,7 @@ class SqlParitySpec extends SparkSpec {
       // DuckDB oracle's unnest/string_split/list() can't run on Spark
       "q59_inverted_index" ->
         s"""WITH t AS (SELECT doc_id, doc_id div 100 AS shard,
-           |                  explode(array_distinct(split(${graft.queries.TextOps.normExpr}, ' '))) AS term
+           |                  explode(array_distinct(split(${graft.queries.Pipeline.normExprStr}, ' '))) AS term
            |           FROM documents)
            |SELECT term, shard, count(*) AS n,
            |       sum(count(*)) OVER (PARTITION BY term) AS df,
